@@ -2,11 +2,13 @@
 
 Synchronous min-label flooding: every superstep each vertex takes the
 min of its own label and its neighbors' labels; converged when no label
-changes.  Exact (north rule).  Shares the superstep shape of
+changes.  Exact (north rule).  Runs on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`, like
 :mod:`graphjet_spark.plans.pagerank`: the symmetrized edge table is
-hash-partitioned by gather key once and persisted; only the narrow
-``(id, comp)`` state shuffles per superstep; min-aggregation gets
-map-side partial combine so mega-hub vertices never concentrate rows.
+hash-partitioned and sorted by gather key once and persisted, the
+``(id, comp)`` state shares its hash blocks, and the one shuffle per
+superstep is the min-aggregation, whose map-side partial combine keeps
+mega-hub vertices from concentrating rows.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -29,6 +32,18 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def gather_table(run: SuperstepRunner, edges: DataFrame) -> DataFrame:
+    """The symmetrized edges in the runner's session, partitioned and
+    sorted by the gather key ``b`` (the CSR layout) and cached: the
+    co-partitioned ``(id, ...)`` state joins it without an exchange."""
+    return (
+        symmetrize(run.adopt(edges))
+        .repartition(run.p, "b")
+        .sortWithinPartitions("b")
+        .persist()
+    )
+
+
 def connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -37,80 +52,47 @@ def connected_components(
     fixed_iters: int | None = None,
     checkpoint: CheckpointManager | None = None,
     partitions: int | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
-    """Returns ``(id, component)`` — component = min vertex id reachable."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    # gather-key partitioned AND sorted (CSR layout): the cached
-    # relation's ordering lets every superstep's sort-merge join skip
-    # re-sorting the big edge side
-    sym = (
-        symmetrize(edges)
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
-    vertices = sym.select(F.col("a").alias("id")).distinct()
+    """Returns ``(id, component)`` — component = min vertex id reachable.
+    ``stats`` (optional dict) receives the per-superstep metrics (rows,
+    changed count, per-partition rows, wall time) under ``"supersteps"``."""
+    with SuperstepRunner(
+        spark, "connected_components", partitions, checkpoint, stats
+    ) as run:
+        sym = gather_table(run, edges)
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            labels = checkpoint.read_state(spark, last)
-    if labels is None:
-        labels = vertices.select("id", F.col("id").alias("comp"))
-        labels = labels.localCheckpoint(eager=True)
-
-    total = fixed_iters if fixed_iters is not None else max_iter
-    for it in range(start_iter, total):
-        t0 = time.time()
-        mins = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("comp").alias("mn"))
-        )
-        new = (
-            labels.withColumnRenamed("comp", "prev")
-            .join(mins, labels.id == mins.a, "left")
-            .select(
-                "id",
-                F.least("prev", F.coalesce("mn", F.col("prev"))).alias("comp"),
-                "prev",
+        def step(labels: DataFrame, _sc: dict) -> DataFrame:
+            mins = (
+                sym.join(labels, sym.b == labels.id)
+                .groupBy("a")
+                .agg(F.min("comp").alias("mn"))
             )
-        )
-        # lazy checkpoint: the stats collect is the materializing action
-        new = new.localCheckpoint(eager=False)
-        stats = (
-            new.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("comp") != F.col("prev"), 1).otherwise(0)).alias(
-                    "changed"
-                ),
+            return (
+                labels.withColumnRenamed("comp", "prev")
+                .join(mins, F.col("id") == mins.a, "left")
+                .select(
+                    "id",
+                    F.least("prev", F.coalesce("mn", F.col("prev"))).alias("comp"),
+                    "prev",
+                )
             )
-            .collect()
-        )
-        changed = sum(r["changed"] for r in stats)
-        labels = new.select("id", "comp")
-        if checkpoint is not None:
-            metrics = {
-                "algo": "connected_components",
-                "rows": sum(r["rows"] for r in stats),
-                "changed": changed,
-                "elapsed_s": time.time() - t0,
-                "partitions": [
-                    {"partition_id": r["partition_id"], "rows": r["rows"]} for r in stats
-                ],
-            }
-            committed = checkpoint.commit_state(it + 1, labels, metrics)
-            labels = spark.read.parquet(committed)
-        if fixed_iters is None and changed == 0:
-            break
 
-    sym.unpersist()
-    return labels.select("id", F.col("comp").alias("component"))
+        labels = run.run(
+            lambda: run.layout(
+                # aliased below the distinct: an alias of ``id`` above
+                # the exchange would make the checkpoint keep
+                # ``comp`` as its partitioning key
+                sym.select(F.col("a").alias("id"), F.col("a").alias("comp")).distinct()
+            ),
+            step,
+            iters=fixed_iters if fixed_iters is not None else max_iter,
+            keep=["id", "comp"],
+            aggs={"changed": (F.count_if(F.col("comp") != F.col("prev")), sum)},
+            done=None if fixed_iters is not None else lambda s: s["changed"] == 0,
+        )
+        sym.unpersist()
+        return run.export(labels.select("id", F.col("comp").alias("component")))
 
 
 # ------------------------------------------------- large-star / small-star

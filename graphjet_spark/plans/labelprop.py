@@ -5,22 +5,23 @@ neighbors, ties broken toward the smallest label (SURVEY §2.8; exactness
 contract is "fixed iteration count, deterministic tie-break" since LP
 has no stable fixpoint in general).
 
-Scale notes: the per-vertex mode is computed as a pure two-phase
-aggregation — ``groupBy(a, lbl).count`` (map-side combine collapses
-mega-hub fan-in) then ``groupBy(a).max(struct(cnt, -lbl))`` — rather
-than a window sort, so no single partition ever has to sort a hub's
-full neighbor list.
+Scale notes: runs on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  The
+per-vertex mode is one ``groupBy(a)`` with ``mode(lbl, deterministic)``
+(most frequent label, ties to the lowest): its map-side partial combine
+builds per-task label histograms, so mega-hub fan-in collapses before
+the superstep's one shuffle, and no partition ever sorts a hub's full
+neighbor list the way a window would.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.checkpoints import CheckpointManager
-from graphjet_spark.plans.components import symmetrize
+from graphjet_spark.plans.components import gather_table, symmetrize
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def label_propagation(
@@ -30,61 +31,38 @@ def label_propagation(
     iters: int = 5,
     checkpoint: CheckpointManager | None = None,
     partitions: int | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Returns ``(id, label)`` after exactly ``iters`` synchronous steps.
 
     Vertices are those incident to at least one non-loop edge (the
-    canonical graphs have no isolated vertices).
+    canonical graphs have no isolated vertices).  ``stats`` (optional
+    dict) receives the per-superstep metrics under ``"supersteps"``.
     """
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        symmetrize(edges)
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
+    with SuperstepRunner(spark, "label_propagation", partitions, checkpoint, stats) as run:
+        sym = gather_table(run, edges)
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            labels = checkpoint.read_state(spark, last)
-    if labels is None:
-        labels = sym.select(F.col("a").alias("id")).distinct().select(
-            "id", F.col("id").alias("lbl")
-        )
-        labels = labels.localCheckpoint(eager=True)
-
-    for it in range(start_iter, iters):
-        t0 = time.time()
-        new = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a", "lbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("a")
-            .agg(
-                F.max(F.struct(F.col("cnt"), (-F.col("lbl")).alias("neg_lbl"))).alias(
-                    "best"
-                )
+        def step(labels: DataFrame, _sc: dict) -> DataFrame:
+            return (
+                sym.join(labels, sym.b == labels.id)
+                .groupBy("a")
+                .agg(F.mode("lbl", deterministic=True).alias("lbl"))
+                .select(F.col("a").alias("id"), "lbl")
             )
-            .select(F.col("a").alias("id"), (-F.col("best.neg_lbl")).alias("lbl"))
-        )
-        new = new.localCheckpoint(eager=True)
-        labels = new
-        if checkpoint is not None:
-            metrics = {
-                "algo": "label_propagation",
-                "iteration": it + 1,
-                "elapsed_s": time.time() - t0,
-            }
-            committed = checkpoint.commit_state(it + 1, labels, metrics)
-            labels = spark.read.parquet(committed)
 
-    sym.unpersist()
-    return labels.select("id", F.col("lbl").alias("label"))
+        labels = run.run(
+            lambda: run.layout(
+                # aliased below the distinct: an alias of ``id`` above
+                # the exchange would make the checkpoint keep
+                # ``lbl`` as its partitioning key
+                sym.select(F.col("a").alias("id"), F.col("a").alias("lbl")).distinct()
+            ),
+            step,
+            iters=iters,
+            keep=["id", "lbl"],
+        )
+        sym.unpersist()
+        return run.export(labels.select("id", F.col("lbl").alias("label")))
 
 
 def modularity(

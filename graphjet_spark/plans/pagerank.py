@@ -6,35 +6,23 @@ twitter/graphjet/algorithms/salsa/subgraph/SalsaSubgraphInternalState.java
 :171-208 — spread w(u)/deg(u) along each edge, with a reset fraction),
 generalized to the full graph with uniform teleport.
 
-Scale design (the part that must survive 100 TB):
-
-- The only per-superstep shuffles are (a) the ``ranks ⋈ links`` join on
-  ``src`` and (b) the ``groupBy(dst)`` aggregation.  ``links`` is
-  hash-partitioned by ``src`` once and persisted, so the join reuses its
-  exchange every iteration; only ``ranks`` (narrow: id + rank) moves.
-- The sum aggregation gets map-side partial aggregation from Spark's
-  HashAggregate for free — a mega-hub ``dst`` receives at most one
-  partial row per map task, not one row per in-edge.  An explicit
-  salted two-phase aggregation (``skew_salt``) is additionally available
-  and equivalent (tested); AQE skew-join splitting handles hub ``src``
-  keys on the join side.
-- Dangling mass is one scalar aggregate per superstep (unavoidable), and
-  convergence (L∞/L1 delta) + per-partition lineage stats are computed
-  in a single pass over the checkpointed new state.
-- Lineage is truncated every superstep: via the checkpoint parquet
-  round-trip when a :class:`CheckpointManager` is supplied (also giving
-  mid-run resume), else via ``localCheckpoint`` — a naive loop's plan
-  grows exponentially and stalls Catalyst by iteration ~20.
+Scale design: the loop runs on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner` — ``links`` is
+src-partitioned, sorted and cached once and the ``(id, rank, dng)``
+state shares its hash blocks, so the only shuffle per superstep is the
+``groupBy(dst)`` sum, whose map-side partial aggregation sends a
+mega-hub ``dst`` at most one row per map task (``skew_salt`` adds an
+explicit, equivalent salted two-phase sum).  Dangling mass and the
+L∞/L1 deltas come from the action that materializes each superstep.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def _prepare(
@@ -43,7 +31,10 @@ def _prepare(
     assume_simple: bool,
     weight_col: str | None = None,
 ):
-    """Build (links, vertices, dangling, n) — the static per-run tables.
+    """Build (links, vertices) — the static per-run tables.  ``links``
+    is ``(src, dst, out_degree)``, src-partitioned, src-sorted and
+    cached; ``vertices`` is ``(id, dng)`` with ``dng`` marking dangling
+    vertices (no out-link).
 
     With ``weight_col``, multi-edges collapse by summing weights and
     ``out_degree`` holds the total out-WEIGHT per source (transitions
@@ -53,23 +44,14 @@ def _prepare(
         e = edges.select("src", "dst")
         if not assume_simple:
             e = e.distinct()
+        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
+        link_cols = ["src", "dst", "out_degree"]
     else:
         e = (
             edges.select("src", "dst", F.col(weight_col).alias("w"))
             .groupBy("src", "dst")
             .agg(F.sum("w").alias("w"))
         )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-        .persist()
-    )
-    if weight_col is None:
-        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-        link_cols = ["src", "dst", "out_degree"]
-    else:
         out_deg = e.groupBy("src").agg(F.sum("w").alias("out_degree"))
         link_cols = ["src", "dst", "w", "out_degree"]
     links = (
@@ -78,20 +60,18 @@ def _prepare(
         .repartition(partitions, "src")
         # src-sorted within blocks (the CSR layout): the cached relation
         # keeps its outputOrdering, so the per-superstep sort-merge join
-        # against ranks never re-sorts the (large) edge side — only the
-        # narrow rank state sorts each iteration.
+        # against ranks never re-sorts the (large) edge side
         .sortWithinPartitions("src")
         .persist()
     )
-    dangling = (
-        vertices.join(out_deg, vertices.id == out_deg.src, "left_anti")
-        .select("id")
-        .persist()
+    # a vertex is dangling iff it never appears as a source
+    vertices = (
+        links.select(F.col("src").alias("id"), F.lit(False).alias("dng"))
+        .union(links.select(F.col("dst").alias("id"), F.lit(True).alias("dng")))
+        .groupBy("id")
+        .agg(F.min("dng").alias("dng"))
     )
-    n = vertices.count()
-    links.count()  # materialize once so every superstep reuses the exchange
-    dangling.count()
-    return links, vertices, dangling, n
+    return links, vertices
 
 
 def pagerank(
@@ -109,6 +89,7 @@ def pagerank(
     teleport: dict[int, float] | None = None,
     weight_col: str | None = None,
     warm_start: DataFrame | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Compute PageRank; returns ``(id, pagerank)``.
 
@@ -116,6 +97,9 @@ def pagerank(
     mode); otherwise iterate until ``L∞ delta < tol`` or ``max_iter``.
     With ``checkpoint``, every superstep commits state + metrics and an
     interrupted run resumes from the last committed iteration.
+    ``stats`` (optional dict) receives the per-superstep metrics under
+    ``"supersteps"`` (rows, deltas, dangling mass, per-partition rows,
+    wall time).
 
     ``teleport``: optional seed->weight dict for **personalized**
     PageRank — the (1-d) restart mass and all dangling mass return to
@@ -132,186 +116,112 @@ def pagerank(
     the hint get the uniform share; the padded state is renormalized to
     unit mass.
     """
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    links, vertices, dangling, n = _prepare(
-        edges, partitions, assume_simple, weight_col
-    )
-    n_f = float(n)
+    d = damping
+    with SuperstepRunner(spark, "pagerank", partitions, checkpoint, stats) as run:
+        links, vertices = _prepare(run.adopt(edges), run.p, assume_simple, weight_col)
+        keep = ["id", "rank", "dng"] + (["p"] if teleport is not None else [])
 
-    tele = None
-    if teleport is not None:
-        total_w = float(sum(teleport.values()))
-        tele_df = spark.createDataFrame(
-            [(int(v), w / total_w) for v, w in teleport.items()],
-            "id bigint, p double",
-        )
-        tele = (
-            vertices.join(F.broadcast(tele_df), "id", "left")
-            .select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
-            .repartition(partitions, "id")
-            .persist()
-        )
-        # Teleport keys absent from the vertex set drop out of the join;
-        # renormalize over the surviving mass so the distribution still
-        # sums to 1 (stale seed ids would otherwise silently deflate
-        # every rank).  All-seeds-present leaves values untouched.
-        surviving = tele.agg(F.sum("p")).collect()[0][0] or 0.0
-        if surviving <= 0.0:
-            raise ValueError(
-                "personalized pagerank: no teleport seed is a graph vertex"
-            )
-        if surviving < 1.0 - 1e-12:
-            tele = tele.select(
-                "id", (F.col("p") / F.lit(surviving)).alias("p")
-            ).persist()
-        tele.count()
-
-    start_iter = 0
-    ranks = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            ranks = checkpoint.read_state(spark, last).select("id", "rank")
-    if ranks is None:
-        if warm_start is not None:
-            padded = vertices.join(
-                warm_start.select("id", F.col("rank").alias("wr")), "id", "left"
-            ).select(
-                "id", F.coalesce("wr", F.lit(1.0 / n_f)).alias("rank")
-            )
-            total = padded.agg(F.sum("rank")).collect()[0][0]
-            ranks = padded.select(
-                "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-            )
-        elif tele is not None:
-            ranks = tele.select("id", F.col("p").alias("rank"))
-        else:
-            ranks = vertices.select("id", F.lit(1.0 / n_f).alias("rank"))
-        ranks = ranks.localCheckpoint(eager=True)
-
-    total_iters = fixed_iters if fixed_iters is not None else max_iter
-
-    for it in range(start_iter, total_iters):
-        t0 = time.time()
-        # Dangling mass as a lazy single-row aggregate broadcast into the
-        # superstep plan — no separate driver action/job per iteration.
-        dm_df = (
-            ranks.join(dangling, "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-
-        share = (
-            F.col("rank") / F.col("out_degree")
-            if weight_col is None
-            # weighted transitions: rank spreads proportionally to edge
-            # weight (same expression order as the oracle SQL)
-            else F.col("rank") * F.col("w") / F.col("out_degree")
-        )
-        contrib_rows = links.join(ranks, links.src == ranks.id).select(
-            "dst", share.alias("c"), links.src.alias("csrc"),
-        )
-        if skew_salt:
-            # Explicit two-phase aggregation: partial sums on a salted
-            # key, final sum on the true key (north-rule mega-hub
-            # handling; GraphJet analogue is the degree-tiered
-            # PowerLawDegreeEdgePool, reference bipartite/edgepool/
-            # PowerLawDegreeEdgePool.java:37-65).
-            contribs = (
-                contrib_rows.groupBy(
-                    "dst", F.pmod(F.xxhash64("csrc"), F.lit(skew_salt)).alias("salt")
+        def initial() -> DataFrame:
+            # w: the unnormalized initial rank (null = the uniform share)
+            st, w = vertices, F.lit(None).cast("double")
+            aggs = {}
+            if teleport is not None:
+                total_w = float(sum(teleport.values()))
+                tele = run.child.createDataFrame(
+                    [(int(v), x / total_w) for v, x in teleport.items()],
+                    "id bigint, p double",
                 )
-                .agg(F.sum("c").alias("pc"))
-                .groupBy("dst")
-                .agg(F.sum("pc").alias("contrib"))
+                st = st.join(tele, "id", "left").withColumn(
+                    "p", F.coalesce("p", F.lit(0.0))
+                )
+                w, aggs["p_sum"] = F.col("p"), (F.sum("p"), sum)
+            if warm_start is not None:
+                hint = run.adopt(warm_start).select("id", F.col("rank").alias("w"))
+                st, w = st.join(hint, "id", "left"), F.col("w")
+            st, s = run.materialize(
+                run.layout(st.withColumn("w", w)),
+                {
+                    "w_sum": (F.sum("w"), sum),
+                    "w_null": (F.count_if(F.col("w").isNull()), sum),
+                    **aggs,
+                },
             )
-        else:
-            contribs = contrib_rows.groupBy("dst").agg(F.sum("c").alias("contrib"))
-
-        if tele is not None:
-            # personalized: restart + dangling mass follow the seed
-            # distribution p(v) instead of 1/N
-            base = F.col("p") * (
-                F.lit(1.0 - damping) + F.lit(damping) * F.col("dm")
-            )
-            state = ranks.withColumnRenamed("rank", "prev_rank").join(tele, "id")
-        else:
-            base = (
-                F.lit((1.0 - damping) / n_f)
-                + F.lit(damping) * F.col("dm") / F.lit(n_f)
-            )
-            state = ranks.withColumnRenamed("rank", "prev_rank")
-        new_ranks = (
-            state.join(contribs, state.id == contribs.dst, "left")
-            .crossJoin(F.broadcast(dm_df))
-            .select(
+            n = float(s["rows"])
+            total = s["w_sum"] + s["w_null"] / n
+            cols = [
                 "id",
-                (base + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
-                    "rank"
-                ),
-                "prev_rank",
-                "dm",
+                (F.coalesce("w", F.lit(1.0 / n)) / F.lit(total)).alias("rank"),
+                "dng",
+            ]
+            if teleport is not None:
+                # renormalize over the seeds that are vertices: stale ids
+                # would otherwise silently deflate every rank
+                if s["p_sum"] <= 0.0:
+                    raise ValueError(
+                        "personalized pagerank: no teleport seed is a graph vertex"
+                    )
+                cols.append((F.col("p") / F.lit(s["p_sum"])).alias("p"))
+            return st.select(*cols)
+
+        def step(st: DataFrame, sc: dict) -> DataFrame:
+            n, dm = float(sc["rows"]), sc["dangling_mass"]
+            share = (
+                F.col("rank") / F.col("out_degree")
+                if weight_col is None
+                # weighted transitions: rank spreads proportionally to
+                # edge weight (same expression order as the oracle SQL)
+                else F.col("rank") * F.col("w") / F.col("out_degree")
             )
-        )
-
-        # lazy checkpoint: the materializing action below is the single
-        # pass over new_ranks
-        new_ranks = new_ranks.localCheckpoint(eager=False)
-
-        need_stats = checkpoint is not None or fixed_iters is None
-        if need_stats:
-            stats = (
-                new_ranks.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d_linf"),
-                    F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d_l1"),
-                    F.first("dm").alias("dm"),
+            contrib_rows = links.join(st, links.src == st.id).select(
+                "dst", share.alias("c"), links.src.alias("csrc"),
+            )
+            if skew_salt:
+                # Explicit two-phase aggregation: partial sums on a salted
+                # key, final sum on the true key (north-rule mega-hub
+                # handling; GraphJet analogue is the degree-tiered
+                # PowerLawDegreeEdgePool, reference bipartite/edgepool/
+                # PowerLawDegreeEdgePool.java:37-65).
+                contribs = (
+                    contrib_rows.groupBy(
+                        "dst",
+                        F.pmod(F.xxhash64("csrc"), F.lit(skew_salt)).alias("salt"),
+                    )
+                    .agg(F.sum("c").alias("pc"))
+                    .groupBy("dst")
+                    .agg(F.sum("pc").alias("contrib"))
                 )
-                .collect()
+            else:
+                contribs = contrib_rows.groupBy("dst").agg(F.sum("c").alias("contrib"))
+            if teleport is not None:
+                # personalized: restart + dangling mass follow the seed
+                # distribution p(v) instead of 1/N
+                base = F.col("p") * (F.lit(1.0 - d) + F.lit(d) * F.lit(dm))
+            else:
+                base = F.lit((1.0 - d) / n) + F.lit(d) * F.lit(dm) / F.lit(n)
+            rank = base + F.lit(d) * F.coalesce("contrib", F.lit(0.0))
+            return (
+                st.withColumnRenamed("rank", "prev_rank")
+                .join(contribs, F.col("id") == contribs.dst, "left")
+                .select("id", rank.alias("rank"), "prev_rank", *keep[2:])
             )
-            delta_linf = max((r["d_linf"] for r in stats), default=0.0)
-            metrics = {
-                "algo": "pagerank",
-                "rows": sum(r["rows"] for r in stats),
-                "edges": None,
-                "dangling_mass": stats[0]["dm"] if stats else 0.0,
-                "delta_linf": delta_linf,
-                "delta_l1": sum(r["d_l1"] for r in stats),
-                "elapsed_s": time.time() - t0,
-                "partitions": [
-                    {
-                        "partition_id": r["partition_id"],
-                        "rows": r["rows"],
-                        "delta_l1": r["d_l1"],
-                    }
-                    for r in stats
-                ],
-            }
-        else:
-            # fixed-iteration fire-and-forget mode (benchmarks): no
-            # convergence scan — materialize via a cheap count only
-            # (measured: batching actions every 2nd superstep does NOT
-            # help — the cost is superstep compute, not job scheduling)
-            new_ranks.count()
-            delta_linf = None
-            metrics = None
 
-        ranks = new_ranks.select("id", "rank")
-        if checkpoint is not None:
-            committed = checkpoint.commit_state(it + 1, ranks, metrics)
-            ranks = spark.read.parquet(committed)
-
-        if fixed_iters is None and delta_linf is not None and delta_linf < tol:
-            break
-
-    if tele is not None:
-        tele.unpersist()
-    links.unpersist()
-    dangling.unpersist()
-    vertices.unpersist()
-    return ranks.select("id", F.col("rank").alias("pagerank"))
+        dm_agg = {"dangling_mass": (F.sum(F.when(F.col("dng"), F.col("rank"))), sum)}
+        delta = F.abs(F.col("rank") - F.col("prev_rank"))
+        ranks = run.run(
+            initial,
+            step,
+            iters=fixed_iters if fixed_iters is not None else max_iter,
+            keep=keep,
+            aggs={
+                **dm_agg,
+                "delta_linf": (F.max(delta), max),
+                "delta_l1": (F.sum(delta), sum),
+            },
+            start_aggs=dm_agg,
+            done=None if fixed_iters is not None else lambda s: s["delta_linf"] < tol,
+        )
+        links.unpersist()
+        return run.export(ranks.select("id", F.col("rank").alias("pagerank")))
 
 
 def ppr_grouped(
@@ -345,111 +255,78 @@ def ppr_grouped(
     Scale design: state is SPARSE — only ``(seed, id)`` pairs with
     nonzero mass exist (the seed's expanding forward-reachable set), so
     state size is sum_s |N_L(s)|, never ``|seeds| x |V|``; the per-
-    superstep join re-uses the cached src-partitioned links exchange
-    (only the narrow state shuffles); the ``(seed, dst)`` sum gets
+    superstep join meets the cached src-partitioned links without an
+    exchange (the state is laid out by ``id``); the ``(seed, dst)`` sum gets
     map-side combine so mega-hubs never concentrate rows; per-seed
     dangling mass folds into the same superstep job (no driver action
     in the loop).  Seeds absent from the vertex set are dropped.
     """
     d = damping
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    links, vertices, dangling, _n = _prepare(
-        edges, partitions, assume_simple, None
-    )
-    seed_df = (
-        spark.createDataFrame([(int(s),) for s in seeds], "seed bigint")
-        .join(vertices, F.col("seed") == vertices.id, "left_semi")
-        .persist()
-    )
-    seed_df.count()
+    with SuperstepRunner(spark, "ppr_grouped", partitions, checkpoint) as run:
+        links, vertices = _prepare(run.adopt(edges), run.p, assume_simple, None)
+        vertices = vertices.persist()
+        dangling = vertices.where(F.col("dng")).select("id")
+        seed_df = (
+            run.child.createDataFrame([(int(s),) for s in seeds], "seed bigint")
+            .join(vertices, F.col("seed") == vertices.id, "left_semi")
+            .persist()
+        )
 
-    def _commit(it: int, st: DataFrame) -> DataFrame:
-        if checkpoint is None:
-            return st
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            it,
-            st,
-            {
-                "algo": "ppr_grouped",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        return spark.read.parquet(committed)
-
-    start_iter = 0
-    state = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = min(last, fixed_iters)
-            state = checkpoint.read_state(spark, start_iter)
-    if state is None:
-        state = seed_df.select(
-            "seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank")
-        ).localCheckpoint(eager=True)
-
-    for _it in range(start_iter, fixed_iters):
-        contribs = (
-            state.join(links, state.id == links.src)
-            .groupBy("seed", "dst")
-            .agg(F.sum(F.col("rank") / F.col("out_degree")).alias("c"))
-        )
-        # per-seed dangling mass: a tiny (seed, dm) aggregate folded
-        # lazily into the superstep plan
-        dm = (
-            state.join(dangling, "id", "left_semi")
-            .groupBy("seed")
-            .agg(F.sum("rank").alias("dm"))
-        )
-        base = seed_df.join(dm, "seed", "left").select(
-            "seed",
-            F.col("seed").alias("id"),
-            (
-                F.lit(1.0 - d)
-                + F.lit(d) * F.coalesce("dm", F.lit(0.0))
-            ).alias("b"),
-        )
-        state = (
-            contribs.select(
-                "seed",
-                F.col("dst").alias("id"),
-                (F.lit(d) * F.col("c")).alias("cc"),
+        def step(state: DataFrame, _sc: dict) -> DataFrame:
+            contribs = (
+                state.join(links, state.id == links.src)
+                .groupBy("seed", "dst")
+                .agg(F.sum(F.col("rank") / F.col("out_degree")).alias("c"))
             )
-            .join(base, ["seed", "id"], "full_outer")
-            .select(
-                "seed",
-                "id",
-                (
-                    F.coalesce("cc", F.lit(0.0))
-                    + F.coalesce("b", F.lit(0.0))
-                ).alias("rank"),
+            # per-seed dangling mass: a tiny (seed, dm) aggregate folded
+            # lazily into the superstep plan
+            dm = (
+                state.join(dangling, "id", "left_semi")
+                .groupBy("seed")
+                .agg(F.sum("rank").alias("dm"))
             )
-            .repartition(partitions, "id")
-            .localCheckpoint(eager=True)
+            base = seed_df.join(dm, "seed", "left").select(
+                "seed",
+                F.col("seed").alias("id"),
+                (F.lit(1.0 - d) + F.lit(d) * F.coalesce("dm", F.lit(0.0))).alias("b"),
+            )
+            return (
+                contribs.select(
+                    "seed", F.col("dst").alias("id"), (F.lit(d) * F.col("c")).alias("cc")
+                )
+                .join(base, ["seed", "id"], "full_outer")
+                .select(
+                    "seed",
+                    "id",
+                    (F.coalesce("cc", F.lit(0.0)) + F.coalesce("b", F.lit(0.0))).alias(
+                        "rank"
+                    ),
+                )
+                .repartition(run.p, "id")
+            )
+
+        state = run.export(
+            run.run(
+                lambda: run.layout(
+                    seed_df.select("seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank"))
+                ),
+                step,
+                iters=fixed_iters,
+                keep=["seed", "id", "rank"],
+            )
         )
-        state = _commit(_it + 1, state)
+        links.unpersist()
+        vertices.unpersist()
+        seed_df.unpersist()
 
     from pyspark.sql import Window
 
     # top-k boundary on the ROUNDED score + id tie-break: total order,
     # cross-engine stable (CLAUDE.md oracle rule)
     w = Window.partitionBy("seed").orderBy(F.desc("ppr"), F.asc("id"))
-    out = (
+    return (
         state.select("seed", "id", F.round("rank", 9).alias("ppr"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
-    links.unpersist()
-    dangling.unpersist()
-    vertices.unpersist()
-    seed_df.unpersist()
-    return out

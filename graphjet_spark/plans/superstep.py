@@ -1,0 +1,153 @@
+"""Co-partitioned superstep runner for the vertex-state loops (PageRank,
+hash-min CC, label propagation): one shuffle and one Spark job per
+superstep.
+
+- **Planning session.**  Loops plan in ``spark.newSession()`` with AQE
+  off, broadcast joins off and ``shuffle.partitions = P`` (the edge
+  relation's partition count): under AQE a lazy ``localCheckpoint``
+  loses the state's partitioning and each exchange runs as its own job,
+  and the broadcast threshold ships the state every superstep.  The
+  caller's conf is never touched (safe under serve.py's threads);
+  inputs and result cross via uniquely named global temp views, dropped
+  on exit, and the result belongs to the caller's session.
+- **Co-partitioned state.**  The ``id``-keyed state is hash-partitioned
+  and sorted into the P blocks of the cached, gather-key sorted edge
+  relation, so ``edges ⋈ state`` and ``state ⋈ aggregate`` are
+  exchange-free merge joins; the one shuffle is the message aggregation
+  with its map-side partial combine (hub fan-in collapses per task).
+- **One action per superstep.**  The action that materializes the lazy
+  ``localCheckpoint`` returns the superstep's per-partition aggregates:
+  the scalars the next superstep reads as literals, and its metrics
+  (``stats["supersteps"]``, and the :class:`CheckpointManager` commit,
+  after which the state is read back from parquet and re-laid out).
+"""
+
+from __future__ import annotations
+
+import time
+import uuid
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from graphjet_spark.plans.checkpoints import CheckpointManager
+
+# name -> (per-partition aggregate, how partitions combine: sum or max)
+Aggs = dict[str, tuple[Column, Callable]]
+
+
+class SuperstepRunner:
+    """Owns one superstep loop: the planning session, the state layout,
+    the per-superstep action, commits and resume.  Use as a context
+    manager so the global temp views are dropped."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        algo: str,
+        partitions: int | None = None,
+        checkpoint: CheckpointManager | None = None,
+        stats: dict | None = None,
+    ):
+        self.spark, self.algo, self.checkpoint = spark, algo, checkpoint
+        self.p = partitions or spark.sparkContext.defaultParallelism
+        self.child = spark.newSession()
+        for key, value in (
+            ("spark.sql.adaptive.enabled", "false"),
+            ("spark.sql.autoBroadcastJoinThreshold", "-1"),
+            ("spark.sql.shuffle.partitions", str(self.p)),
+        ):
+            self.child.conf.set(key, value)
+        self.history: list[dict] = []
+        if stats is not None:
+            stats["supersteps"] = self.history
+        self._db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
+        self._views: list[str] = []
+
+    def __enter__(self) -> "SuperstepRunner":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for name in self._views:
+            self.spark.catalog.dropGlobalTempView(name)
+
+    def _view(self, df: DataFrame) -> str:
+        name = f"superstep_{uuid.uuid4().hex}"
+        df.createGlobalTempView(name)
+        self._views.append(name)
+        return f"{self._db}.{name}"
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """A caller-session DataFrame, as seen from the planning session."""
+        return self.child.table(self._view(df))
+
+    def export(self, df: DataFrame) -> DataFrame:
+        """A planning-session DataFrame, returned to the caller's session."""
+        return self.spark.table(self._view(df))
+
+    def layout(self, df: DataFrame) -> DataFrame:
+        """The state layout: P hash blocks by ``id``, sorted by ``id``."""
+        return df.repartition(self.p, "id").sortWithinPartitions("id")
+
+    def materialize(self, df: DataFrame, aggs: Aggs) -> tuple[DataFrame, dict]:
+        """Lazy ``localCheckpoint`` of ``df`` plus the one action that
+        materializes it and returns its per-partition aggregates."""
+        df = df.localCheckpoint(eager=False)
+        parts = sorted(
+            (
+                r.asDict()
+                for r in df.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    *[col.alias(name) for name, (col, _) in aggs.items()],
+                )
+                .collect()
+            ),
+            key=lambda r: r["partition_id"],
+        )
+        out = {"rows": sum(r["rows"] for r in parts)}
+        for name, (_, combine) in aggs.items():
+            out[name] = combine([r[name] for r in parts if r[name] is not None] or [0])
+        out["partitions"] = parts
+        return df, out
+
+    def run(
+        self,
+        initial: Callable[[], DataFrame],
+        step: Callable[[DataFrame, dict], DataFrame],
+        *,
+        iters: int,
+        keep: list[str],
+        aggs: Aggs | None = None,
+        start_aggs: Aggs | None = None,
+        done: Callable[[dict], bool] | None = None,
+    ) -> DataFrame:
+        """Supersteps up to ``iters`` from the last committed state, else
+        from ``initial()`` (already laid out), whose ``start_aggs`` are the
+        first scalars.  ``step(state, scalars)`` is the next state plus
+        the columns ``aggs`` read; stops once ``done(scalars)``.  Returns
+        the ``keep`` columns of the final state."""
+        last = self.checkpoint.last_committed() if self.checkpoint else None
+        last = None if last is None else min(last, iters)
+        if last is None:
+            state = initial()
+        else:
+            state = self.layout(self.checkpoint.read_state(self.child, last))
+        state, scalars = self.materialize(state, start_aggs or {})
+        for it in range(last or 0, iters):
+            t0 = time.time()
+            # the next merge joins need the state sorted by id; the planner
+            # drops this sort when the step's last join already sorts it
+            new, scalars = self.materialize(
+                step(state, scalars).sortWithinPartitions("id"), aggs or {}
+            )
+            scalars.update(algo=self.algo, iteration=it + 1, elapsed_s=time.time() - t0)
+            self.history.append(scalars)
+            state = new.select(*keep)
+            if self.checkpoint is not None:
+                path = self.checkpoint.commit_state(it + 1, state, scalars)
+                state = self.layout(self.child.read.parquet(path))
+            if done is not None and done(scalars):
+                break
+        return state.select(*keep)

@@ -1,9 +1,14 @@
 """SparkSession factory tuned for the link-graph engine.
 
 Design notes (scale-first):
-- AQE on: runtime join re-planning + skew-join splitting each superstep
-  (the iterative joins change cardinality every iteration, so static
-  planning is wrong by construction).
+- AQE on for every one-shot plan: runtime join re-planning, partition
+  coalescing and skew-join splitting.  The co-partitioned superstep
+  loops (PageRank, CC, LP, grouped PPR) are the exception: they plan
+  statically in their own child session (plans/superstep.py), because
+  under AQE a lazy ``localCheckpoint`` drops the state's hash
+  partitioning and every exchange runs as its own Spark job (measured:
+  110 jobs for 10 PageRank supersteps), and the broadcast threshold
+  below would ship the state every superstep.
 - Arrow on: every Python-side kernel in this engine is a vectorized
   pandas/Arrow UDF (no per-row Python anywhere — see BASELINE.json
   input_hint).

@@ -132,8 +132,12 @@ def main() -> int:
     for t in ts:
         t.start()
     # availableNow drains every staged file exactly-once, then stops
-    q.awaitTermination(max_seconds)
+    drained = q.awaitTermination(max_seconds)
     drain_s = time.time() - t0
+    if not drained:
+        # timed out mid-drain: stop the query before anything reads its
+        # output or removes its work dir, and flag the partial count
+        q.stop()
     stop_flag.set()
     for t in ts:
         t.join()
@@ -164,6 +168,7 @@ def main() -> int:
                 "ingested_edges": ingested,
                 "expected_links": n_links,
                 "ingest_drain_s": round(drain_s, 1),
+                "drained": drained,
                 "batch_build_edges_per_sec": round(built / batch_s, 1),
                 "batch_built_edges": built,
                 "batch_s": round(batch_s, 1),

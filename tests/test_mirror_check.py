@@ -378,3 +378,63 @@ def test_mirror_keep_list_matches_bruteforce():
     want = np.array([keep[d] for d in doc_ids])
     got = mc.mirror_keep_list(doc_ids, texts)
     assert np.array_equal(got, want)
+
+
+def test_mirror_minhash_simhash_empty_when_no_shingles():
+    """A corpus where no document yields a shingle (every text shorter
+    than the shingle width) has no candidate pairs, the same as the
+    brute force, instead of failing inside reduceat."""
+    mc = _load()
+    doc_ids = np.arange(5, dtype=np.int64)
+    texts = ["", "a", "b", " ", "c"]
+    assert all(not _brute_grams(t, 2) and not _brute_grams(t, 3) for t in texts)
+    for got in (mc.mirror_minhash(doc_ids, texts), mc.mirror_simhash(doc_ids, texts)):
+        assert [len(x) for x in got] == [0, 0, 0]
+        assert got[0].dtype == got[1].dtype == np.int64
+
+
+def test_mirror_keep_list_wide_vocab_chunks_bounded(monkeypatch):
+    """Across a vocabulary many bitset words wide, the class-pair chunks
+    are sized by words, not pairs: the answer still matches the brute
+    force, and peak memory stays near the word budget."""
+    import itertools
+    import tracemalloc
+
+    mc = _load()
+    rng = np.random.default_rng(3)
+    vocab = [f"t{i}" for i in range(640)]  # W = 11 words per bitset
+    texts = []
+    for _ in range(100):
+        toks = list(rng.choice(vocab, 30, replace=False))
+        texts.append(" ".join(toks))
+        texts.append(" ".join(toks[::-1]))  # same token set
+        fresh = next(t for t in vocab if t not in toks)
+        texts.append(" ".join(toks[:29] + [fresh]))  # Jaccard 29/31
+    doc_ids = np.arange(len(texts), dtype=np.int64)
+    sets = [_brute_grams(t, 1) for t in texts]
+    keep = list(range(len(texts)))
+
+    def find(v):
+        while keep[v] != v:
+            v = keep[v]
+        return v
+
+    for x, y in itertools.combinations(range(len(texts)), 2):
+        i, u = len(sets[x] & sets[y]), len(sets[x] | sets[y])
+        if i * 2_000_000 >= u * 1_799_999:
+            rx, ry = find(x), find(y)
+            keep[max(rx, ry)] = min(rx, ry)
+    want = np.array([find(v) for v in range(len(texts))])
+    assert len(set(want)) <= 100
+
+    monkeypatch.setattr(mc, "KEEP_LIST_PAIR_WORDS", 1 << 12)
+    tracemalloc.start()
+    try:
+        got = mc.mirror_keep_list(doc_ids, texts)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert np.array_equal(got, want)
+    # one chunk here is 1 x 200 classes x 11 words; sizing by pairs
+    # alone would take 20 rows at a time (~1.4 MB across its copies)
+    assert peak < 512 * 1024, peak

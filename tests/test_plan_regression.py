@@ -59,7 +59,6 @@ SCALAR_CROSSJOIN_ALLOW = {
     "dsir_logratio",  # operators/textstats.py — 1-row smoothing scalars
     # + 1-row selection threshold
     "hits_scores",  # plans/hits.py:82 — 1-row norm total per iteration
-    "trustrank",  # plans/pagerank.py:247 — 1-row dangling-mass row
     # bounded-broadcast baseline (not scalar, but not n^2 either):
     "ann_topk_cosine",  # operators/ann.py:69 — broadcast side is the
     # fixed query-id set (|Q| rows); the scale paths are lsh/ivf_ann_topk

@@ -1,0 +1,239 @@
+"""The co-partitioned superstep runner (plans/superstep.py): every
+superstep of PageRank (plain, teleport, weighted), CC and LP plans with
+exactly one shuffle and no broadcast, runs as one Spark job, matches
+the numpy mirrors of tools/mirror_check.py, and leaves the caller's
+session as it found it."""
+
+from __future__ import annotations
+
+import importlib.util
+import pathlib
+import re
+
+import numpy as np
+import pytest
+from graphjet_spark.plans.components import connected_components
+from graphjet_spark.plans.labelprop import label_propagation
+from graphjet_spark.plans.pagerank import pagerank
+
+from .conftest import edges_df
+
+# hub 0 links to and from 1..8 (and 1..7 back); 9 and 13 are dangling
+# (in-links only); 10..13 is a second component
+PAIRS = (
+    [(0, v) for v in range(1, 9)]
+    + [(v, 0) for v in range(1, 8)]
+    + [(1, 2), (2, 3), (3, 9), (8, 9), (10, 11), (11, 12), (12, 10), (12, 13)]
+)
+ITERS = 4
+CALLER_CONF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.shuffle.partitions",
+)
+
+
+def _mirrors():
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "mirror_check.py"
+    spec = importlib.util.spec_from_file_location("mirror_check", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+mc = _mirrors()
+UIDS, SRCI, DSTI = mc._compact(
+    np.array([s for s, _ in PAIRS]), np.array([d for _, d in PAIRS])
+)
+WEIGHTS = np.array([1.0 + (s + d) % 3 for s, d in PAIRS])
+
+
+def _ppr_ref(p, w=None, d=0.85):
+    """Power iteration with restart distribution ``p`` and edge weights
+    ``w``; uniform ``p`` and unit ``w`` is ``mc.mirror_pagerank``."""
+    n = len(UIDS)
+    w = np.ones(len(SRCI)) if w is None else w
+    outw = np.bincount(SRCI, weights=w, minlength=n)
+    dangling = outw == 0
+    safe = np.where(dangling, 1.0, outw)
+    r = p.copy()
+    for _ in range(ITERS):
+        dm = r[dangling].sum()
+        r = p * ((1 - d) + d * dm) + d * np.bincount(
+            DSTI, weights=r[SRCI] * w / safe[SRCI], minlength=n
+        )
+    return r
+
+
+def _exchanges(plan: str) -> list[str]:
+    """Exchange nodes of a physical plan string, skipping the build
+    plans of cached relations (computed once, not per superstep)."""
+    found, cached_at = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if cached_at is not None and indent > cached_at:
+            continue
+        cached_at = None
+        node = re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line)
+        if node.startswith("InMemoryRelation"):
+            cached_at = indent
+        if re.match(r"(Broadcast|Reused)?Exchange\b", node):
+            found.append(node.split(" ")[0])
+    return found
+
+
+@pytest.fixture
+def checkpointed(spark, monkeypatch):
+    """The physical plan of every DataFrame that gets localCheckpointed
+    (the pre-checkpoint plans, as in test_plan_regression's spy, but
+    patched on the concrete DataFrame class, which overrides the
+    abstract ``pyspark.sql.DataFrame`` method)."""
+    plans: list[str] = []
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+
+    def spy(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return plans
+
+
+def _weighted(spark):
+    return spark.createDataFrame(
+        [(s, d, float(w)) for (s, d), w in zip(PAIRS, WEIGHTS)],
+        "src long, dst long, weight double",
+    )
+
+
+CASES = {
+    # name: (call, result column, expected values over UIDS, setup plans)
+    "pagerank": (
+        lambda spark, **kw: pagerank(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
+        "pagerank",
+        lambda: mc.mirror_pagerank(UIDS, SRCI, DSTI, ITERS),
+        2,
+    ),
+    "pagerank_teleport": (
+        lambda spark, **kw: pagerank(
+            spark, edges_df(spark, PAIRS), fixed_iters=ITERS,
+            teleport={0: 1.0, 11: 3.0}, **kw,
+        ),
+        "pagerank",
+        lambda: _ppr_ref(np.where(UIDS == 0, 0.25, np.where(UIDS == 11, 0.75, 0.0))),
+        2,
+    ),
+    "pagerank_weighted": (
+        lambda spark, **kw: pagerank(
+            spark, _weighted(spark), fixed_iters=ITERS, weight_col="weight", **kw
+        ),
+        "pagerank",
+        lambda: _ppr_ref(np.full(len(UIDS), 1.0 / len(UIDS)), WEIGHTS),
+        2,
+    ),
+    "components": (
+        lambda spark, **kw: connected_components(
+            spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw
+        ),
+        "component",
+        lambda: mc.mirror_cc(UIDS, SRCI, DSTI),
+        1,
+    ),
+    "labelprop": (
+        lambda spark, **kw: label_propagation(
+            spark, edges_df(spark, PAIRS), iters=ITERS, **kw
+        ),
+        "label",
+        lambda: mc.mirror_lp(UIDS, SRCI, DSTI, ITERS),
+        1,
+    ),
+}
+
+
+def test_reference_is_the_mirror():
+    uniform = np.full(len(UIDS), 1.0 / len(UIDS))
+    np.testing.assert_allclose(
+        _ppr_ref(uniform), mc.mirror_pagerank(UIDS, SRCI, DSTI, ITERS), atol=1e-15
+    )
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name):
+    call, col, want, setup = CASES[name]
+    conf = {k: spark.conf.get(k) for k in CALLER_CONF}
+    views = {t.name for t in spark.catalog.listTables("global_temp")}
+
+    result = call(spark)
+
+    # isolation: the caller's session is untouched and owns the result
+    assert {k: spark.conf.get(k) for k in CALLER_CONF} == conf
+    assert result.sparkSession is spark
+    assert {t.name for t in spark.catalog.listTables("global_temp")} == views
+
+    # plan shape: setup plans, then one plan per superstep with exactly
+    # one (non-broadcast) shuffle: the message aggregation
+    assert len(checkpointed) == setup + ITERS
+    assert not any("BroadcastExchange" in p for p in checkpointed)
+    for plan in checkpointed[setup:]:
+        assert _exchanges(plan) == ["Exchange"], plan
+
+    got = result.toPandas()
+    arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), np.nan)
+    assert err is None and len(got) == len(UIDS)
+    if col == "pagerank":
+        np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
+    else:
+        assert (arr == want()).all()
+
+
+@pytest.mark.parametrize("name", ["pagerank", "components", "labelprop"])
+def test_stats_cost_no_job(spark, name):
+    """``stats=`` returns per-superstep metrics from the action each
+    superstep runs anyway: the same job count as without it, and one
+    job per superstep after a fixed setup."""
+    call, _, _, setup = CASES[name]
+    sc = spark.sparkContext
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            call(spark, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    stats: dict = {}
+    with_stats = jobs(f"superstep-stats-{name}", stats=stats)
+    assert with_stats == jobs(f"superstep-plain-{name}")
+    assert with_stats == setup + ITERS
+    steps = stats["supersteps"]
+    assert [s["iteration"] for s in steps] == list(range(1, ITERS + 1))
+    for s in steps:
+        assert s["rows"] == len(UIDS) == sum(p["rows"] for p in s["partitions"])
+        assert s["elapsed_s"] > 0
+    if name == "pagerank":
+        assert all("delta_linf" in s and "dangling_mass" in s for s in steps)
+    if name == "components":
+        assert steps[-1]["changed"] <= steps[0]["changed"]
+
+
+def test_concurrent_callers_share_one_session(spark):
+    """Loops started from several threads of one session (as serve.py's
+    handlers do) each get their own planning session and views: every
+    result matches its mirror and the caller's session is unchanged."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    conf = {k: spark.conf.get(k) for k in CALLER_CONF}
+    views = {t.name for t in spark.catalog.listTables("global_temp")}
+    names = ["pagerank", "components", "labelprop"] * 2
+    with ThreadPoolExecutor(len(names)) as pool:
+        futures = [pool.submit(lambda n=n: CASES[n][0](spark).toPandas()) for n in names]
+        results = [f.result(timeout=300) for f in futures]
+    for name, got in zip(names, results):
+        _, col, want, _ = CASES[name]
+        arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), np.nan)
+        assert err is None and len(got) == len(UIDS)
+        np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
+    assert {k: spark.conf.get(k) for k in CALLER_CONF} == conf
+    assert {t.name for t in spark.catalog.listTables("global_temp")} == views

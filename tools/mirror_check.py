@@ -370,6 +370,8 @@ def mirror_scc(n, srci, dsti, max_rounds: int = 100):
 
 _MERSENNE = (1 << 31) - 1
 _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+# bitset words per class-pair chunk in mirror_keep_list (64-bit words)
+KEEP_LIST_PAIR_WORDS = 1 << 24
 
 
 def _load_docs_duckdb(sf_dir: str):
@@ -438,6 +440,8 @@ def mirror_minhash(doc_ids, texts, *, num_hashes=128, shingle_n=3,
     flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
     offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
     nd = len(ids)
+    if nd == 0:  # no document has a shingle: reduceat needs input
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
     sig = np.empty((nd, num_hashes), dtype=np.int64)
     for i in range(num_hashes):
         vals = (a[i] * flat + b[i]) % _MERSENNE
@@ -488,6 +492,8 @@ def mirror_simhash(doc_ids, texts, *, max_hamming=3, shingle_n=2):
     flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
     offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
     nd = len(ids)
+    if nd == 0:  # no document has a shingle: reduceat needs input
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
     fp = np.zeros(nd, dtype=np.int64)
     for bit in range(60):
         votes = np.add.reduceat(2 * ((flat >> bit) & 1) - 1, offsets)
@@ -563,7 +569,9 @@ def mirror_keep_list(doc_ids, texts, *, threshold=0.9, vocab_max=4096):
     num = int(round(den * threshold)) - 1
     src_e = []
     dst_e = []
-    chunk = max(1, (1 << 24) // max(1, n_cls))
+    # the chunk x n_cls x W bitset AND (and _pop64's per-byte copies)
+    # stays near KEEP_LIST_PAIR_WORDS words whatever the vocabulary width
+    chunk = max(1, KEEP_LIST_PAIR_WORDS // max(1, n_cls * W))
     for s in range(0, n_cls, chunk):
         e = min(s + chunk, n_cls)
         inter = _pop64(uniq[s:e, None, :] & uniq[None, :, :]).sum(axis=2)
