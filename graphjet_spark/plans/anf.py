@@ -14,12 +14,16 @@ so after t supersteps M_t(v) sketches the set of vertices reachable
 from v within t hops.  Everything is integer bit arithmetic inside
 whole-stage codegen — no floats in the distributed part, no Python.
 
-Scale design: state is |V| x r BIGINTs (a few bytes per vertex — the
-whole point of sketching); the edge side is hash-partitioned by the
-gather key once and persisted (same superstep hygiene as
-:mod:`graphjet_spark.plans.pagerank`); ``bit_or`` gets map-side partial
-aggregation, so a mega-hub's in-neighborhood collapses to one partial
-row per map task.
+Scale design: the loop runs on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  State is
+``(id, m0..m{r-1}, hs)`` — |V| x r BIGINTs (a few bytes per vertex, the
+whole point of sketching) plus ``hs``, the vertex's sketch sum after
+each hop so far; the edge side is laid out by the gather key once and
+cached, so the one exchange per superstep is the ``bit_or``
+aggregation, whose map-side partial combine collapses a mega-hub's
+in-neighborhood to one partial row per map task.  The histogram is one
+``posexplode(hs)`` aggregation at the end, and resume is the runner's:
+the committed state carries every earlier hop's sketch sums.
 
 Determinism / correctness gate: the sketch hash is the cross-engine
 md5-prefix integer (the one hash both Spark and DuckDB compute
@@ -34,6 +38,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 # P(first 1-bit at position k) = 2^-(k+1); E[2^R] ~ n / PHI
 ANF_PHI = 0.77351
@@ -55,127 +62,69 @@ def anf_sketch_histogram(
     r: int = 8,
     iters: int = 5,
     partitions: int | None = None,
-    checkpoint: "CheckpointManager | None" = None,
+    checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Run ``iters`` ANF supersteps with ``r`` FM sketches per vertex;
     return the exact integer histogram ``(t, sketch_sum, cnt)`` where
     ``sketch_sum`` = sum over the r sketches of the lowest-zero-bit
     index of M_t(v) (the FM estimator's sufficient statistic).
 
-    With ``checkpoint``, every superstep's sketch state commits
-    atomically (iteration t = state after t hops, t=0 = initial masks)
-    with per-partition lineage rows, and an interrupted run resumes
-    from the last committed hop — earlier hops' histograms are rebuilt
-    from their committed state, so the resumed output is identical to
-    an uninterrupted run (the sketches are a pure function of the
-    graph)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        # gather along out-edges: src collects dst sketches; partition
-        # + sort by dst once so the per-superstep SMJ never re-sorts
-        # the (large) edge side
-        .repartition(partitions, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-    )
+    With ``checkpoint``, every superstep's state commits atomically
+    (iteration t = state after t hops) with its metrics, and an
+    interrupted run resumes from the last committed hop; the committed
+    ``hs`` holds the earlier hops' sketch sums, so the resumed output is
+    identical to an uninterrupted run (the sketches are a pure function
+    of the graph)."""
     mcols = [f"m{j}" for j in range(r)]
-
     # lowest ZERO bit index b: m ^ (m+1) = 2^(b+1) - 1, bit_count = b+1
-    s_expr = " + ".join(
-        f"(bit_count({c} ^ ({c} + 1L)) - 1)" for c in mcols
+    sketch_sum = F.array(
+        F.expr(
+            "cast("
+            + " + ".join(f"(bit_count({c} ^ ({c} + 1L)) - 1)" for c in mcols)
+            + " as int)"
+        )
     )
+    with SuperstepRunner(spark, "anf", partitions, checkpoint) as run:
+        # gather along out-edges: src collects dst sketches
+        e = run.layout_edges(run.adopt(edges).select("src", "dst").distinct(), "dst")
 
-    def hist(t: int, st: DataFrame) -> DataFrame:
-        return (
-            st.select(F.expr(f"cast({s_expr} as int)").alias("sketch_sum"))
-            .groupBy("sketch_sum")
+        def initial() -> DataFrame:
+            ids = (
+                e.select(F.col("src").alias("id"))
+                .union(e.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+            masks = [F.expr(_mask_expr(j)).alias(c) for j, c in enumerate(mcols)]
+            return run.layout(
+                ids.select("id", *masks).withColumn("hs", sketch_sum)
+            )
+
+        def step(st: DataFrame, _sc: dict) -> DataFrame:
+            g = (
+                e.join(st, e.dst == st.id)
+                .groupBy("src")
+                .agg(*[F.expr(f"bit_or({c})").alias(f"n{c}") for c in mcols])
+            )
+            return (
+                st.join(g, F.col("id") == g.src, "left")
+                .select(
+                    "id",
+                    *[
+                        F.col(c).bitwiseOR(F.coalesce(F.col(f"n{c}"), F.lit(0))).alias(c)
+                        for c in mcols
+                    ],
+                    "hs",
+                )
+                .withColumn("hs", F.concat("hs", sketch_sum))
+            )
+
+        st = run.run(initial, step, iters=iters, keep=["id", *mcols, "hs"])
+        e.unpersist()
+        return run.export(
+            st.select(F.posexplode("hs").alias("t", "sketch_sum"))
+            .groupBy("t", "sketch_sum")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .select(
-                F.lit(t).cast("int").alias("t"), "sketch_sum", "cnt"
-            )
         )
-
-    def commit(t: int, st: DataFrame) -> DataFrame:
-        if checkpoint is None:
-            return st
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            t,
-            st,
-            {
-                "algo": "anf",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        return spark.read.parquet(committed)
-
-    start_t = 0
-    state = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_t = min(last, iters)
-            state = checkpoint.read_state(spark, start_t)
-    if state is None:
-        state = vertices.select(
-            "id",
-            *[F.expr(_mask_expr(j)).alias(c) for j, c in enumerate(mcols)],
-        ).localCheckpoint(eager=True)
-        state = commit(0, state)
-
-    # histograms for hops already on disk (resume) or just the initial
-    out = [
-        hist(
-            t,
-            checkpoint.read_state(spark, t) if checkpoint is not None else state,
-        )
-        for t in range(0, start_t)
-    ]
-    out.append(hist(start_t, state))
-    for t in range(start_t + 1, iters + 1):
-        gathered = (
-            e.join(state, e.dst == state.id)
-            .groupBy("src")
-            .agg(*[F.expr(f"bit_or({c})").alias(f"n{j}") for j, c in enumerate(mcols)])
-        )
-        state = (
-            state.join(gathered, state.id == gathered.src, "left")
-            .select(
-                "id",
-                *[
-                    (
-                        F.col(c).bitwiseOR(
-                            F.coalesce(F.col(f"n{j}"), F.lit(0))
-                        )
-                    ).alias(c)
-                    for j, c in enumerate(mcols)
-                ],
-            )
-            .repartition(partitions, "id")
-            .localCheckpoint(eager=True)
-        )
-        state = commit(t, state)
-        out.append(hist(t, state))
-    res = out[0]
-    for h in out[1:]:
-        res = res.unionByName(h)
-    e.unpersist()
-    return res
 
 
 def neighborhood_function(hist: DataFrame, *, r: int = 8) -> DataFrame:

@@ -33,15 +33,10 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 
 
 def gather_table(run: SuperstepRunner, edges: DataFrame) -> DataFrame:
-    """The symmetrized edges in the runner's session, partitioned and
-    sorted by the gather key ``b`` (the CSR layout) and cached: the
-    co-partitioned ``(id, ...)`` state joins it without an exchange."""
-    return (
-        symmetrize(run.adopt(edges))
-        .repartition(run.p, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
+    """The symmetrized edges in the runner's session, laid out by the
+    gather key ``b``: the co-partitioned ``(id, ...)`` state joins it
+    without an exchange."""
+    return run.layout_edges(symmetrize(run.adopt(edges)), "b")
 
 
 def connected_components(

@@ -9,23 +9,26 @@ superstep: authority(v) = sum of hub scores over in-edges, then hub(u)
 Normalization is deferred to the very end (one L1 scaling of each
 vector): every step is linear, so scaling commutes with iteration and
 the final unit-sum vectors are identical to per-step normalization in
-exact arithmetic — but deferring removes two global-total broadcast
-jobs per superstep, leaving exactly ONE Spark job per iteration (the
-eager hub checkpoint).  Raw magnitudes stay far inside float64 range
-for any realistic iteration budget (growth per double-step is bounded
-by max-degree²).
+exact arithmetic.  Raw magnitudes stay far inside float64 range for any
+realistic iteration budget (growth per double-step is bounded by
+max-degree²).
 
-Superstep hygiene as elsewhere, with one persisted copy of the edge
-table per gather direction: the authority step joins on ``src``, the
-hub step on ``dst`` — a single-direction copy would reshuffle the full
-(100-TB-side) edge table every hub step.  ``fixed_iters`` is the
-oracle-parity mode.
+Runs on :class:`~graphjet_spark.plans.superstep.SuperstepRunner` with
+``(id, h, hp)`` state (``hp`` = the previous hub vector) and one cached
+edge layout per gather direction — the authority gather joins on
+``src``, the hub gather on ``dst`` — so a superstep is one Spark job
+with exactly two exchanges, the two sums.  The authority vector never
+enters the state: a_k = A^T h_{k-1} is one final gather over ``hp``,
+whose action also returns both normalization totals.  ``fixed_iters``
+is the oracle-parity mode.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def hits(
@@ -38,67 +41,54 @@ def hits(
     """Returns (id, hub, authority) after exactly ``fixed_iters``
     double-steps over the distinct edge set, each vector L1-normalized
     once at the end."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    ded = edges.select("src", "dst").distinct()
-    e = (
-        ded.repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e_dst = (
-        ded.repartition(partitions, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    with SuperstepRunner(spark, "hits", partitions) as run:
+        ded = run.adopt(edges).select("src", "dst").distinct()
+        by_src, by_dst = run.layout_edges(ded, "src"), run.layout_edges(ded, "dst")
 
-    h = vertices.select("id", F.lit(1.0).alias("h"))
-    auth = None
-    for _ in range(fixed_iters):
-        # authority step: gather hub mass along in-edges (absent rows
-        # are implicit zeros — they can never re-enter the iteration)
-        auth = (
-            e.join(h, e.src == h.id)
-            .groupBy(e.dst.alias("id"))
-            .agg(F.sum("h").alias("a"))
-            .localCheckpoint(eager=False)
-        )
-        # hub step: gather authority mass along out-edges
-        h = (
-            e_dst.join(auth, e_dst.dst == auth.id)
-            .groupBy(e_dst.src.alias("id"))
-            .agg(F.sum("a").alias("h"))
-            .localCheckpoint(eager=True)
-        )
+        def gather(e: DataFrame, key: str, to: str, st: DataFrame, col: str):
+            """``(id, s)``: the sum of ``st[col]`` over ``e[key] = st.id``,
+            keyed by ``e[to]`` (absent rows are implicit zeros)."""
+            return (
+                e.join(st, e[key] == st.id)
+                .groupBy(e[to].alias("id"))
+                .agg(F.sum(col).alias("s"))
+            )
 
-    totals = (
-        h.agg(F.sum("h").alias("ht"))
-        .crossJoin(auth.agg(F.sum("a").alias("at")))
-        .first()
-    )
-    if totals["ht"] is None or totals["at"] is None:  # empty graph
-        e.unpersist()
-        e_dst.unpersist()
-        return vertices.select(
-            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-        )
-    out = (
-        vertices.join(h, "id", "left")
-        .join(auth, "id", "left")
-        .select(
-            "id",
-            (F.coalesce("h", F.lit(0.0)) / F.lit(totals["ht"])).alias("hub"),
-            (F.coalesce("a", F.lit(0.0)) / F.lit(totals["at"])).alias(
-                "authority"
+        def step(st: DataFrame, _sc: dict) -> DataFrame:
+            # authority gathers hub mass along in-edges, then hub gathers
+            # authority mass along out-edges: ``auth`` is referenced once,
+            # since a second reference would compute it twice
+            auth = gather(by_src, "src", "dst", st, "h")
+            hub = gather(by_dst, "dst", "src", auth, "s")
+            return st.join(hub, "id", "left").select(
+                "id", F.coalesce("s", F.lit(0.0)).alias("h"), F.col("h").alias("hp")
+            )
+
+        st = run.run(
+            lambda: run.layout(
+                ded.select(F.col("src").alias("id"))
+                .union(ded.select(F.col("dst").alias("id")))
+                .distinct()
+                .select("id", F.lit(1.0).alias("h"), F.lit(0.0).alias("hp"))
             ),
+            step,
+            iters=fixed_iters,
+            keep=["id", "h", "hp"],
         )
-    )
-    e.unpersist()
-    e_dst.unpersist()
-    return out
+        auth = gather(by_src, "src", "dst", st, "hp")
+        out, tot = run.materialize(
+            st.join(auth, "id", "left").select(
+                "id", "h", F.coalesce("s", F.lit(0.0)).alias("a")
+            ),
+            {"ht": (F.sum("h"), sum), "at": (F.sum("a"), sum)},
+        )
+        by_src.unpersist()
+        by_dst.unpersist()
+        # the totals are zero only on an empty graph: no rows to divide
+        return run.export(
+            out.select(
+                "id",
+                (F.col("h") / F.lit(float(tot["ht"]))).alias("hub"),
+                (F.col("a") / F.lit(float(tot["at"]))).alias("authority"),
+            )
+        )

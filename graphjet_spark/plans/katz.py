@@ -1,23 +1,81 @@
-"""Katz centrality by fixed-point iteration.
+"""Katz and eigenvector centrality: one walk-sum power iteration.
 
 Katz (1953) counts attenuated walks into each vertex:
 x_{k+1}(v) = 1 + alpha * sum over in-edges (u,v) of x_k(u) — the
 geometric-series cousin of PageRank without the degree normalization
 (GraphJet's influence surface exposes PageRank/SALSA; Katz completes
-the classic centrality family over the same superstep machinery).
+the classic centrality family).  Eigenvector (Bonacich) centrality is
+the same loop with no constant term and no attenuation, over the
+undirected symmetrized graph.
 
-Convergence requires alpha < 1/lambda_max; callers pick a small
-attenuation (default 0.05).  No per-step normalization is needed —
-scores are bounded by the geometric series — so each superstep is a
-single join + aggregate job, the same one-job shape as the deferred
-HITS plan.  ``fixed_iters`` is the oracle-parity mode (unrolled CTE
-chain in graphjet_spark.oracles.katz_fixed_sql).
+Both run :func:`_walk_sums` on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`: one exchange
+(the ``groupBy(dst)`` sum) and one Spark job per superstep.  Katz
+converges for alpha < 1/lambda_max; callers pick a small attenuation
+(default 0.05).  Neither needs per-step normalization, so each vector
+is L1-normalized once at the end, by the ``sum(x)`` the last superstep
+already returns.  ``fixed_iters`` is the oracle-parity mode (unrolled
+CTE chains in graphjet_spark.oracles).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.components import symmetrize
+from graphjet_spark.plans.superstep import SuperstepRunner
+
+
+def _walk_sums(
+    spark: SparkSession,
+    edges: DataFrame,
+    pairs: Callable[[DataFrame], DataFrame],
+    name: str,
+    *,
+    c: float,
+    alpha: float,
+    iters: int,
+    partitions: int | None,
+) -> DataFrame:
+    """``(id, name)``: ``iters`` supersteps of x = c + alpha * A^T x
+    from x = 1 over the ``(src, dst)`` relation ``pairs(edges)`` and
+    its endpoints, L1-normalized once at the end.  Raw attenuated-walk
+    counts grow geometrically on hub-heavy graphs; normalizing rescales
+    the float64 sum-order noise with them, keeping the output
+    cross-engine stable at any magnitude.  Ranking is unchanged."""
+    with SuperstepRunner(spark, name, partitions) as run:
+        e = run.layout_edges(pairs(run.adopt(edges)), "src")
+        total = {"x_sum": (F.sum("x"), sum)}
+
+        def step(st: DataFrame, _sc: dict) -> DataFrame:
+            g = e.join(st, e.src == st.id).groupBy("dst").agg(F.sum("x").alias("g"))
+            return st.join(g, F.col("id") == g.dst, "left").select(
+                "id",
+                (F.lit(c) + F.lit(alpha) * F.coalesce("g", F.lit(0.0))).alias("x"),
+            )
+
+        x = run.run(
+            lambda: run.layout(
+                e.select(F.col("src").alias("id"))
+                .union(e.select(F.col("dst").alias("id")))
+                .distinct()
+                .select("id", F.lit(1.0).alias("x"))
+            ),
+            step,
+            iters=iters,
+            keep=["id", "x"],
+            aggs=total,
+        )
+        # the last superstep's sum(x) (one more action if none ran); it
+        # is zero only on an empty graph, which has no rows to divide
+        sc = run.history[-1] if run.history else run.materialize(x, total)[1]
+        e.unpersist()
+        return run.export(
+            x.select("id", (F.col("x") / F.lit(float(sc["x_sum"]))).alias(name))
+        )
 
 
 def katz(
@@ -30,52 +88,15 @@ def katz(
 ) -> DataFrame:
     """Returns (id, katz) after exactly ``fixed_iters`` iterations of
     x = 1 + alpha * A^T x over the distinct edge set."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    x = vertices.select("id", F.lit(1.0).alias("x"))
-    for _ in range(fixed_iters):
-        gathered = (
-            e.join(x, e.src == x.id)
-            .groupBy(e.dst.alias("id"))
-            .agg(F.sum("x").alias("g"))
-        )
-        x = (
-            vertices.join(gathered, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(1.0)
-                    + F.lit(alpha) * F.coalesce("g", F.lit(0.0))
-                ).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    # L1-normalize once at the end (like the deferred-normalization
-    # HITS plan): raw attenuated-walk counts grow geometrically on
-    # hub-heavy graphs, and normalizing rescales the float64 sum-order
-    # noise with them, keeping the output cross-engine stable at any
-    # magnitude.  Ranking is unchanged.
-    total = x.agg(F.sum("x")).collect()[0][0]
-    e.unpersist()
-    if total is None:  # empty graph
-        return x.select("id", F.col("x").alias("katz"))
-    return x.select(
-        "id", (F.col("x") / F.lit(float(total))).alias("katz")
+    return _walk_sums(
+        spark,
+        edges,
+        lambda e: e.select("src", "dst").distinct(),
+        "katz",
+        c=1.0,
+        alpha=alpha,
+        iters=fixed_iters,
+        partitions=partitions,
     )
 
 
@@ -88,39 +109,17 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """(id, eigen) — power iteration x = A^T x over the undirected
     symmetrized simple graph (Bonacich centrality), L1-normalized once
-    at the end (same deferred-normalization argument as HITS/Katz:
-    scaling commutes with the linear map and removes per-step global
-    jobs; the symmetrized matrix keeps the iteration irreducible on
-    each component, unlike the raw directed form which starves source
-    vertices)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(
-            edges.select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .select(F.col("dst").alias("a"), F.col("src").alias("b"))
-        )
-        .distinct()
-        .repartition(partitions, "a")
-        .sortWithinPartitions("a")
-        .persist()
+    at the end (scaling commutes with the linear map; the symmetrized
+    matrix keeps the iteration irreducible on each component, unlike
+    the raw directed form which starves source vertices).  Self-loop-only
+    vertices are not in the symmetrized graph and get no row."""
+    return _walk_sums(
+        spark,
+        edges,
+        lambda e: symmetrize(e).toDF("src", "dst"),
+        "eigen",
+        c=0.0,
+        alpha=1.0,
+        iters=fixed_iters,
+        partitions=partitions,
     )
-    x = sym.select(F.col("a").alias("id")).distinct().select(
-        "id", F.lit(1.0).alias("x")
-    )
-    for _ in range(fixed_iters):
-        x = (
-            sym.join(x, sym.a == x.id)
-            .groupBy(sym.b.alias("id"))
-            .agg(F.sum("x").alias("x"))
-            .localCheckpoint(eager=True)
-        )
-    total = x.agg(F.sum("x")).collect()[0][0]
-    sym.unpersist()
-    if total is None:  # empty graph
-        return x.select("id", F.col("x").alias("eigen"))
-    return x.select("id", (F.col("x") / F.lit(float(total))).alias("eigen"))

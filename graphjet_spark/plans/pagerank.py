@@ -26,14 +26,14 @@ from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def _prepare(
+    run: SuperstepRunner,
     edges: DataFrame,
-    partitions: int,
     assume_simple: bool,
     weight_col: str | None = None,
 ):
     """Build (links, vertices) — the static per-run tables.  ``links``
-    is ``(src, dst, out_degree)``, src-partitioned, src-sorted and
-    cached; ``vertices`` is ``(id, dng)`` with ``dng`` marking dangling
+    is ``(src, dst, out_degree)`` in the runner's src-keyed edge layout;
+    ``vertices`` is ``(id, dng)`` with ``dng`` marking dangling
     vertices (no out-link).
 
     With ``weight_col``, multi-edges collapse by summing weights and
@@ -54,16 +54,7 @@ def _prepare(
         )
         out_deg = e.groupBy("src").agg(F.sum("w").alias("out_degree"))
         link_cols = ["src", "dst", "w", "out_degree"]
-    links = (
-        e.join(out_deg, "src")
-        .select(*link_cols)
-        .repartition(partitions, "src")
-        # src-sorted within blocks (the CSR layout): the cached relation
-        # keeps its outputOrdering, so the per-superstep sort-merge join
-        # against ranks never re-sorts the (large) edge side
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    links = run.layout_edges(e.join(out_deg, "src").select(*link_cols), "src")
     # a vertex is dangling iff it never appears as a source
     vertices = (
         links.select(F.col("src").alias("id"), F.lit(False).alias("dng"))
@@ -118,7 +109,7 @@ def pagerank(
     """
     d = damping
     with SuperstepRunner(spark, "pagerank", partitions, checkpoint, stats) as run:
-        links, vertices = _prepare(run.adopt(edges), run.p, assume_simple, weight_col)
+        links, vertices = _prepare(run, run.adopt(edges), assume_simple, weight_col)
         keep = ["id", "rank", "dng"] + (["p"] if teleport is not None else [])
 
         def initial() -> DataFrame:
@@ -263,7 +254,7 @@ def ppr_grouped(
     """
     d = damping
     with SuperstepRunner(spark, "ppr_grouped", partitions, checkpoint) as run:
-        links, vertices = _prepare(run.adopt(edges), run.p, assume_simple, None)
+        links, vertices = _prepare(run, run.adopt(edges), assume_simple, None)
         vertices = vertices.persist()
         dangling = vertices.where(F.col("dng")).select("id")
         seed_df = (

@@ -1,6 +1,6 @@
 """Co-partitioned superstep runner for the vertex-state loops (PageRank,
-hash-min CC, label propagation): one shuffle and one Spark job per
-superstep.
+hash-min CC, label propagation, Katz, eigenvector, HITS, ANF): one
+shuffle (two for HITS) and one Spark job per superstep.
 
 - **Planning session.**  Loops plan in ``spark.newSession()`` with AQE
   off, broadcast joins off and ``shuffle.partitions = P`` (the edge
@@ -89,6 +89,12 @@ class SuperstepRunner:
     def layout(self, df: DataFrame) -> DataFrame:
         """The state layout: P hash blocks by ``id``, sorted by ``id``."""
         return df.repartition(self.p, "id").sortWithinPartitions("id")
+
+    def layout_edges(self, df: DataFrame, key: str) -> DataFrame:
+        """An edge relation laid out by its gather ``key`` (the CSR
+        layout): the state's P hash blocks, sorted by ``key``, cached,
+        so the per-superstep merge join never shuffles or re-sorts it."""
+        return df.repartition(self.p, key).sortWithinPartitions(key).persist()
 
     def materialize(self, df: DataFrame, aggs: Aggs) -> tuple[DataFrame, dict]:
         """Lazy ``localCheckpoint`` of ``df`` plus the one action that

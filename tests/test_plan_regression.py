@@ -14,11 +14,13 @@ pre-AQE static strategy):
 2. Scan-heavy queries keep non-empty ``PushedFilters`` on a parquet
    scan — predicate pushdown must keep reaching the source.
 
-Eager ``localCheckpoint()`` calls truncate lineage, so a final-plan scan
+``localCheckpoint()`` calls truncate lineage, so a final-plan scan
 alone would miss anything upstream of a checkpoint (the round-2
 ``mutual_nn_pairs`` cross join hid exactly this way).  The fixture
-monkeypatches ``DataFrame.localCheckpoint`` to capture the explain of
-the PRE-checkpoint plan as well, so hidden stages are audited too.
+monkeypatches ``localCheckpoint`` on the concrete DataFrame class (it
+overrides the abstract ``pyspark.sql.DataFrame`` method, so patching
+the latter captures nothing) to capture the explain of the
+PRE-checkpoint plan as well, so hidden stages are audited too.
 
 Reference precedent for structural invariant tests: GraphJet's
 bipartite/MultiSegmentPowerLawBipartiteGraphTest.java:216-258.
@@ -58,7 +60,6 @@ SCALAR_CROSSJOIN_ALLOW = {
     "curriculum_buckets",  # operators/textstats.py:627 — 1-row thresholds
     "dsir_logratio",  # operators/textstats.py — 1-row smoothing scalars
     # + 1-row selection threshold
-    "hits_scores",  # plans/hits.py:82 — 1-row norm total per iteration
     # bounded-broadcast baseline (not scalar, but not n^2 either):
     "ann_topk_cosine",  # operators/ann.py:69 — broadcast side is the
     # fixed query-id set (|Q| rows); the scale paths are lsh/ivf_ann_topk
@@ -99,13 +100,14 @@ def all_plans(spark):
     """name -> concatenated explain output of the final plan AND every
     pre-localCheckpoint plan built while constructing it."""
     captured: list[str] = []
-    orig = DataFrame.localCheckpoint
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
 
     def spy(self, eager=True):
         captured.append(_explain(self))
         return orig(self, eager=eager)
 
-    DataFrame.localCheckpoint = spy
+    cls.localCheckpoint = spy
     plans: dict[str, str] = {}
     try:
         for name, fn in entry_mod.queries().items():
@@ -113,7 +115,7 @@ def all_plans(spark):
             df = fn(spark, SF_DIR)
             plans[name] = "\n".join(captured + [_explain(df)])
     finally:
-        DataFrame.localCheckpoint = orig
+        cls.localCheckpoint = orig
     return plans
 
 
@@ -130,12 +132,15 @@ def test_no_cartesian_or_nested_loop_joins(all_plans):
 
 
 def test_allowlist_is_tight(all_plans):
-    """Every allowlist entry still NEEDS allowlisting — stale entries
-    would quietly widen the budget for future regressions."""
+    """Every allowlist entry names a query and still NEEDS allowlisting
+    — stale entries would quietly widen the budget for future
+    regressions."""
+    unknown = sorted(SCALAR_CROSSJOIN_ALLOW - all_plans.keys())
+    assert not unknown, f"allowlisted but no such query (remove): {unknown}"
     stale = [
         name
         for name in SCALAR_CROSSJOIN_ALLOW
-        if name in all_plans and not any(m in all_plans[name] for m in BAD)
+        if not any(m in all_plans[name] for m in BAD)
     ]
     assert not stale, f"allowlisted but clean (remove): {stale}"
 

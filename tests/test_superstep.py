@@ -1,8 +1,9 @@
 """The co-partitioned superstep runner (plans/superstep.py): every
-superstep of PageRank (plain, teleport, weighted), CC and LP plans with
-exactly one shuffle and no broadcast, runs as one Spark job, matches
-the numpy mirrors of tools/mirror_check.py, and leaves the caller's
-session as it found it."""
+superstep of PageRank (plain, teleport, weighted), CC, LP, Katz,
+eigenvector, HITS and ANF plans with a fixed number of shuffles (one;
+two for HITS) and no broadcast, runs as one Spark job, matches the numpy
+mirrors of tools/mirror_check.py (or a power iteration here), and
+leaves the caller's session as it found it."""
 
 from __future__ import annotations
 
@@ -12,7 +13,10 @@ import re
 
 import numpy as np
 import pytest
+from graphjet_spark.plans.anf import anf_sketch_histogram
 from graphjet_spark.plans.components import connected_components
+from graphjet_spark.plans.hits import hits
+from graphjet_spark.plans.katz import eigenvector_centrality, katz
 from graphjet_spark.plans.labelprop import label_propagation
 from graphjet_spark.plans.pagerank import pagerank
 
@@ -65,6 +69,23 @@ def _ppr_ref(p, w=None, d=0.85):
     return r
 
 
+def _walk_sums_ref(src, dst, c=1.0, alpha=0.05):
+    """Katz (and, with c=0, alpha=1 over both directions, eigenvector)
+    centrality: x = c + alpha * A^T x from x = 1, L1-normalized."""
+    x = np.ones(len(UIDS))
+    for _ in range(ITERS):
+        x = c + alpha * np.bincount(dst, weights=x[src], minlength=len(UIDS))
+    return x / x.sum()
+
+
+def _hubs_ref():
+    h = np.ones(len(UIDS))
+    for _ in range(ITERS):
+        a = np.bincount(DSTI, weights=h[SRCI], minlength=len(UIDS))
+        h = np.bincount(SRCI, weights=a[DSTI], minlength=len(UIDS))
+    return h / h.sum()
+
+
 def _exchanges(plan: str) -> list[str]:
     """Exchange nodes of a physical plan string, skipping the build
     plans of cached relations (computed once, not per superstep)."""
@@ -107,13 +128,18 @@ def _weighted(spark):
     )
 
 
+# both orientations of every pair, deduplicated (PAIRS has no self-loops)
+SYM = sorted({(s, d) for s, d in zip(SRCI, DSTI)} | {(d, s) for s, d in zip(SRCI, DSTI)})
+SYM_SRC, SYM_DST = (np.array(x) for x in zip(*SYM))
+
 CASES = {
-    # name: (call, result column, expected values over UIDS, setup plans)
+    # name: (call, result column, expected values over UIDS or None,
+    #        setup plans, exchanges per superstep, plans after the loop)
     "pagerank": (
         lambda spark, **kw: pagerank(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
         "pagerank",
         lambda: mc.mirror_pagerank(UIDS, SRCI, DSTI, ITERS),
-        2,
+        2, 1, 0,
     ),
     "pagerank_teleport": (
         lambda spark, **kw: pagerank(
@@ -122,7 +148,7 @@ CASES = {
         ),
         "pagerank",
         lambda: _ppr_ref(np.where(UIDS == 0, 0.25, np.where(UIDS == 11, 0.75, 0.0))),
-        2,
+        2, 1, 0,
     ),
     "pagerank_weighted": (
         lambda spark, **kw: pagerank(
@@ -130,7 +156,7 @@ CASES = {
         ),
         "pagerank",
         lambda: _ppr_ref(np.full(len(UIDS), 1.0 / len(UIDS)), WEIGHTS),
-        2,
+        2, 1, 0,
     ),
     "components": (
         lambda spark, **kw: connected_components(
@@ -138,7 +164,7 @@ CASES = {
         ),
         "component",
         lambda: mc.mirror_cc(UIDS, SRCI, DSTI),
-        1,
+        1, 1, 0,
     ),
     "labelprop": (
         lambda spark, **kw: label_propagation(
@@ -146,7 +172,35 @@ CASES = {
         ),
         "label",
         lambda: mc.mirror_lp(UIDS, SRCI, DSTI, ITERS),
-        1,
+        1, 1, 0,
+    ),
+    "katz": (
+        lambda spark, **kw: katz(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
+        "katz",
+        lambda: _walk_sums_ref(SRCI, DSTI),
+        1, 1, 0,
+    ),
+    "eigenvector": (
+        lambda spark, **kw: eigenvector_centrality(
+            spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw
+        ),
+        "eigen",
+        lambda: _walk_sums_ref(SYM_SRC, SYM_DST, c=0.0, alpha=1.0),
+        1, 1, 0,
+    ),
+    # the final authority gather over the previous hubs is one more plan
+    "hits": (
+        lambda spark, **kw: hits(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
+        "hub",
+        _hubs_ref,
+        1, 2, 1,
+    ),
+    # histogram values: test_property_random_graphs' literal mirror
+    "anf": (
+        lambda spark, **kw: anf_sketch_histogram(spark, edges_df(spark, PAIRS), iters=ITERS, **kw),
+        "cnt",
+        None,
+        1, 1, 0,
     ),
 }
 
@@ -160,7 +214,7 @@ def test_reference_is_the_mirror():
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name):
-    call, col, want, setup = CASES[name]
+    call, col, want, setup, exchanges, tail = CASES[name]
     conf = {k: spark.conf.get(k) for k in CALLER_CONF}
     views = {t.name for t in spark.catalog.listTables("global_temp")}
 
@@ -171,17 +225,20 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
     assert result.sparkSession is spark
     assert {t.name for t in spark.catalog.listTables("global_temp")} == views
 
-    # plan shape: setup plans, then one plan per superstep with exactly
-    # one (non-broadcast) shuffle: the message aggregation
-    assert len(checkpointed) == setup + ITERS
+    # plan shape: setup plans, then one plan per superstep whose only
+    # (non-broadcast) shuffles are its message aggregations
+    assert len(checkpointed) == setup + ITERS + tail
     assert not any("BroadcastExchange" in p for p in checkpointed)
-    for plan in checkpointed[setup:]:
-        assert _exchanges(plan) == ["Exchange"], plan
+    for plan in checkpointed[setup : setup + ITERS]:
+        assert _exchanges(plan) == ["Exchange"] * exchanges, plan
 
     got = result.toPandas()
+    if want is None:
+        assert len(got) > 0
+        return
     arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), np.nan)
     assert err is None and len(got) == len(UIDS)
-    if col == "pagerank":
+    if got[col].dtype.kind == "f":
         np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
     else:
         assert (arr == want()).all()
@@ -192,7 +249,7 @@ def test_stats_cost_no_job(spark, name):
     """``stats=`` returns per-superstep metrics from the action each
     superstep runs anyway: the same job count as without it, and one
     job per superstep after a fixed setup."""
-    call, _, _, setup = CASES[name]
+    call, _, _, setup, _, _ = CASES[name]
     sc = spark.sparkContext
 
     def jobs(group, **kw):
@@ -231,7 +288,7 @@ def test_concurrent_callers_share_one_session(spark):
         futures = [pool.submit(lambda n=n: CASES[n][0](spark).toPandas()) for n in names]
         results = [f.result(timeout=300) for f in futures]
     for name, got in zip(names, results):
-        _, col, want, _ = CASES[name]
+        _, col, want, *_ = CASES[name]
         arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), np.nan)
         assert err is None and len(got) == len(UIDS)
         np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)

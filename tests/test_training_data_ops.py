@@ -1,12 +1,11 @@
 """Tests for the training-data pipeline operators: dedup families,
-similarity search, text analysis, multimodal plumbing."""
+similarity search, text analysis."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from graphjet_spark.operators import multimodal
 from graphjet_spark.operators.ann import (
     brute_force_topk,
     ivf_topk,
@@ -538,122 +537,6 @@ def test_winnowing_fingerprints_mirror(spark):
                 {min(kh[p : p + window]) for p in range(len(kh) - window + 1)}
             )
         assert got[i] == want, f"doc {i}: {got[i]} != {want}"
-
-
-# ------------------------------------------------------------- multimodal
-
-
-def test_png_codec_roundtrip_and_filters():
-    """encode_png -> decode_png is exact for RGB and RGBA; decode also
-    handles Sub/Up/Average/Paeth scanlines, checked against a literal
-    per-byte reference filterer applied at encode time."""
-    import struct
-    import zlib
-
-    rng = np.random.default_rng(11)
-    for h, w, c in [(5, 7, 3), (1, 1, 3), (9, 4, 4), (16, 16, 3)]:
-        img = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-        assert (multimodal.decode_png(multimodal.encode_png(img)) == img).all()
-
-    # hand-build a PNG whose rows use filters 1..4 (literal spec mirror)
-    h, w, c = 6, 5, 3
-    img = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-    flat = img.reshape(h, w * c).astype(int)
-    stride = w * c
-    scan = bytearray()
-    for y in range(h):
-        f = (y % 4) + 1
-        scan.append(f)
-        prev = flat[y - 1] if y else np.zeros(stride, int)
-        for x in range(stride):
-            a = flat[y][x - c] if x >= c else 0
-            b = prev[x]
-            cc = prev[x - c] if x >= c else 0
-            if f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-            scan.append((flat[y][x] - pred) & 0xFF)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + multimodal._png_chunk(b"IHDR", ihdr)
-        + multimodal._png_chunk(b"IDAT", zlib.compress(bytes(scan)))
-        + multimodal._png_chunk(b"IEND", b"")
-    )
-    assert (multimodal.decode_png(payload) == img).all()
-    # and the unified dispatcher handles PNG now
-    assert (multimodal.decode_image(payload) == img).all()
-
-
-def test_bmp_wav_codecs_roundtrip():
-    """The pure-numpy BMP/WAV codecs are exact inverses (including BMP
-    row padding and bottom-up order, WAV RIFF chunk walking)."""
-    rng = np.random.default_rng(3)
-    for h, w in [(5, 7), (1, 1), (16, 3)]:  # odd widths exercise padding
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (multimodal.decode_bmp(multimodal.encode_bmp(img)) == img).all()
-    x = (rng.standard_normal(1234) * 10000).astype(np.int16)
-    sr, back = multimodal.decode_wav(multimodal.encode_wav(x, 8000))
-    assert sr == 8000 and (back == x).all()
-    feats = multimodal.image_features(
-        rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    )
-    assert len(feats) == multimodal.FEATURE_DIM
-    af = multimodal.audio_features(16000, x)
-    assert len(af) == multimodal.FEATURE_DIM and np.isfinite(af).all()
-
-
-def test_multimodal_real_decode_features(spark):
-    """The default extract_features path REALLY decodes: BMP images and
-    PCM WAVs go through the numpy codecs; features are deterministic
-    and partition-independent; a known solid-color image produces the
-    analytically-expected channel means."""
-    media = multimodal.synth_media(spark, n=12)
-    feats = multimodal.extract_features(media)  # fake=False default
-    rows = {r["media_id"]: r["features"] for r in feats.collect()}
-    rows2 = {
-        r["media_id"]: r["features"]
-        for r in multimodal.extract_features(media.repartition(5)).collect()
-    }
-    assert rows == rows2
-    # hand-built solid red image: mean R=1, G=B=0, stds 0
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    img[:, :, 0] = 255
-    one = spark.createDataFrame(
-        [(99, "image", bytearray(multimodal.encode_bmp(img)),
-          {"width": 4, "height": 4, "sample_rate": None, "duration_ms": None})],
-        multimodal.MEDIA_SCHEMA,
-    )
-    f = multimodal.extract_features(one).collect()[0]["features"]
-    assert f[0] == pytest.approx(1.0) and f[1] == 0.0 and f[2] == 0.0
-    assert f[3] == 0.0  # std R of a solid color
-
-
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, n=24)
-    feats = multimodal.extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 24
-    assert all(len(r["features"]) == multimodal.FEATURE_DIM for r in rows)
-    # content-seeded: independent of partitioning
-    rows2 = multimodal.extract_features(media.repartition(5)).collect()
-    assert {r["media_id"]: r["features"] for r in rows} == {
-        r["media_id"]: r["features"] for r in rows2
-    }
-    # JPEG decode is the remaining honest stub (PNG decodes natively now)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0")
-    plan = multimodal.frame_sample_plan(media, every_ms=5000)
-    assert plan.count() > 0
-    rp = multimodal.resize_plan(media, max_side=64).collect()
-    assert all(max(r["target_width"], r["target_height"]) <= 64 for r in rp)
 
 
 def test_repetition_stats_mirror(spark):

@@ -119,7 +119,7 @@ def main() -> None:
         "",
         "Python stages appear only where the operator is intrinsically",
         "vectorized-Python (Arrow batch kernels: minhash signatures,",
-        "language-ID profiles, multimodal codecs) — never in relational",
+        "language-ID profiles) — never in relational",
         "hot paths.  Codegen ids only surface in non-AQE plans here",
         "(`AdaptiveSparkPlan isFinalPlan=false` assigns them at run",
         "time), so their absence in an AQE query row is a printing",
