@@ -8,10 +8,14 @@ pairs; hashtag text -> long id at :154).  Our payload is an HTML page
 instead of a tweet, per BASELINE.json input_hint.
 
 Contract (input_hint): extraction is **byte-identical per url** to the
-pinned pure-Python oracle — the same kernels below are the oracle (they
-are pure pandas/numpy, runnable without Spark) and the engine (wrapped
-in ``mapInPandas`` by plans.build_edges).  No per-row Python: every
-kernel is a pandas C-level string op over Arrow record batches.
+pinned pure-Python oracle.  For links and anchors the kernels below ARE
+that oracle (pure pandas/numpy, runnable without Spark); the engine runs
+their JVM Column twins (``plans/build_edges.extract_link_rows``,
+``extract_anchor_rows``, ``canonical_url_expr``), with no Python worker,
+and the tests compare the two.  ``extract_text`` is both oracle and
+engine: ``extract_text_table`` wraps it in ``mapInPandas``.  No per-row
+Python in the text path: it is pandas C-level string ops over Arrow
+record batches.
 """
 
 from __future__ import annotations

@@ -6,14 +6,20 @@ TwitterStreamReader.java:129-160 -> bipartite/
 LeftIndexedMultiSegmentBipartiteGraph.java:144-158), re-expressed as one
 declarative Spark plan:
 
-    pages ──mapInPandas(extract_links)──> raw link rows
+    pages ──regexp_extract_all + explode──> raw link rows
           ──xxhash64(url)──> (src, dst, src_url, dst_url, warc_ts, edge_type)
 
 Scale notes (100 TB design):
-- extraction is a ``mapInPandas`` Arrow stage: NARROW (no shuffle) —
-  each page partition explodes to link rows in place; output partition
-  count = input partition count, so partition sizing is controlled
-  upstream by ``spark.sql.files.maxPartitionBytes`` on the pages scan.
+- extraction is one JVM Column plan (decode, regexp_extract_all,
+  explode, regexp canonicalization): no Python worker, no Arrow
+  round trip, and NARROW (no shuffle) — each page partition explodes
+  to link rows in place; output partition count = input partition
+  count, so partition sizing is controlled upstream by
+  ``spark.sql.files.maxPartitionBytes`` on the pages scan.  The
+  pure-pandas kernels in ``functions/webtext.py`` are its oracle.
+- per-page work (canonical ``src_url``, the base origin, the href
+  array) is projected BEFORE the explode, so it runs once per page,
+  not once per link.
 - only (url, html, warc_ts) are read — column pruning drops text/lang
   at the scan (verified in tests via the physical plan's ReadSchema).
 - ids are ``xxhash64(url)`` computed JVM-side (whole-stage codegen), not
@@ -30,74 +36,60 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from graphjet_spark.functions import webtext
 
-_LINKS_SCHEMA = StructType(
-    [
-        StructField("src_url", StringType()),
-        StructField("dst_url", StringType()),
-        StructField("warc_ts", TimestampType()),
-    ]
+# ``str.strip()`` strips every ``str.isspace()`` character, not just
+# the spaces ``F.trim`` drops; ``btrim`` over this set matches it.
+_WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002"
+    "\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f"
+    "\u205f\u3000"
 )
+_SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
+_ORIGIN = r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)"
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        links = webtext.extract_links(pdf["html"], pdf["url"])
-        if links.empty:
-            continue
-        idx = links["page_idx"].to_numpy()
-        yield pd.DataFrame(
-            {
-                "src_url": webtext.canonicalize_url(
-                    pdf["url"].iloc[idx].reset_index(drop=True)
-                ),
-                "dst_url": links["dst_url"].to_numpy(),
-                "warc_ts": pdf["warc_ts"].iloc[idx].to_numpy(),
-            }
-        )
+def _link_rows(pages: DataFrame, items: Column, href: str, *out) -> DataFrame:
+    """Shared href resolution of both extractors, keeping link rows and
+    anchor rows byte-identical by construction.
+
+    Per page: canonical ``src_url``, the base url's ``scheme://host``
+    (null, not ``regexp_extract``'s ``""``, for a scheme-less base — so
+    its relative hrefs get a null ``dst_url``, as the oracle's do) and
+    ``_t``, the html decoded as UTF-8 (malformed bytes raise).  Per
+    element ``_l`` of the array ``items`` (an expression over ``_t``;
+    ``href`` names the element's href): absolute hrefs pass through,
+    others join the origin, then canonicalize.  Returns ``src_url``,
+    ``dst_url`` and ``out``.
+
+    ``items`` is evaluated inside the explode: exploding a projected
+    array attribute instead lets the optimizer infer a non-empty-array
+    filter and push it below the projection, running the regexps twice
+    per page."""
+    url = F.col("url")
+    per_page = pages.select(
+        "*",
+        canonical_url_expr(url).alias("src_url"),
+        F.when(url.rlike(_ORIGIN), F.regexp_extract(url, _ORIGIN, 1)).alias(
+            "_origin"
+        ),
+        F.decode("html", "UTF-8").alias("_t"),
+    )
+    h = F.col(href)
+    dst = F.when(h.rlike(_SCHEME), h).otherwise(F.concat("_origin", h))
+    return per_page.select("*", F.explode(items).alias("_l")).select(
+        "src_url", canonical_url_expr(dst).alias("dst_url"), *out
+    )
 
 
 def extract_link_rows(pages: DataFrame) -> DataFrame:
     """pages -> one row per href occurrence (duplicates preserved)."""
-    return pages.select("url", "html", "warc_ts").mapInPandas(
-        _extract_batches, schema=_LINKS_SCHEMA
-    )
-
-
-_ANCHOR_SCHEMA = StructType(
-    [
-        StructField("src_url", StringType()),
-        StructField("dst_url", StringType()),
-        StructField("anchor", StringType()),
-    ]
-)
-
-
-def _anchor_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        pairs = webtext.extract_anchors(pdf["html"], pdf["url"])
-        if pairs.empty:
-            continue
-        idx = pairs["page_idx"].to_numpy()
-        yield pd.DataFrame(
-            {
-                "src_url": webtext.canonicalize_url(
-                    pdf["url"].iloc[idx].reset_index(drop=True)
-                ),
-                "dst_url": pairs["dst_url"].to_numpy(),
-                "anchor": pairs["anchor"].to_numpy(),
-            }
-        )
+    hrefs = F.regexp_extract_all("_t", F.lit(webtext._HREF_RE), 1)
+    return _link_rows(pages.select("url", "html", "warc_ts"), hrefs, "_l", "warc_ts")
 
 
 def extract_anchor_rows(pages: DataFrame) -> DataFrame:
@@ -105,10 +97,14 @@ def extract_anchor_rows(pages: DataFrame) -> DataFrame:
 
     The anchor-text channel of the link extractor: same href resolution
     and canonicalization as :func:`extract_link_rows`, carrying the
-    link's inner text.  Narrow Arrow stage, duplicates preserved."""
-    return pages.select("url", "html").mapInPandas(
-        _anchor_batches, schema=_ANCHOR_SCHEMA
+    link's inner text.  Narrow JVM stage, duplicates preserved."""
+    rx = F.lit(webtext._ANCHOR_RE)
+    pairs = F.arrays_zip(
+        F.regexp_extract_all("_t", rx, 1).alias("href"),
+        F.regexp_extract_all("_t", rx, 2).alias("anchor"),
     )
+    anchor = F.col("_l.anchor").alias("anchor")
+    return _link_rows(pages.select("url", "html"), pairs, "_l.href", anchor)
 
 
 def anchor_text_summary(anchor_rows: DataFrame) -> DataFrame:
@@ -270,13 +266,14 @@ def canonical_url_expr(url):
     trailing slash on non-root paths.  Pure regexp projection — runs at
     scan rate inside whole-stage codegen, so URL-keyed operators never
     pay an Arrow round trip for canonicalization."""
-    u = F.regexp_replace(F.trim(url), r"#.*$", "")
-    origin = r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)"
-    u = F.concat(
-        F.lower(F.regexp_extract(u, origin, 1)),
-        F.regexp_replace(u, origin, ""),
-    )
-    return F.regexp_replace(u, r"(?<=[^/])/$", "")
+    # (?d) (UNIX_LINES): Java's ``.``/``$`` otherwise also stop at
+    # \r, \x85, \u2028 and \u2029; Python's stop at \n only
+    u = F.regexp_replace(F.btrim(url, F.lit(_WS)), r"(?d)#.*$", "")
+    # the oracle lowercases only when ``^origin(.*)$`` matches the whole
+    # string; no match extracts "" and leaves ``u`` as it is
+    origin = F.regexp_extract(u, "(?d)" + _ORIGIN + ".*$", 1)
+    u = F.concat(F.lower(origin), F.substr(u, F.length(origin) + 1))
+    return F.regexp_replace(u, r"(?d)(?<=[^/])/$", "")
 
 
 def latest_capture(pages: DataFrame) -> DataFrame:

@@ -105,9 +105,14 @@ class QueryServer:
                         self._send(404, {"error": f"unknown query {name!r}"})
                         return
                     qs = parse_qs(url.query)
-                    limit = min(
-                        int(qs.get("limit", ["100"])[0]), outer._max_limit
-                    )
+                    try:
+                        limit = int(qs.get("limit", ["100"])[0])
+                    except ValueError:
+                        limit = -1
+                    if limit < 0:
+                        self._send(400, {"error": "limit must be an integer >= 0"})
+                        return
+                    limit = min(limit, outer._max_limit)
                     fresh = qs.get("fresh", ["0"])[0] == "1"
                     try:
                         rows, built_at = outer._rows_for(name, fn, fresh)

@@ -14,7 +14,8 @@ module provides the genuine streaming form for parity:
   (new parquet files = arriving crawl batches);
 - ``edge_stream``: the SAME extraction stage as the batch path
   (plans/build_edges.extract_link_rows works unchanged on a streaming
-  DataFrame — mapInPandas is streaming-compatible);
+  DataFrame — it is one JVM Column plan, so a microbatch never ships
+  its pages to a Python worker);
 - ``write_edge_segments``: append sink partitioned by ``segment``
   (ingest-time bucket) — one partition dir per GraphJet segment;
 - ``expire_segments``: drop-oldest retention (keep last k segment

@@ -1,11 +1,14 @@
 """Layer-1 tests (SURVEY.md §5.2): pages corpus -> edge table build.
 
-The extraction invariant (BASELINE.json input_hint): engine-side Arrow-UDF
-extraction must be byte-identical per url to the corpus ground truth.
+The extraction invariant (BASELINE.json input_hint): engine-side
+extraction must be byte-identical per url to the pure-pandas oracle in
+``functions/webtext.py``.  Link and anchor extraction are one JVM
+Column plan (no Python worker); text extraction is an Arrow UDF.
 Edge build is checked by exact set equality against the synthesizer's
 closed-form link set — the GraphJet-style golden-output discipline
 (reference: graphjet-core/src/test/java/com/twitter/graphjet/algorithms/
-BipartiteGraphTestHelper.java:75-95).
+BipartiteGraphTestHelper.java:75-95) — and against the oracle on an
+edge-case battery.
 """
 
 from __future__ import annotations
@@ -223,13 +226,17 @@ def test_host_graph_matches_ground_truth_fold(corpus):
 
 def test_canonical_url_expr_parity(spark):
     """The JVM Column canonicalizer must stay byte-identical to the
-    pandas/Arrow one used inside the extraction UDFs — a drift here
-    would silently split a URL's captures across two canonical keys."""
+    pandas oracle — a drift here would silently split a URL's captures
+    across two canonical keys.  Java's ``trim`` strips spaces only and
+    its ``.``/``$`` stop at \\r, \\x85, \\u2028 and \\u2029; Python's do
+    neither."""
     from pyspark.sql import functions as F
 
     from graphjet_spark.functions.webtext import canonicalize_url
     from graphjet_spark.plans.build_edges import canonical_url_expr
 
+    # every str.isspace() character (str.strip strips them all)
+    ws = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
     battery = [
         "http://Example.COM/Path/Page.html",
         "https://site.org/a/b/#frag",
@@ -242,6 +249,22 @@ def test_canonical_url_expr_parity(spark):
         "no-scheme/relative/path/",
         "http://example.com/a//b//",
         "http://example.com/#",
+        "\thttp://Tab.example/x/\t",
+        "\nhttp://nl.example/x/\n",
+        "\xa0http://NBSP.example/A/\xa0",
+        "\x85http://nel.example/B/\x85",
+        "\u3000http://ideo.example/C/\u3000",
+        ws + "http://All.example/D/" + ws,
+        "http://frag.example/p#a\rb",
+        "http://frag.example/p#a\x85b/",
+        "http://frag.example/p#a\u2028b",
+        "http://Host.COM/a\nb",
+        "http://Host.COM/a/\r",
+        "http://Host.COM/a/\n#x",
+        "http://ÜBER.Example.DE/Straße/",
+        "http://ΟΔΟΣ.GR/",
+        "",
+        "   ",
     ]
     want = canonicalize_url(pd.Series(battery)).tolist()
     got = [
@@ -251,6 +274,127 @@ def test_canonical_url_expr_parity(spark):
         .collect()
     ]
     assert got == want
+
+
+def _none(v):
+    return None if v is None or (isinstance(v, float) and math.isnan(v)) else v
+
+
+def _multiset(rows):
+    return sorted(
+        (tuple(_none(v) for v in r) for r in rows),
+        key=lambda t: tuple((v is None, v or "") for v in t),
+    )
+
+
+def _battery_pages(spark):
+    """Edge cases the synthesizer never emits: relative/absolute/empty/
+    fragment/duplicate hrefs, a scheme-less and a null base url, null
+    and empty html, a page with no links, uppercase (non-ASCII) hosts,
+    and the whitespace and line-terminator spellings Java and Python
+    regexes treat differently."""
+    import datetime as dt
+
+    rows = [
+        ("http://A.com/x/",
+         '<a href="/rel">R</a><a href="http://B.com/abs/">Abs</a><a href="/rel">R</a>'),
+        ("noscheme/page", '<a href="/rel">R</a><a href="http://C.com/">C</a>'),
+        (None, '<a href="/rel">R</a><a href="http://D.com/">D</a>'),
+        ("http://nullhtml.com/", None),
+        ("http://empty.com/", ""),
+        ("http://nolinks.com/", "<p>no links here</p>"),
+        ("http://e.com/",
+         '<a href="">E</a><a href="#">H</a><link href="/css"><a href=" /ws ">W</a>'),
+        ("http://ÜBER.com/p",
+         '<a href="HTTP://ÄÖ.COM/Q/">U</a><a href="/\tx\n">T</a><a href="/a#b\rc">F</a>'),
+        ("\u3000http://Ws.com/y\xa0",
+         '<a href="/z/\x85">N</a><a href="/q\n#r">Q</a><a href="/s/\u2029">S</a>'),
+    ]
+    ts = dt.datetime(2024, 1, 1)
+    pdf = pd.DataFrame(
+        [(u, None if h is None else h.encode(), ts) for u, h in rows],
+        columns=["url", "html", "warc_ts"],
+    )
+    schema = "url string, html binary, warc_ts timestamp"
+    return pdf, spark.createDataFrame(pdf.astype(object), schema)
+
+
+def test_link_and_anchor_rows_match_oracle_on_edge_cases(spark):
+    """The Column-plan extractors equal the webtext oracle as multisets;
+    a scheme-less base gives a null dst_url for its relative hrefs."""
+    from graphjet_spark.functions import webtext
+    from graphjet_spark.plans.build_edges import (
+        extract_anchor_rows,
+        extract_link_rows,
+    )
+
+    pdf, pages = _battery_pages(spark)
+
+    def src(idx):
+        return webtext.canonicalize_url(pdf["url"].iloc[idx].reset_index(drop=True))
+
+    links = webtext.extract_links(pdf["html"], pdf["url"])
+    want = zip(src(links["page_idx"]), links["dst_url"])
+    got = extract_link_rows(pages).select("src_url", "dst_url").collect()
+    assert _multiset(got) == _multiset(want)
+    assert ("noscheme/page", None) in _multiset(got)
+    assert (None, None) in _multiset(got)
+
+    anchors = webtext.extract_anchors(pdf["html"], pdf["url"])
+    want = zip(src(anchors["page_idx"]), anchors["dst_url"], anchors["anchor"])
+    assert _multiset(extract_anchor_rows(pages).collect()) == _multiset(want)
+
+
+def test_invalid_utf8_page_raises(spark):
+    """Malformed html bytes fail the extraction, as the oracle's decode
+    does, rather than yielding replacement-character links."""
+    from graphjet_spark.functions import webtext
+    from graphjet_spark.plans.build_edges import extract_link_rows
+
+    html = b'<a href="/x\xff">bad</a>'
+    with pytest.raises(UnicodeDecodeError):
+        webtext.extract_links(pd.Series([html]), pd.Series(["http://a.com/"]))
+    pages = spark.createDataFrame(
+        [("http://a.com/", bytearray(html), None)],
+        "url string, html binary, warc_ts timestamp",
+    )
+    with pytest.raises(Exception, match="MALFORMED_CHARACTER_CODING"):
+        extract_link_rows(pages).collect()
+
+
+_PYTHON_NODES = ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_extraction_plans_have_no_python_nodes(corpus, tmp_path):
+    """Link and anchor extraction run in the JVM: no executed plan of
+    the batch edge build, the anchor rows or the streaming ingest holds
+    a Python node."""
+    from graphjet_spark.plans.build_edges import extract_anchor_rows
+    from graphjet_spark.streaming import ingest
+
+    pdf, _, pages = corpus
+    spark = pages.sparkSession
+    for df in (build_edges(pages), extract_anchor_rows(pages)):
+        df.count()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
+
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(pdf.iloc[:50]).coalesce(1).write.parquet(pages_dir)
+    q = (
+        ingest.edge_stream(ingest.stream_pages(spark, pages_dir))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert "Generate" in plan
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
 
 
 def test_latest_capture_newest_wins(spark, corpus):

@@ -77,3 +77,25 @@ def test_query_server_materialized_read_path(spark):
         assert fresh["materialized_at"] >= first["materialized_at"]
     finally:
         srv.stop()
+
+
+def test_query_server_rejects_bad_limit(spark):
+    """A malformed ``limit`` is a 400 with a JSON error, not a dropped
+    connection; ``limit=0`` is valid and returns no rows."""
+    srv = QueryServer(spark, SF, registry={"r": lambda s, _: s.range(3)}).start()
+    try:
+        for bad in ("abc", "-1", "1.5", "1e3"):
+            try:
+                urllib.request.urlopen(
+                    f"http://127.0.0.1:{srv.port}/query/r?limit={bad}"
+                )
+                raise AssertionError(f"expected 400 for limit={bad!r}")
+            except urllib.error.HTTPError as e:
+                assert e.code == 400
+                assert "limit" in json.loads(e.read())["error"]
+        status, got = _get(srv.port, "/query/r?limit=0")
+        assert status == 200 and got["n"] == 0 and got["rows"] == []
+        status, got = _get(srv.port, "/query/r?limit=2")
+        assert got["rows"] == [{"id": 0}, {"id": 1}]
+    finally:
+        srv.stop()
