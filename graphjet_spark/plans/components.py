@@ -13,9 +13,10 @@ mega-hub vertices from concentrating rows.
 
 from __future__ import annotations
 
-import time
+import functools
+import operator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.checkpoints import CheckpointManager
@@ -84,7 +85,7 @@ def connected_components(
             iters=fixed_iters if fixed_iters is not None else max_iter,
             keep=["id", "comp"],
             aggs={"changed": (F.count_if(F.col("comp") != F.col("prev")), sum)},
-            done=None if fixed_iters is not None else lambda s: s["changed"] == 0,
+            done=None if fixed_iters is not None else lambda s, _: s["changed"] == 0,
         )
         sym.unpersist()
         return run.export(labels.select("id", F.col("comp").alias("component")))
@@ -93,20 +94,36 @@ def connected_components(
 # ------------------------------------------------- large-star / small-star
 
 
+def _xor(values: list) -> int:
+    return functools.reduce(operator.xor, values, 0)
+
+
+def _adjacency(pairs: DataFrame) -> DataFrame:
+    """Both orientations ``(a, b)`` of every ``(id, v)`` pair.  Each
+    star round reads its input once and takes the per-vertex minimum
+    with a window, not a groupBy joined back: the runner plans without
+    adaptive execution, where a subtree referenced twice is computed
+    twice, and the two rounds of one superstep compound that into
+    dozens of exchanges."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id").alias("a"), F.col("v").alias("b")),
+                F.struct(F.col("v").alias("a"), F.col("id").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.*")
+
+
 def _large_star(pairs: DataFrame) -> DataFrame:
     """Large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14): every node links its strictly
     larger neighbors to the minimum of its closed neighborhood."""
-    adj = (
-        pairs.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(pairs.select(F.col("v").alias("a"), F.col("u").alias("b")))
-    )
-    mins = adj.groupBy("a").agg(F.min("b").alias("mn"))
     return (
-        adj.join(mins, "a")
-        .withColumn("m", F.least("mn", "a"))
+        _adjacency(pairs)
+        .withColumn("m", F.least(F.min("b").over(Window.partitionBy("a")), F.col("a")))
         .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("u"), F.col("m").alias("v"))
+        .select(F.col("b").alias("id"), F.col("m").alias("v"))
         .distinct()
     )
 
@@ -114,18 +131,23 @@ def _large_star(pairs: DataFrame) -> DataFrame:
 def _small_star(pairs: DataFrame) -> DataFrame:
     """Small-star round: every node links its smaller neighbors (and
     itself) to its minimum smaller neighbor.  Input/output pairs are
-    normalized u > v."""
-    adj = (
-        pairs.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(pairs.select(F.col("v").alias("a"), F.col("u").alias("b")))
+    normalized id > v."""
+    j = (
+        _adjacency(pairs)
         .filter(F.col("b") < F.col("a"))
+        .withColumn("mn", F.min("b").over(Window.partitionBy("a")))
     )
-    mins = adj.groupBy("a").agg(F.min("b").alias("mn"))
-    j = adj.join(mins, "a")
+    own = F.struct(F.col("a").alias("id"), F.col("mn").alias("v"))
+    other = F.struct(F.col("b").alias("id"), F.col("mn").alias("v"))
     return (
-        j.filter(F.col("b") != F.col("mn"))
-        .select(F.col("b").alias("u"), F.col("mn").alias("v"))
-        .union(j.select(F.col("a").alias("u"), F.col("mn").alias("v")))
+        j.select(
+            F.explode(
+                F.when(F.col("b") != F.col("mn"), F.array(own, other)).otherwise(
+                    F.array(own)
+                )
+            ).alias("e")
+        )
+        .select("e.*")
         .distinct()
     )
 
@@ -147,78 +169,49 @@ def connected_components_star(
     per round.  The per-round edge set only ever shrinks toward one
     star per component, so late rounds are nearly free.
 
-    Same checkpoint/resume contract as the other supersteps: each round
-    commits the (u, v) pair state + metrics; an interrupted run resumes
-    from the last committed round.  ``stats`` (optional dict) receives
-    {"rounds": ...} for round-count assertions.
+    Runs on :class:`~graphjet_spark.plans.superstep.SuperstepRunner`:
+    the state is the star pairs ``(id, v)`` (``id`` > ``v``), one
+    superstep is a large-star then a small-star round, and the loop
+    stops once ``(rows, bit_xor(xxhash64(id, v)))`` repeats (an
+    order-independent checksum that never overflows).  Checkpoint,
+    resume and ``stats`` (``stats["supersteps"]``) are the runner's.
     """
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    pairs = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+
+    h = {"h": (F.coalesce(F.expr("bit_xor(xxhash64(id, v))"), F.lit(0)), _xor)}
+    with SuperstepRunner(
+        spark, "connected_components_star", partitions, checkpoint, stats
+    ) as run:
+        # the input may be an expensive un-materialized plan (e.g. a
+        # near-dup pair pipeline): the runner's first action computes
+        # it once, and nothing after it reads the input again
+        pairs = run.run(
+            lambda: run.layout(
+                run.adopt(edges)
+                .select("src", "dst")
+                .where(F.col("src") != F.col("dst"))
+                .select(
+                    F.greatest("src", "dst").alias("id"),
+                    F.least("src", "dst").alias("v"),
+                )
+                .distinct()
+            ),
+            lambda st, _sc: _small_star(_large_star(st)),
+            iters=max_rounds,
+            keep=["id", "v"],
+            aggs=h,
+            start_aggs=h,
+            done=lambda s, p: (s["rows"], s["h"]) == (p["rows"], p["h"]),
         )
-        .distinct()
-        .repartition(partitions, "u")
-        .localCheckpoint(eager=True)
-    )
-    # vertices derive from the CHECKPOINTED pairs, not the raw input:
-    # the input may be an expensive un-materialized plan (e.g. a
-    # near-dup pair pipeline) and must be computed exactly once
-    vertices = (
-        pairs.select(F.col("u").alias("id"))
-        .union(pairs.select(F.col("v").alias("id")))
-        .distinct()
-        .persist()
-    )
-
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_round = last
-            pairs = checkpoint.read_state(spark, last).select("u", "v")
-
-    prev_sig = None
-    rounds_run = start_round
-    for rnd in range(start_round, max_rounds):
-        t0 = time.time()
-        new = _small_star(_large_star(pairs)).localCheckpoint(eager=False)
-        # fixed-point signature: count + order-independent XOR checksum
-        # (bit_xor never overflows, unlike a sum of 64-bit hashes)
-        sig_row = new.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["cnt"], sig_row["h"])
-        pairs = new
-        rounds_run = rnd + 1
-        if checkpoint is not None:
-            metrics = {
-                "algo": "connected_components_star",
-                "rows": sig[0],
-                "elapsed_s": time.time() - t0,
-            }
-            committed = checkpoint.commit_state(rnd + 1, pairs, metrics)
-            pairs = spark.read.parquet(committed)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    if stats is not None:
-        stats["rounds"] = rounds_run
-
-    # converged: pairs is one star per component (u -> component min);
-    # roots and isolated vertices label themselves
-    labels = (
-        vertices.join(pairs, vertices.id == pairs.u, "left")
-        .select("id", F.coalesce("v", F.col("id")).alias("component"))
-    )
-    vertices.unpersist()
-    return labels
+        # both star rounds keep every non-isolated vertex in some pair,
+        # so the pairs' endpoints are the vertex set; converged, pairs
+        # is one star per component (id -> component min), and roots
+        # label themselves
+        vertices = pairs.select("id").union(pairs.select(F.col("v").alias("id"))).distinct()
+        return run.export(
+            vertices.join(pairs, "id", "left").select(
+                "id", F.coalesce("v", F.col("id")).alias("component")
+            )
+        )
 
 
 def connected_components_delta(

@@ -209,7 +209,7 @@ def pagerank(
                 "delta_l1": (F.sum(delta), sum),
             },
             start_aggs=dm_agg,
-            done=None if fixed_iters is not None else lambda s: s["delta_linf"] < tol,
+            done=None if fixed_iters is not None else lambda s, _: s["delta_linf"] < tol,
         )
         links.unpersist()
         return run.export(ranks.select("id", F.col("rank").alias("pagerank")))

@@ -21,8 +21,13 @@ Algorithm: Trim + forward-min coloring + same-color backward sweep
 4. Remove captured SCCs; repeat.  The minimum remaining vertex is
    always a root, so every round captures at least one SCC.
 
-State per superstep is the narrow ``(id, color)`` relation; all joins
-shuffle only state against the once-partitioned remaining edge table;
+One outer round is one superstep of
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  Its state is
+``(id, scc, final)`` over every vertex: ``final=1`` once the vertex's
+SCC is captured, else ``final=0`` and ``scc = id``; the loop stops when
+no vertex is left at ``final=0``.  The trim, coloring and backward
+sweep fixpoints run inside the step over the narrow ``(id, color)``
+relation and the remaining edges, partitioned once per round;
 min-aggregations get map-side combine.  Output ``(id, scc)`` with
 ``scc`` = min vertex id of the component (matching the CC label
 convention, property-tested vs a literal Tarjan mirror).
@@ -30,8 +35,13 @@ convention, property-tested vs a literal Tarjan mirror).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def strongly_connected_components(
@@ -40,230 +50,204 @@ def strongly_connected_components(
     *,
     max_rounds: int = 30,
     partitions: int | None = None,
-    checkpoint: "CheckpointManager | None" = None,
+    checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
-    """Returns ``(id, scc)``; ``scc`` = min vertex id in the SCC.
+    """Returns ``(id, scc)`` with one row per vertex; ``scc`` = min
+    vertex id in the SCC.  Vertices still unresolved after
+    ``max_rounds`` outer rounds keep their own id (as unconverged
+    hash-min CC labels do).
 
-    With ``checkpoint``, each outer round commits one encoded state
-    table ``(id, scc, final)`` — captured SCCs carry ``final=1``, the
-    remaining frontier ``final=0`` — with per-partition lineage rows;
-    a resumed run reloads the last committed round and continues (the
-    decomposition is deterministic, so the result is identical to an
-    uninterrupted run — resume-equality tested)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(partitions, "src")
-        .localCheckpoint(eager=True)
-    )
-    remaining = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # vertices appearing only in self-loops are singleton SCCs too
-    self_only = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(remaining, "id", "left_anti")
-    )
-    done = [self_only.select("id", F.col("id").alias("scc"))]
-
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            st = checkpoint.read_state(spark, last)
-            done = [
-                st.where(F.col("final") == 1).select("id", "scc")
-            ]
-            remaining = (
-                st.where(F.col("final") == 0)
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            start_round = last
-
-    def _commit(round_idx: int) -> None:
-        if checkpoint is None:
-            return
-        acc = done[0]
-        for d in done[1:]:
-            acc = acc.unionByName(d)
-        st = acc.select("id", "scc", F.lit(1).alias("final")).unionByName(
-            remaining.select(
-                "id", F.col("id").alias("scc"), F.lit(0).alias("final")
-            )
-        )
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            round_idx,
-            st,
-            {
-                "algo": "scc",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        re = spark.read.parquet(committed)
-        done[:] = [re.where(F.col("final") == 1).select("id", "scc")]
-
-    for _round in range(start_round, max_rounds):
-        if remaining.limit(1).count() == 0:
-            break
-        er = (
-            e.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
+    With ``checkpoint``, each outer round commits the state table with
+    per-partition lineage rows, and a resumed run continues from the
+    last committed round (the decomposition is deterministic, so the
+    result is identical to an uninterrupted run — resume-equality
+    tested)."""
+    remaining_agg = {"remaining": (F.count_if(F.col("final") == 0), sum)}
+    with SuperstepRunner(spark, "scc", partitions, checkpoint) as run:
+        e = run.layout_edges(
+            run.adopt(edges)
+            .select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            "src",
         )
 
-        # --- 1. trim TO FIXPOINT: zero in-/out-degree => singleton ---
-        # DAG-dominated web graphs shed most mass here; peeling all
-        # layers inside one outer round avoids rebuilding + re-sorting
-        # the edge table once per layer (the sort is deferred to the
-        # coloring phase below, which is the only SMJ consumer)
-        while True:
-            # vertices with BOTH an out- and an in-edge, in ONE shuffle
-            # (map-side-combined max flags) instead of two distincts +
-            # a semi join
-            both = (
-                er.select(
-                    F.col("src").alias("id"),
-                    F.lit(1).alias("s"),
-                    F.lit(0).alias("d"),
-                )
-                .union(
-                    er.select(
-                        F.col("dst").alias("id"),
-                        F.lit(0).alias("s"),
-                        F.lit(1).alias("d"),
-                    )
-                )
-                .groupBy("id")
-                .agg(F.max("s").alias("s"), F.max("d").alias("d"))
-                .where((F.col("s") == 1) & (F.col("d") == 1))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            trimmed = remaining.join(both, "id", "left_anti")
-            if trimmed.limit(1).count() == 0:
-                break
-            done.append(trimmed.select("id", F.col("id").alias("scc")))
-            remaining = both
-            er = (
-                er.join(
-                    both.withColumnRenamed("id", "src"), "src", "left_semi"
-                )
-                .join(
-                    both.withColumnRenamed("id", "dst"), "dst", "left_semi"
-                )
-                .localCheckpoint(eager=True)
-            )
-        if remaining.limit(1).count() == 0:
-            _commit(_round + 1)
-            break
-
-        # src-partitioned + sorted once (CSR layout): the coloring
-        # fixpoint's per-iteration SMJ never re-sorts the edge side
-        er = (
-            er.repartition(partitions, "src")
-            .sortWithinPartitions("src")
-            .localCheckpoint(eager=True)
-        )
-
-        # --- 2. forward-min coloring to fixpoint ---------------------
-        # DELTA propagation: min is monotone, so a vertex whose color
-        # did not change last iteration has already delivered its
-        # contribution — only the changed frontier needs to send.
-        # Message volume collapses after the first hops (the edge-side
-        # scan stays, but the shuffle/groupBy runs over frontier-edge
-        # messages, not all edges every iteration).  prev rides along
-        # as a column so the frontier is a predicate over the
-        # just-checkpointed relation — no per-iteration self-join.
-        colors = remaining.select(
-            "id", F.col("id").alias("color")
-        ).localCheckpoint(eager=True)
-        frontier = colors
-        while True:
-            incoming = (
-                er.join(frontier.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.min("color").alias("mn"))
-            )
-            new_colors = (
-                colors.join(incoming, colors.id == incoming.dst, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("color"), F.coalesce("mn", F.col("color"))
-                    ).alias("color"),
-                    F.col("color").alias("prev"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            frontier = new_colors.where(
-                F.col("color") != F.col("prev")
-            ).select("id", "color")
-            colors = new_colors.select("id", "color")
-            if frontier.limit(1).count() == 0:
-                break
-
-        # --- 3. backward sweep within each color ---------------------
-        member = colors.where(F.col("color") == F.col("id")).select(
-            "id", "color"
-        )
-        member = member.localCheckpoint(eager=True)
-        ce = (
-            er.join(colors.withColumnRenamed("id", "src")
-                    .withColumnRenamed("color", "csrc"), "src")
-            .join(colors.withColumnRenamed("id", "dst")
-                  .withColumnRenamed("color", "cdst"), "dst")
-            .where(F.col("csrc") == F.col("cdst"))
-            .select("src", "dst", F.col("csrc").alias("color"))
-            # gather key of the sweep is (dst, color): partition + sort
-            # once so each BFS hop re-sorts only the small frontier
-            .repartition(partitions, "dst", "color")
-            .sortWithinPartitions("dst", "color")
-            .localCheckpoint(eager=True)
-        )
-        # frontier BFS: each hop gathers predecessors of the NEWLY
-        # captured vertices only (not the whole member set) — total
-        # gather work is each same-color edge once, not once per hop
-        frontier = member
-        while True:
-            grown = (
-                ce.join(
-                    frontier.withColumnRenamed("id", "dst"),
-                    ["dst", "color"],
-                    "left_semi",
-                )
-                .select(F.col("src").alias("id"), "color")
+        def initial() -> DataFrame:
+            # vertices appearing only in self-loops are trimmed as
+            # singleton SCCs in the first round
+            raw = run.adopt(edges)
+            ids = (
+                raw.select(F.col("src").alias("id"))
+                .union(raw.select(F.col("dst").alias("id")))
                 .distinct()
-                .join(member, ["id", "color"], "left_anti")
-                .localCheckpoint(eager=True)
             )
-            if grown.limit(1).count() == 0:
-                break
-            member = member.unionByName(grown).localCheckpoint(eager=True)
-            frontier = grown
+            return run.layout(
+                ids.select("id", F.col("id").alias("scc"), F.lit(0).alias("final"))
+            )
 
-        done.append(member.select("id", F.col("color").alias("scc")))
-        remaining = remaining.join(
-            member.select("id"), "id", "left_anti"
-        ).localCheckpoint(eager=True)
-        _commit(_round + 1)
+        def step(st: DataFrame, sc: dict) -> DataFrame:
+            if sc["remaining"] == 0:
+                return st
+            captured = _round(run, e, st.where(F.col("final") == 0).select("id"))
+            return st.join(captured.withColumnRenamed("scc", "cap"), "id", "left").select(
+                "id",
+                F.coalesce("cap", "scc").alias("scc"),
+                F.when(F.col("cap").isNotNull(), F.lit(1))
+                .otherwise(F.col("final"))
+                .alias("final"),
+            )
 
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out
+        st = run.run(
+            initial,
+            step,
+            iters=max_rounds,
+            keep=["id", "scc", "final"],
+            aggs=remaining_agg,
+            start_aggs=remaining_agg,
+            done=lambda s, _: s["remaining"] == 0,
+        )
+        e.unpersist()
+        return run.export(st.select("id", "scc"))
+
+
+def _round(run: SuperstepRunner, e: DataFrame, remaining: DataFrame) -> DataFrame:
+    """One outer round over the ``remaining`` vertices: the ``(id, scc)``
+    rows of every SCC it captures (at least the one holding the minimum
+    remaining vertex)."""
+    er = (
+        e.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
+        .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
+        .localCheckpoint(eager=True)
+    )
+    captured = []
+
+    # --- 1. trim TO FIXPOINT: zero in-/out-degree => singleton ---
+    # DAG-dominated web graphs shed most mass here; peeling all
+    # layers inside one outer round avoids rebuilding + re-sorting
+    # the edge table once per layer (the sort is deferred to the
+    # coloring phase below, which is the only SMJ consumer)
+    while True:
+        # vertices with BOTH an out- and an in-edge, in ONE shuffle
+        # (map-side-combined max flags) instead of two distincts +
+        # a semi join
+        both = (
+            er.select(
+                F.col("src").alias("id"),
+                F.lit(1).alias("s"),
+                F.lit(0).alias("d"),
+            )
+            .union(
+                er.select(
+                    F.col("dst").alias("id"),
+                    F.lit(0).alias("s"),
+                    F.lit(1).alias("d"),
+                )
+            )
+            .groupBy("id")
+            .agg(F.max("s").alias("s"), F.max("d").alias("d"))
+            .where((F.col("s") == 1) & (F.col("d") == 1))
+            .select("id")
+            .localCheckpoint(eager=True)
+        )
+        trimmed = remaining.join(both, "id", "left_anti")
+        if trimmed.limit(1).count() == 0:
+            break
+        captured.append(trimmed.select("id", F.col("id").alias("scc")))
+        remaining = both
+        er = (
+            er.join(both.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(both.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .localCheckpoint(eager=True)
+        )
+    if remaining.limit(1).count() == 0:
+        return _union(captured)
+    # src-partitioned + sorted once (CSR layout): the coloring
+    # fixpoint's per-iteration SMJ never re-sorts the edge side
+    er = (
+        er.repartition(run.p, "src")
+        .sortWithinPartitions("src")
+        .localCheckpoint(eager=True)
+    )
+
+    # --- 2. forward-min coloring to fixpoint ---------------------
+    # DELTA propagation: min is monotone, so a vertex whose color
+    # did not change last iteration has already delivered its
+    # contribution — only the changed frontier needs to send.
+    # Message volume collapses after the first hops (the edge-side
+    # scan stays, but the shuffle/groupBy runs over frontier-edge
+    # messages, not all edges every iteration).  prev rides along
+    # as a column so the frontier is a predicate over the
+    # just-checkpointed relation — no per-iteration self-join.
+    colors = remaining.select(
+        "id", F.col("id").alias("color")
+    ).localCheckpoint(eager=True)
+    frontier = colors
+    while True:
+        incoming = (
+            er.join(frontier.withColumnRenamed("id", "src"), "src")
+            .groupBy("dst")
+            .agg(F.min("color").alias("mn"))
+        )
+        new_colors = (
+            colors.join(incoming, colors.id == incoming.dst, "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("color"), F.coalesce("mn", F.col("color"))
+                ).alias("color"),
+                F.col("color").alias("prev"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        frontier = new_colors.where(
+            F.col("color") != F.col("prev")
+        ).select("id", "color")
+        colors = new_colors.select("id", "color")
+        if frontier.limit(1).count() == 0:
+            break
+
+    # --- 3. backward sweep within each color ---------------------
+    member = colors.where(F.col("color") == F.col("id")).select(
+        "id", "color"
+    )
+    member = member.localCheckpoint(eager=True)
+    ce = (
+        er.join(colors.withColumnRenamed("id", "src")
+                .withColumnRenamed("color", "csrc"), "src")
+        .join(colors.withColumnRenamed("id", "dst")
+              .withColumnRenamed("color", "cdst"), "dst")
+        .where(F.col("csrc") == F.col("cdst"))
+        .select("src", "dst", F.col("csrc").alias("color"))
+        # gather key of the sweep is (dst, color): partition + sort
+        # once so each BFS hop re-sorts only the small frontier
+        .repartition(run.p, "dst", "color")
+        .sortWithinPartitions("dst", "color")
+        .localCheckpoint(eager=True)
+    )
+    # frontier BFS: each hop gathers predecessors of the NEWLY
+    # captured vertices only (not the whole member set) — total
+    # gather work is each same-color edge once, not once per hop
+    frontier = member
+    while True:
+        grown = (
+            ce.join(
+                frontier.withColumnRenamed("id", "dst"),
+                ["dst", "color"],
+                "left_semi",
+            )
+            .select(F.col("src").alias("id"), "color")
+            .distinct()
+            .join(member, ["id", "color"], "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if grown.limit(1).count() == 0:
+            break
+        member = member.unionByName(grown).localCheckpoint(eager=True)
+        frontier = grown
+
+    captured.append(member.select("id", F.col("color").alias("scc")))
+    return _union(captured)
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)

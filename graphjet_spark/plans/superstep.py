@@ -1,6 +1,8 @@
 """Co-partitioned superstep runner for the vertex-state loops (PageRank,
-hash-min CC, label propagation, Katz, eigenvector, HITS, ANF): one
-shuffle (two for HITS) and one Spark job per superstep.
+hash-min and star CC, label propagation, Katz, eigenvector, HITS, ANF,
+SCC, coreness, WL): a fixed number of shuffles and one Spark job
+per superstep (SCC's inner fixpoints run their own jobs inside its
+step).
 
 - **Planning session.**  Loops plan in ``spark.newSession()`` with AQE
   off, broadcast joins off and ``shuffle.partitions = P`` (the edge
@@ -127,13 +129,14 @@ class SuperstepRunner:
         keep: list[str],
         aggs: Aggs | None = None,
         start_aggs: Aggs | None = None,
-        done: Callable[[dict], bool] | None = None,
+        done: Callable[[dict, dict], bool] | None = None,
     ) -> DataFrame:
         """Supersteps up to ``iters`` from the last committed state, else
         from ``initial()`` (already laid out), whose ``start_aggs`` are the
         first scalars.  ``step(state, scalars)`` is the next state plus
-        the columns ``aggs`` read; stops once ``done(scalars)``.  Returns
-        the ``keep`` columns of the final state."""
+        the columns ``aggs`` read; stops once ``done(scalars, previous)``
+        (``previous`` is the input state's scalars).  Returns the ``keep``
+        columns of the final state."""
         last = self.checkpoint.last_committed() if self.checkpoint else None
         last = None if last is None else min(last, iters)
         if last is None:
@@ -143,10 +146,11 @@ class SuperstepRunner:
         state, scalars = self.materialize(state, start_aggs or {})
         for it in range(last or 0, iters):
             t0 = time.time()
+            prev = scalars
             # the next merge joins need the state sorted by id; the planner
             # drops this sort when the step's last join already sorts it
             new, scalars = self.materialize(
-                step(state, scalars).sortWithinPartitions("id"), aggs or {}
+                step(state, prev).sortWithinPartitions("id"), aggs or {}
             )
             scalars.update(algo=self.algo, iteration=it + 1, elapsed_s=time.time() - t0)
             self.history.append(scalars)
@@ -154,6 +158,6 @@ class SuperstepRunner:
             if self.checkpoint is not None:
                 path = self.checkpoint.commit_state(it + 1, state, scalars)
                 state = self.layout(self.child.read.parquet(path))
-            if done is not None and done(scalars):
+            if done is not None and done(scalars, prev):
                 break
         return state.select(*keep)

@@ -28,10 +28,12 @@ engine-neutral hash), so the refinement is a pure function of the
 graph and the round budget, and the gate VALUE-compares per-vertex
 colors against an unrolled DuckDB twin (oracles.wl_refinement_sql).
 
-Scale shape per round: one equi-join of the (id, color-hash) table
-against the symmetrized edges (hash-partitioned + sorted on the join
-key once, before the loop), one map-side-combined SUM/COUNT, one
-|V|-sized left join.  State is exactly |V| rows of (id, BIGINT).
+Scale shape per round: the loop runs on
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  State is
+``(id, c, hc)`` — the color and its per-neighbor contribution hash,
+computed once per vertex — co-partitioned with the symmetrized edges
+(laid out by the gather key once, before the loop), so a round is one
+exchange (the map-side-combined SUM/COUNT) and one Spark job.
 """
 
 from __future__ import annotations
@@ -39,14 +41,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphjet_spark.plans.components import symmetrize
+from graphjet_spark.functions.hashing import md5_prefix_bigint as _h
+from graphjet_spark.plans.components import gather_table
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 # modulus for per-neighbor contributions: keeps SUM over any real
 # in-degree (< 2^32 neighbors) inside BIGINT without overflow
 _MOD = 2_147_483_647
-
-
-from graphjet_spark.functions.hashing import md5_prefix_bigint as _h
 
 
 def wl_colors(
@@ -60,68 +61,62 @@ def wl_colors(
     over the symmetrized simple graph (self-loops dropped, matching
     the other undirected plans).  ``wl_color`` is the hashed color;
     ``class_size`` is its structural-role class population."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        symmetrize(edges)
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-    lab = (
-        vertices.join(deg, vertices.id == deg.a, "left")
-        .select(
-            "id",
-            F.coalesce(F.col("d"), F.lit(0)).cast("bigint").alias("c"),
+    def hashed(c: DataFrame) -> DataFrame:
+        """``c`` with its per-neighbor contribution ``hc``."""
+        return c.withColumn(
+            "hc", _h(F.concat(F.lit("wl:"), F.col("c").cast("string"))) % F.lit(_MOD)
         )
-        .localCheckpoint(eager=True)
-    )
 
-    for _ in range(rounds):
-        hc = lab.select(
-            F.col("id").alias("nid"),
-            (
-                _h(F.concat(F.lit("wl:"), F.col("c").cast("string")))
-                % F.lit(_MOD)
-            ).alias("hc"),
-        )
-        gath = (
-            sym.join(hc, sym.b == hc.nid)
-            .groupBy("a")
-            .agg(
-                F.sum("hc").alias("s"),
-                F.count(F.lit(1)).cast("bigint").alias("n"),
+    with SuperstepRunner(spark, "wl_colors", partitions) as run:
+        sym = gather_table(run, edges)
+
+        def initial() -> DataFrame:
+            e = run.adopt(edges)
+            vertices = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
             )
-        )
-        lab = (
-            lab.join(gath, lab.id == gath.a, "left")
-            .select(
-                "id",
-                _h(
-                    F.concat(
-                        F.lit("wl:"),
-                        F.col("c").cast("string"),
-                        F.lit(":"),
-                        F.coalesce(F.col("s"), F.lit(0)).cast("string"),
-                        F.lit(":"),
-                        F.coalesce(F.col("n"), F.lit(0)).cast("string"),
+            deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+            return run.layout(
+                hashed(
+                    vertices.join(deg, vertices.id == deg.a, "left").select(
+                        "id", F.coalesce(F.col("d"), F.lit(0)).cast("bigint").alias("c")
                     )
-                ).alias("c"),
+                )
             )
-            .localCheckpoint(eager=True)  # truncate superstep lineage
-        )
 
-    classes = lab.groupBy("c").agg(
-        F.count(F.lit(1)).cast("bigint").alias("class_size")
-    )
-    out = lab.join(classes, "c").select(
-        "id", F.col("c").alias("wl_color"), "class_size"
-    )
-    sym.unpersist()
-    return out
+        def step(st: DataFrame, _sc: dict) -> DataFrame:
+            gath = (
+                sym.join(st, sym.b == st.id)
+                .groupBy("a")
+                .agg(
+                    F.sum("hc").alias("s"),
+                    F.count(F.lit(1)).cast("bigint").alias("n"),
+                )
+            )
+            return hashed(
+                st.join(gath, st.id == gath.a, "left").select(
+                    "id",
+                    _h(
+                        F.concat(
+                            F.lit("wl:"),
+                            F.col("c").cast("string"),
+                            F.lit(":"),
+                            F.coalesce(F.col("s"), F.lit(0)).cast("string"),
+                            F.lit(":"),
+                            F.coalesce(F.col("n"), F.lit(0)).cast("string"),
+                        )
+                    ).alias("c"),
+                )
+            )
+
+        lab = run.run(initial, step, iters=rounds, keep=["id", "c", "hc"])
+        classes = lab.groupBy("c").agg(
+            F.count(F.lit(1)).cast("bigint").alias("class_size")
+        )
+        out = lab.join(classes, "c").select(
+            "id", F.col("c").alias("wl_color"), "class_size"
+        )
+        sym.unpersist()
+        return run.export(out)

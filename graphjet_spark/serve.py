@@ -74,7 +74,11 @@ class QueryServer:
         self._materialize = materialize
         self._ttl_s = ttl_s
         self._cache: dict[str, tuple[list, float]] = {}
+        # guards _cache and _inflight only, never held across a compute;
+        # one lock per query name serializes its builds, so a slow cold
+        # query never delays hits on other names
         self._cache_lock = threading.Lock()
+        self._inflight: dict[str, threading.Lock] = {}
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -152,18 +156,33 @@ class QueryServer:
         if not self._materialize:
             df = fn(self._spark, self._sf_dir)
             return df.limit(self._max_limit).collect(), None
+        since = time.time()
+
+        def usable(hit) -> bool:
+            # a build that finished after this request arrived is fresh
+            # enough even for ?fresh=1 (concurrent misses share one build)
+            return hit is not None and (
+                hit[1] >= since
+                or (
+                    not fresh
+                    and (self._ttl_s is None or time.time() - hit[1] <= self._ttl_s)
+                )
+            )
+
         with self._cache_lock:
             hit = self._cache.get(name)
-            if (
-                hit is not None
-                and not fresh
-                and (self._ttl_s is None or time.time() - hit[1] <= self._ttl_s)
-            ):
+            if usable(hit):
                 return hit
-            df = fn(self._spark, self._sf_dir)
-            rows = df.limit(self._max_limit).collect()
+            building = self._inflight.setdefault(name, threading.Lock())
+        with building:
+            with self._cache_lock:
+                hit = self._cache.get(name)
+            if usable(hit):
+                return hit
+            rows = fn(self._spark, self._sf_dir).limit(self._max_limit).collect()
             entry = (rows, time.time())
-            self._cache[name] = entry
+            with self._cache_lock:
+                self._cache[name] = entry
             return entry
 
     @property

@@ -223,3 +223,26 @@ def test_scc_resume_matches_uninterrupted(spark, tmp_path):
         ).collect()
     )
     assert resumed == full
+
+
+@pytest.mark.parametrize("algo", ["cc_star", "scc"])
+def test_commits_carry_partition_rows(spark, tmp_path, algo):
+    """Every superstep committed by star-CC and SCC (resumed or not)
+    carries per-partition lineage rows that add up to its row count."""
+    from graphjet_spark.plans.components import connected_components_star
+    from graphjet_spark.plans.scc import strongly_connected_components
+
+    run = {
+        "cc_star": lambda **kw: connected_components_star(spark, e, **kw),
+        "scc": lambda **kw: strongly_connected_components(spark, e, **kw),
+    }[algo]
+    e = edges_df(spark, PAIRS + [(7, 8), (8, 9), (9, 7)])
+    ck = CheckpointManager(str(tmp_path), algo)
+    run(max_rounds=1, checkpoint=ck).collect()
+    run(checkpoint=ck).collect()
+    rows = ck.read_metrics()
+    assert [m["iteration"] for m in rows] == list(range(1, ck.last_committed() + 1))
+    assert len(rows) >= 2
+    for m in rows:
+        assert m["partitions"]
+        assert sum(p["rows"] for p in m["partitions"]) == m["rows"]

@@ -124,7 +124,7 @@ def test_components_star_log_rounds_on_path(spark):
         ).collect()
     }
     assert got == {i: 1 for i in range(1, n + 1)}
-    assert stats["rounds"] <= 12  # ~log2(200) + slack; hash-min needs ~200
+    assert len(stats["supersteps"]) <= 12  # ~log2(200) + slack; hash-min needs ~200
 
 
 @given(pairs=edges_strategy)
@@ -600,6 +600,29 @@ def test_scc_cycle_chain(spark):
     }
     want = {10 * c + i: 10 * c + 1 for c in range(4) for i in (1, 2, 3)}
     assert got == want
+
+
+def test_scc_round_cap_keeps_every_vertex(spark):
+    """Chain of eight 2-cycles 0<->1 -> 2<->3 -> ...: each outer round
+    captures one SCC, so a 5-round budget leaves three unresolved.
+    Every vertex still gets a row; unresolved ones keep their own id."""
+    from graphjet_spark.plans.scc import strongly_connected_components
+
+    pairs = []
+    for c in range(8):
+        pairs += [(2 * c, 2 * c + 1), (2 * c + 1, 2 * c)]
+        if c:
+            pairs.append((2 * c - 2, 2 * c))
+    got = {
+        r["id"]: r["scc"]
+        for r in strongly_connected_components(
+            spark, _df(spark, pairs), max_rounds=5
+        ).collect()
+    }
+    assert len(got) == 16
+    resolved = {v: v - v % 2 for v in range(10)}
+    unresolved = {v: v for v in range(10, 16)}
+    assert got == {**resolved, **unresolved}
 
 
 @given(pairs=edges_strategy)

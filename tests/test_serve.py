@@ -99,3 +99,58 @@ def test_query_server_rejects_bad_limit(spark):
         assert got["rows"] == [{"id": 0}, {"id": 1}]
     finally:
         srv.stop()
+
+
+class _Rows:
+    """A stand-in DataFrame: ``limit(n).collect()`` returns its rows."""
+
+    def __init__(self, rows):
+        self.rows = rows
+
+    def limit(self, n):
+        return _Rows(self.rows[:n])
+
+    def collect(self):
+        return self.rows
+
+
+def test_slow_build_does_not_block_other_queries():
+    """materialize=True: a cached hit on one query answers while another
+    query's cold build runs, and concurrent cold requests for one name
+    share a single build."""
+    import threading
+    import time
+
+    from pyspark.sql import Row
+
+    calls = {"slow": 0, "fast": 0}
+
+    def query(name, delay):
+        def fn(spark, sf_dir):
+            calls[name] += 1
+            time.sleep(delay)
+            return _Rows([Row(id=1, name=name)])
+
+        return fn
+
+    registry = {"slow": query("slow", 2.0), "fast": query("fast", 0.0)}
+    srv = QueryServer(None, "", registry=registry, materialize=True).start()
+    try:
+        assert _get(srv.port, "/query/fast")[1]["rows"] == [{"id": 1, "name": "fast"}]
+        slow = [
+            threading.Thread(target=_get, args=(srv.port, "/query/slow"))
+            for _ in range(2)
+        ]
+        for t in slow:
+            t.start()
+        time.sleep(0.3)  # both slow requests are waiting on the one build
+        t0 = time.time()
+        status, hit = _get(srv.port, "/query/fast")
+        assert time.time() - t0 < 0.5
+        assert status == 200 and hit["rows"] == [{"id": 1, "name": "fast"}]
+        assert any(t.is_alive() for t in slow)
+        for t in slow:
+            t.join(timeout=10)
+        assert calls == {"slow": 1, "fast": 1}
+    finally:
+        srv.stop()

@@ -1,9 +1,10 @@
 """The co-partitioned superstep runner (plans/superstep.py): every
 superstep of PageRank (plain, teleport, weighted), CC, LP, Katz,
-eigenvector, HITS and ANF plans with a fixed number of shuffles (one;
-two for HITS) and no broadcast, runs as one Spark job, matches the numpy
-mirrors of tools/mirror_check.py (or a power iteration here), and
-leaves the caller's session as it found it."""
+eigenvector, HITS, ANF, coreness and WL plans with a fixed
+number of shuffles (one; two for HITS and coreness) and no broadcast,
+runs as one Spark job, matches the numpy mirrors of
+tools/mirror_check.py (or a literal mirror here), and leaves the
+caller's session as it found it."""
 
 from __future__ import annotations
 
@@ -17,10 +18,13 @@ from graphjet_spark.plans.anf import anf_sketch_histogram
 from graphjet_spark.plans.components import connected_components
 from graphjet_spark.plans.hits import hits
 from graphjet_spark.plans.katz import eigenvector_centrality, katz
+from graphjet_spark.plans.kcore import coreness
 from graphjet_spark.plans.labelprop import label_propagation
 from graphjet_spark.plans.pagerank import pagerank
+from graphjet_spark.plans.wl import wl_colors
 
 from .conftest import edges_df
+from .test_micro_graphs import py_wl_colors
 
 # hub 0 links to and from 1..8 (and 1..7 back); 9 and 13 are dangling
 # (in-links only); 10..13 is a second component
@@ -202,6 +206,19 @@ CASES = {
         None,
         1, 1, 0,
     ),
+    # the (vertex, value) histogram and its per-vertex suffix-sum window
+    "coreness": (
+        lambda spark, **kw: coreness(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
+        "coreness",
+        lambda: mc.mirror_coreness(UIDS, SRCI, DSTI, ITERS),
+        1, 2, 0,
+    ),
+    "wl": (
+        lambda spark, **kw: wl_colors(spark, edges_df(spark, PAIRS), rounds=ITERS, **kw),
+        "wl_color",
+        lambda: np.array([py_wl_colors(PAIRS, ITERS)[u] for u in UIDS]),
+        1, 1, 0,
+    ),
 }
 
 
@@ -236,9 +253,12 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
     if want is None:
         assert len(got) > 0
         return
-    arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), np.nan)
+    # integer columns (hashed WL colors use 60 bits) compare exactly
+    exact = got[col].dtype.kind != "f"
+    fill = np.int64(-1) if exact else np.nan
+    arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), fill)
     assert err is None and len(got) == len(UIDS)
-    if got[col].dtype.kind == "f":
+    if not exact:
         np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
     else:
         assert (arr == want()).all()
