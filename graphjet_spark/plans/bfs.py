@@ -1,18 +1,59 @@
-"""Single-source BFS hop distances (directed).
+"""BFS hop distances (directed), from one source or from k at once.
 
 The traversal primitive under every "within k hops" product question
 (the 2-hop reach gate generalized to arbitrary depth).  Superstep i
-relaxes the frontier one hop: dist(v) = min(dist(v), min over in-edges
-(u,v) of dist(u)+1).  Only the reached set iterates (frontier-shaped
-state, not |V| rows), the edge table is partitioned/persisted once, and
+relaxes one hop: dist(v) = min(dist(v), min over in-edges (u,v) of
+dist(u)+1) — the weight-1 case of the min-plus relaxation on
+:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.min_plus`, which
+CC and SSSP share: only the rows whose distance changed in the previous
+superstep send, and the loop stops once none changed, so
 ``fixed_iters`` bounds depth exactly — the oracle-parity mode the
-unrolled DuckDB SQL mirrors.
+unrolled DuckDB SQL mirrors — without paying for rounds past
+saturation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.superstep import SuperstepRunner
+
+
+def distances(
+    spark: SparkSession,
+    edges: DataFrame,
+    sources: list[int],
+    weight: Column,
+    zero: Column,
+    *,
+    algo: str,
+    iters: int,
+    partitions: int | None,
+) -> DataFrame:
+    """``(source, id, dist)``: min total ``weight`` (an expression over
+    ``src`` and ``dst``) of a path over the distinct directed edges from
+    each source, within ``iters`` supersteps; a source is at ``zero``."""
+    sources = list(dict.fromkeys(int(s) for s in sources))
+    if not sources:
+        raise ValueError("no source vertex given")
+    with SuperstepRunner(spark, algo, partitions) as run:
+        e = run.adopt(edges).select("src", "dst").distinct()
+        state = run.min_plus(
+            e.select("src", "dst", weight.alias("w")),
+            [F.when(F.col("id") == s, zero) for s in sources],
+            iters=iters,
+            ids=run.child.createDataFrame([(s,) for s in sources], "id bigint"),
+        )
+        rows = [
+            F.struct(F.lit(s).cast("bigint").alias("source"), F.col(f"d{i}").alias("dist"))
+            for i, s in enumerate(sources)
+        ]
+        return run.export(
+            state.select("id", F.explode(F.array(*rows)).alias("r"))
+            .select("r.source", "id", "r.dist")
+            .where(F.col("dist").isNotNull())
+        )
 
 
 def bfs_distances(
@@ -25,33 +66,9 @@ def bfs_distances(
 ) -> DataFrame:
     """Returns (id, dist) for vertices reachable from ``source`` within
     ``fixed_iters`` directed hops (dist = minimum hop count)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    reached = spark.createDataFrame(
-        [(int(source), 0)], "id bigint, dist int"
-    ).localCheckpoint(eager=True)
-
-    for _ in range(fixed_iters):
-        hop = (
-            e.join(reached, e.src == reached.id)
-            .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-        )
-        reached = (
-            reached.unionByName(hop)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-
-    e.unpersist()
-    return reached
+    return bfs_distances_multi(
+        spark, edges, [source], fixed_iters=fixed_iters, partitions=partitions
+    ).select("id", "dist")
 
 
 def bfs_distances_multi(
@@ -63,41 +80,13 @@ def bfs_distances_multi(
     partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source BFS: (source, id, dist) for each source in one
-    superstep loop — the state is keyed (source, id), so k sources cost
+    superstep loop — one distance column per source, so k sources cost
     one iteration sequence instead of k (the per-seed fan-out trick from
     the second-degree operators applied to traversal depth)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
+    return distances(
+        spark, edges, sources, F.lit(1), F.lit(0),
+        algo="bfs_distances", iters=fixed_iters, partitions=partitions,
     )
-    reached = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources],
-        "source bigint, id bigint, dist int",
-    ).localCheckpoint(eager=True)
-
-    for _ in range(fixed_iters):
-        hop = (
-            e.join(reached, e.src == reached.id)
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-        )
-        reached = (
-            reached.unionByName(hop)
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-
-    e.unpersist()
-    return reached
 
 
 def harmonic_centrality(
@@ -173,8 +162,8 @@ def landmark_labels(
     scale: est(u, w) = min over landmarks l of d_to(u,l) + d_from(l,w)
     (an upper bound, exact when a shortest path crosses a landmark).
 
-    Both directions run as ONE multi-source superstep loop each
-    ((landmark, id)-keyed state, same hygiene as every engine BFS)."""
+    Both directions run as ONE multi-source superstep loop each (one
+    distance column per landmark, same hygiene as every engine BFS)."""
     fwd = bfs_distances_multi(spark, edges, landmarks, fixed_iters=fixed_iters)
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     bwd = bfs_distances_multi(spark, rev, landmarks, fixed_iters=fixed_iters)

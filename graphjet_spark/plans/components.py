@@ -2,11 +2,12 @@
 
 Synchronous min-label flooding: every superstep each vertex takes the
 min of its own label and its neighbors' labels; converged when no label
-changes.  Exact (north rule).  Runs on
-:class:`~graphjet_spark.plans.superstep.SuperstepRunner`, like
-:mod:`graphjet_spark.plans.pagerank`: the symmetrized edge table is
-hash-partitioned and sorted by gather key once and persisted, the
-``(id, comp)`` state shares its hash blocks, and the one shuffle per
+changes.  Exact (north rule).  Hash-min is the weight-0 case of the
+min-plus relaxation BFS and SSSP share,
+:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.min_plus`: the
+symmetrized edge table is laid out by gather key once and persisted, the
+``(id, d0, fresh)`` state shares its hash blocks, only the labels that
+changed in the previous superstep are sent, and the one shuffle per
 superstep is the min-aggregation, whose map-side partial combine keeps
 mega-hub vertices from concentrating rows.
 """
@@ -56,39 +57,14 @@ def connected_components(
     with SuperstepRunner(
         spark, "connected_components", partitions, checkpoint, stats
     ) as run:
-        sym = gather_table(run, edges)
-
-        def step(labels: DataFrame, _sc: dict) -> DataFrame:
-            mins = (
-                sym.join(labels, sym.b == labels.id)
-                .groupBy("a")
-                .agg(F.min("comp").alias("mn"))
-            )
-            return (
-                labels.withColumnRenamed("comp", "prev")
-                .join(mins, F.col("id") == mins.a, "left")
-                .select(
-                    "id",
-                    F.least("prev", F.coalesce("mn", F.col("prev"))).alias("comp"),
-                    "prev",
-                )
-            )
-
-        labels = run.run(
-            lambda: run.layout(
-                # aliased below the distinct: an alias of ``id`` above
-                # the exchange would make the checkpoint keep
-                # ``comp`` as its partitioning key
-                sym.select(F.col("a").alias("id"), F.col("a").alias("comp")).distinct()
-            ),
-            step,
+        sym = symmetrize(run.adopt(edges))
+        labels = run.min_plus(
+            sym.select(F.col("a").alias("src"), F.col("b").alias("dst"), F.lit(0).alias("w")),
+            [F.col("id")],
             iters=fixed_iters if fixed_iters is not None else max_iter,
-            keep=["id", "comp"],
-            aggs={"changed": (F.count_if(F.col("comp") != F.col("prev")), sum)},
-            done=None if fixed_iters is not None else lambda s, _: s["changed"] == 0,
+            settle=fixed_iters is None,
         )
-        sym.unpersist()
-        return run.export(labels.select("id", F.col("comp").alias("component")))
+        return run.export(labels.select("id", F.col("d0").alias("component")))
 
 
 # ------------------------------------------------- large-star / small-star
@@ -205,12 +181,13 @@ def connected_components_star(
         # both star rounds keep every non-isolated vertex in some pair,
         # so the pairs' endpoints are the vertex set; converged, pairs
         # is one star per component (id -> component min), and roots
-        # label themselves
-        vertices = pairs.select("id").union(pairs.select(F.col("v").alias("id"))).distinct()
+        # label themselves.  A vertex's label is the least ``v`` of its
+        # pairs and itself (``v`` < ``id``): one row per vertex also
+        # when ``max_rounds`` stops the loop with several pairs per id.
         return run.export(
-            vertices.join(pairs, "id", "left").select(
-                "id", F.coalesce("v", F.col("id")).alias("component")
-            )
+            pairs.union(pairs.select(F.col("v").alias("id"), "v"))
+            .groupBy("id")
+            .agg(F.min("v").alias("component"))
         )
 
 

@@ -1,19 +1,20 @@
 """Single-source shortest paths with edge weights (Bellman-Ford
 supersteps).
 
-The weighted companion of :mod:`graphjet_spark.plans.bfs`: each round
-relaxes every edge out of the currently-reached frontier and keeps the
-min tentative distance per vertex.  ``fixed_iters`` rounds make the
-unrolled DuckDB oracle exact; on a layered web graph (cust → order →
-part → supplier) the distances converge within the layer depth.
+The weighted companion of :mod:`graphjet_spark.plans.bfs`, on the same
+min-plus relaxation
+(:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.min_plus`): each
+superstep relaxes every edge out of the vertices whose distance changed
+in the previous one and keeps the min tentative distance per vertex,
+until none changes or the superstep budget is spent.  ``fixed_iters``
+supersteps make the unrolled DuckDB oracle exact; on a layered web graph
+(cust → order → part → supplier) the distances converge within the
+layer depth.
 
-Superstep hygiene matches the other plans (reference semantics:
-GraphJet's graph is unweighted, but its typed edges carry weights in
-the recommendation layer — algorithms/counting/TopSecondDegreeByCount
-weighs paths by seed weight; this is the closed transitive form):
-the edge table is hash-partitioned by ``src`` and persisted once, only
-the narrow ``(id, dist)`` state shuffles per round, min-aggregation
-gets map-side partial combine, and lineage is truncated per round.
+Reference semantics: GraphJet's graph is unweighted, but its typed edges
+carry weights in the recommendation layer
+(algorithms/counting/TopSecondDegreeByCount weighs paths by seed
+weight); this is the closed transitive form.
 
 Distances stay integral (BIGINT) when the weight expression is
 integral, which keeps the cross-engine compare exact.
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.bfs import distances
 
 
 def derived_weight() -> Column:
@@ -42,47 +45,13 @@ def sssp(
     partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, dist) for every vertex reached from ``source`` along
-    directed edges, dist = min total weight."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    if weight is None:
-        weight = derived_weight()
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .select("src", "dst", weight.alias("w"))
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
-
-    dist = spark.createDataFrame(
-        [(source, 0)], "id bigint, dist bigint"
-    ).localCheckpoint(eager=True)
-
-    total = fixed_iters if fixed_iters is not None else max_iter
-    prev_sig = None
-    for _ in range(total):
-        relaxed = (
-            dist.join(e, dist["id"] == e["src"])
-            .select(e["dst"].alias("id"), (dist["dist"] + e["w"]).alias("dist"))
-        )
-        dist_new = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if fixed_iters is None:
-            sig = dist_new.agg(
-                F.count(F.lit(1)), F.sum("dist")
-            ).collect()[0]
-            if prev_sig == tuple(sig):
-                dist = dist_new
-                break
-            prev_sig = tuple(sig)
-        dist = dist_new
-
-    e.unpersist()
-    return dist
+    directed edges, dist = min total weight (``weight`` is an expression
+    over ``src`` and ``dst``, :func:`derived_weight` by default)."""
+    return distances(
+        spark, edges, [source],
+        derived_weight() if weight is None else weight,
+        F.lit(0).cast("bigint"),
+        algo="sssp",
+        iters=fixed_iters if fixed_iters is not None else max_iter,
+        partitions=partitions,
+    ).select("id", "dist")

@@ -1,8 +1,9 @@
 """Co-partitioned superstep runner for the vertex-state loops (PageRank,
-hash-min and star CC, label propagation, Katz, eigenvector, HITS, ANF,
-SCC, coreness, WL): a fixed number of shuffles and one Spark job
-per superstep (SCC's inner fixpoints run their own jobs inside its
-step).
+hash-min and star CC, BFS, SSSP, label propagation, Katz, eigenvector,
+HITS, ANF, SCC, coreness, WL): a fixed number of shuffles and one Spark
+job per superstep (SCC's inner fixpoints run their own jobs inside its
+step).  Hash-min CC, BFS and SSSP share one frontier step,
+:meth:`SuperstepRunner.min_plus`.
 
 - **Planning session.**  Loops plan in ``spark.newSession()`` with AQE
   off, broadcast joins off and ``shuffle.partitions = P`` (the edge
@@ -26,6 +27,8 @@ step).
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 import uuid
 from typing import Callable
@@ -161,3 +164,59 @@ class SuperstepRunner:
             if done is not None and done(scalars, prev):
                 break
         return state.select(*keep)
+
+    def min_plus(
+        self,
+        edges: DataFrame,
+        seeds: list[Column],
+        *,
+        iters: int,
+        settle: bool = True,
+        ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """Min-plus relaxation, the loop of hash-min CC (weight 0), BFS (1)
+        and SSSP: a superstep sets ``d(v) = min(d(v), d(u) + w)`` over the
+        edges ``(src=u, dst=v, w)``.  The state holds every ``dst`` and
+        ``ids`` row, with one column ``d<i>`` per ``seeds`` expression over
+        ``id`` (null: unreached); returns ``(id, d0, ...)`` after ``iters``
+        supersteps, fewer with ``settle`` once none changes.  Only rows that
+        changed in the previous superstep (``fresh``) send, which is exact
+        for a monotone min, and the filter keeps the state's layout, so the
+        one shuffle is the ``min`` per ``dst``."""
+        e = self.layout_edges(edges, "src")
+        vertices = e.select(F.col("dst").alias("id"))
+        if ids is not None:
+            vertices = vertices.union(ids)
+        ds = [f"d{i}" for i in range(len(seeds))]
+        # grouped by ``id`` alone, so the state layout needs no second
+        # exchange (a seed that aliases ``id`` above a distinct's exchange
+        # would leave the state partitioned by that alias)
+        state = vertices.groupBy("id").agg(*[F.min(c).alias(d) for c, d in zip(seeds, ds)])
+
+        def step(st: DataFrame, _sc: dict) -> DataFrame:
+            front = st.where("fresh")
+            msgs = (
+                e.join(front, e.src == front.id)
+                .groupBy("dst")
+                .agg(*[F.min(F.col(d) + F.col("w")).alias(f"m{d}") for d in ds])
+            )
+            changed = [
+                F.coalesce(F.col(f"m{d}") < F.col(d), F.col(f"m{d}").isNotNull()) for d in ds
+            ]
+            return st.join(msgs, st.id == msgs.dst, "left").select(
+                "id",
+                *[F.least(d, f"m{d}").alias(d) for d in ds],
+                functools.reduce(operator.or_, changed).alias("fresh"),
+            )
+
+        reached = functools.reduce(operator.or_, [F.col(d).isNotNull() for d in ds])
+        out = self.run(
+            lambda: self.layout(state.withColumn("fresh", reached)),
+            step,
+            iters=iters,
+            keep=["id", *ds, "fresh"],
+            aggs={"changed": (F.count_if("fresh"), sum)},
+            done=(lambda s, _: s["changed"] == 0) if settle else None,
+        )
+        e.unpersist()
+        return out.select("id", *ds)

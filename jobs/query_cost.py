@@ -1,6 +1,8 @@
 """Wall time and Spark job count of named ``queries()`` entries after
 the shared GraphTables build: each query is called twice, cold (first
-call in the process) and warm.
+call in the process) and warm.  The entry module's memoized results
+(its ``*_CACHE`` dicts: CC labels, the landmark index, the keep-list)
+are dropped before each call, so the warm call runs the query too.
 
     PYTHONPATH=. python jobs/query_cost.py SF_DIR NAME [NAME ...]
 
@@ -30,10 +32,13 @@ def main() -> None:
     sc = spark.sparkContext
     queries = entry.queries()
     entry._tables(spark, sf_dir, "graph_edges").pairs.count()  # shared build
+    caches = [v for k, v in vars(entry).items() if k.endswith("_CACHE")]
     out = {}
     for name in names:
         res = out[name] = {}
         for call in ("cold", "warm"):
+            for cache in caches:
+                cache.clear()
             group = f"{name}-{call}"
             sc.setJobGroup(group, group)
             t0 = time.perf_counter()

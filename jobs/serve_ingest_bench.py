@@ -13,7 +13,10 @@ once on one SparkSession, the way the reference runs them:
 - the serving mix (5 recommendation-shaped queries, materialized
   read path) is hammered by concurrent client threads the whole time.
 
-Reported: sustained req/s DURING ingest, ingest edges/s (link
+Reported: sustained req/s DURING ingest, the p50/p99 latency of the
+answered client requests (closed loop: each thread sends its next
+request when the previous one returns; failures are counted in
+``errors``), ingest edges/s (link
 occurrences appended / drain seconds — the same unit as the
 reference's 1M/s), and, as a second never-before-reported headline,
 the solo BATCH edge-build rate over the same corpus (pages ->
@@ -35,7 +38,7 @@ import threading
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 import pyarrow as pa  # noqa: E402
@@ -111,18 +114,21 @@ def main() -> int:
     stop_flag = threading.Event()
     counts = [0] * threads
     errs = [0] * threads
+    latencies: list[list[float]] = [[] for _ in range(threads)]
 
     def client(i: int) -> None:
         j = i
         while not stop_flag.is_set():
             name = SERVING_MIX[j % len(SERVING_MIX)]
             j += 1
+            t = time.perf_counter()
             try:
                 with urllib.request.urlopen(
                     f"{base}/query/{name}?limit=20", timeout=10
                 ) as r:
                     if json.load(r)["n"] >= 0:
                         counts[i] += 1
+                        latencies[i].append((time.perf_counter() - t) * 1000.0)
             except Exception:
                 errs[i] += 1
 
@@ -156,6 +162,8 @@ def main() -> int:
 
     shutil.rmtree(work, ignore_errors=True)
     total = sum(counts)
+    lat_ms = [x for per in latencies for x in per]
+    p50, p99 = np.percentile(lat_ms, [50, 99]) if lat_ms else (None, None)
     print(
         json.dumps(
             {
@@ -164,6 +172,8 @@ def main() -> int:
                 "requests": total,
                 "errors": sum(errs),
                 "threads": threads,
+                "p50_ms": None if p50 is None else round(float(p50), 1),
+                "p99_ms": None if p99 is None else round(float(p99), 1),
                 "ingest_edges_per_sec": round(ingested / drain_s, 1),
                 "ingested_edges": ingested,
                 "expected_links": n_links,

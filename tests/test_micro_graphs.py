@@ -560,6 +560,50 @@ def test_multi_source_bfs_and_harmonic(spark):
         )
 
 
+def test_multi_source_bfs_literal_mirror(spark):
+    """Multi-source BFS vs a literal level-by-level BFS per source, with
+    overlapping reach, a source inside another's reach and a depth cap
+    that cuts the longest path."""
+    from graphjet_spark.plans.bfs import bfs_distances_multi
+
+    pairs = [(1, 2), (2, 3), (3, 4), (1, 5), (5, 4), (9, 1), (4, 9), (7, 8)]
+    adj: dict[int, list[int]] = {}
+    for s, d in pairs:
+        adj.setdefault(s, []).append(d)
+
+    def bfs(s, depth):
+        dist, frontier = {s: 0}, [s]
+        for hop in range(1, depth + 1):
+            frontier = [v for u in frontier for v in adj.get(u, ()) if v not in dist]
+            dist.update((v, hop) for v in frontier)
+        return dist
+
+    sources = [1, 4, 7]
+    for depth in (2, 6):
+        rows = bfs_distances_multi(
+            spark, edges_df(spark, pairs), sources, fixed_iters=depth
+        ).collect()
+        got = {(r["source"], r["id"]): r["dist"] for r in rows}
+        assert len(rows) == len(got)
+        assert got == {(s, v): d for s in sources for v, d in bfs(s, depth).items()}
+
+
+def test_traversal_source_outside_the_edges(spark):
+    """A source that is no edge endpoint is at distance 0 from itself
+    and reaches nothing, in every traversal entry point; no source at
+    all is a clean error."""
+    from graphjet_spark.plans.bfs import bfs_distances, bfs_distances_multi
+    from graphjet_spark.plans.sssp import sssp
+
+    df = edges_df(spark, [(1, 2), (2, 3)])
+    assert [tuple(r) for r in bfs_distances(spark, df, 42).collect()] == [(42, 0)]
+    assert [tuple(r) for r in sssp(spark, df, 42).collect()] == [(42, 0)]
+    multi = bfs_distances_multi(spark, df, [42, 2], fixed_iters=3).collect()
+    assert sorted(tuple(r) for r in multi) == [(2, 2, 0), (2, 3, 1), (42, 42, 0)]
+    with pytest.raises(ValueError):
+        bfs_distances_multi(spark, df, [])
+
+
 def test_landmark_labels_and_estimates(spark):
     """Landmark distance labels vs a literal BFS mirror, and the
     distance-oracle estimate: exact when a shortest path crosses a

@@ -6,6 +6,7 @@ buildRandomBipartiteGraph checked for iterator/degree consistency)."""
 
 from __future__ import annotations
 
+import random
 from collections import Counter
 from itertools import combinations
 
@@ -125,6 +126,34 @@ def test_components_star_log_rounds_on_path(spark):
     }
     assert got == {i: 1 for i in range(1, n + 1)}
     assert len(stats["supersteps"]) <= 12  # ~log2(200) + slack; hash-min needs ~200
+
+
+def test_components_star_round_cap_one_row_per_vertex(spark):
+    """Stopped by ``max_rounds`` before convergence, star CC still gives
+    one row per vertex, labelled with a vertex of its own component no
+    larger than itself."""
+    rng = random.Random(3)
+    pairs = [(rng.randrange(200), rng.randrange(200)) for _ in range(300)]
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in pairs:
+        if s != d:
+            parent[find(s)] = find(d)
+    vertices = {v for s, d in pairs if s != d for v in (s, d)}
+    for rounds in (1, 2):
+        rows = connected_components_star(
+            spark, _df(spark, pairs), max_rounds=rounds
+        ).collect()
+        got = {r["id"]: r["component"] for r in rows}
+        assert len(rows) == len(got) and got.keys() == vertices
+        assert all(find(c) == find(v) and c <= v for v, c in got.items())
 
 
 @given(pairs=edges_strategy)

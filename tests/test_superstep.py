@@ -1,8 +1,8 @@
 """The co-partitioned superstep runner (plans/superstep.py): every
-superstep of PageRank (plain, teleport, weighted), CC, LP, Katz,
-eigenvector, HITS, ANF, coreness and WL plans with a fixed
-number of shuffles (one; two for HITS and coreness) and no broadcast,
-runs as one Spark job, matches the numpy mirrors of
+superstep of PageRank (plain, teleport, weighted), CC, multi-source
+BFS, SSSP, LP, Katz, eigenvector, HITS, ANF, coreness and WL plans with
+a fixed number of shuffles (one; two for HITS and coreness) and no
+broadcast, runs as one Spark job, matches the numpy mirrors of
 tools/mirror_check.py (or a literal mirror here), and leaves the
 caller's session as it found it."""
 
@@ -15,13 +15,16 @@ import re
 import numpy as np
 import pytest
 from graphjet_spark.plans.anf import anf_sketch_histogram
+from graphjet_spark.plans.bfs import bfs_distances_multi
 from graphjet_spark.plans.components import connected_components
 from graphjet_spark.plans.hits import hits
 from graphjet_spark.plans.katz import eigenvector_centrality, katz
 from graphjet_spark.plans.kcore import coreness
 from graphjet_spark.plans.labelprop import label_propagation
 from graphjet_spark.plans.pagerank import pagerank
+from graphjet_spark.plans.sssp import sssp
 from graphjet_spark.plans.wl import wl_colors
+from pyspark.sql import functions as F
 
 from .conftest import edges_df
 from .test_micro_graphs import py_wl_colors
@@ -88,6 +91,30 @@ def _hubs_ref():
         a = np.bincount(DSTI, weights=h[SRCI], minlength=len(UIDS))
         h = np.bincount(SRCI, weights=a[DSTI], minlength=len(UIDS))
     return h / h.sum()
+
+
+def _min_plus_ref(sources, w):
+    """Synchronous Bellman-Ford over PAIRS from ``sources`` with integer
+    edge weights ``w``: distances over UIDS (-1 = unreached) and the
+    supersteps until one changes nothing (the engine's stop rule)."""
+    inf = np.iinfo(np.int64).max
+    d = np.where(np.isin(UIDS, sources), 0, inf)
+    steps = 0
+    while True:
+        steps += 1
+        nd = d.copy()
+        for s, t, wt in zip(SRCI, DSTI, w):
+            if d[s] != inf:
+                nd[t] = min(nd[t], d[s] + wt)
+        if (nd == d).all():
+            return np.where(d == inf, -1, d), steps
+        d = nd
+
+
+# sources in different components, so each vertex has one (source, id) row
+BFS_SOURCES = [0, 12]
+BFS_REF = _min_plus_ref(BFS_SOURCES, np.ones(len(SRCI), dtype=np.int64))
+SSSP_REF = _min_plus_ref([0], WEIGHTS.astype(np.int64))
 
 
 def _exchanges(plan: str) -> list[str]:
@@ -170,6 +197,24 @@ CASES = {
         lambda: mc.mirror_cc(UIDS, SRCI, DSTI),
         1, 1, 0,
     ),
+    # traversals stop once no distance changes: SUPERSTEPS below
+    "bfs_multi": (
+        lambda spark, **kw: bfs_distances_multi(
+            spark, edges_df(spark, PAIRS), BFS_SOURCES, **kw
+        ),
+        "dist",
+        lambda: BFS_REF[0],
+        1, 1, 0,
+    ),
+    "sssp": (
+        lambda spark, **kw: sssp(
+            spark, edges_df(spark, PAIRS), 0,
+            weight=(1 + (F.col("src") + F.col("dst")) % 3).cast("bigint"), **kw,
+        ),
+        "dist",
+        lambda: SSSP_REF[0],
+        1, 1, 0,
+    ),
     "labelprop": (
         lambda spark, **kw: label_propagation(
             spark, edges_df(spark, PAIRS), iters=ITERS, **kw
@@ -222,6 +267,9 @@ CASES = {
 }
 
 
+SUPERSTEPS = {"bfs_multi": BFS_REF[1], "sssp": SSSP_REF[1]}
+
+
 def test_reference_is_the_mirror():
     uniform = np.full(len(UIDS), 1.0 / len(UIDS))
     np.testing.assert_allclose(
@@ -232,6 +280,7 @@ def test_reference_is_the_mirror():
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name):
     call, col, want, setup, exchanges, tail = CASES[name]
+    steps = SUPERSTEPS.get(name, ITERS)
     conf = {k: spark.conf.get(k) for k in CALLER_CONF}
     views = {t.name for t in spark.catalog.listTables("global_temp")}
 
@@ -244,9 +293,9 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
 
     # plan shape: setup plans, then one plan per superstep whose only
     # (non-broadcast) shuffles are its message aggregations
-    assert len(checkpointed) == setup + ITERS + tail
+    assert len(checkpointed) == setup + steps + tail
     assert not any("BroadcastExchange" in p for p in checkpointed)
-    for plan in checkpointed[setup : setup + ITERS]:
+    for plan in checkpointed[setup : setup + steps]:
         assert _exchanges(plan) == ["Exchange"] * exchanges, plan
 
     got = result.toPandas()
@@ -257,11 +306,13 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
     exact = got[col].dtype.kind != "f"
     fill = np.int64(-1) if exact else np.nan
     arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), fill)
-    assert err is None and len(got) == len(UIDS)
+    ref = want()
+    # a traversal has no row for an unreached vertex (-1 in its mirror)
+    assert err is None and len(got) == np.count_nonzero(ref != fill)
     if not exact:
-        np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
+        np.testing.assert_allclose(arr, ref, rtol=0, atol=1e-12)
     else:
-        assert (arr == want()).all()
+        assert (arr == ref).all()
 
 
 @pytest.mark.parametrize("name", ["pagerank", "components", "labelprop"])
