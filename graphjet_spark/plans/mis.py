@@ -1,5 +1,5 @@
 """Maximal independent set via Luby's algorithm (deterministic-hash
-form).
+form), and greedy coloring by iterated MIS.
 
 Luby (SIAM J. Comput. 1986): each round, every undecided vertex draws
 a priority; a vertex joins the MIS iff its priority strictly exceeds
@@ -16,43 +16,96 @@ gate VALUE-compares it against an unrolled DuckDB twin.  Hash ties
 vertices stay undecided and resolve next round under a fresh hash —
 deterministic without any tie-break ordering.
 
-Scale shape per round: one equi-join of the undecided set against the
-LIVE edge relation — edges with both endpoints still undecided, shrunk
-after every round by anti-joining out the decided delta (the same
-frontier discipline as plans/scc.py) — one map-side-combined MAX per
-vertex, two anti-joins to shrink the frontier.  Because Luby removes a
-constant fraction of edges per round in expectation, rounds after the
-first run over geometrically smaller relations instead of re-scanning
-the full symmetrized edge set.  State is frontier-sized, not |V|.
+Scale shape: both entry points run one Luby round per superstep of
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  The state
+``(id, color, s)`` holds every non-isolated vertex and shares the hash
+blocks of :func:`~graphjet_spark.plans.components.gather_table`, so
+both gathers of a round (the previous winners' exclusion, then the
+neighbor-max of the priorities) are exchange-free merge joins with the
+symmetrized edges plus one ``groupBy``.  Every round gathers over all
+edges; rounds stop early (exactly) once no vertex is undecided.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.functions.hashing import md5_prefix_bigint
-from graphjet_spark.plans.components import symmetrize
+from graphjet_spark.plans.components import gather_table
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
-def _priority(id_col: str, rnd: int):
-    s = F.concat(F.lit("mis:"), F.col(id_col).cast("string"), F.lit(f":{rnd}"))
-    return md5_prefix_bigint(s)
+def _exclude(sym: DataFrame, st: DataFrame) -> DataFrame:
+    """Undecided neighbors of the rows with ``s = 2`` become 0, and
+    those winners become 1."""
+    s = F.col("s")
+    won = st.where(s == 2)
+    hit = sym.join(won, sym.b == won.id).groupBy("a").count()
+    return st.join(hit, st.id == hit.a, "left").select(
+        "id",
+        "color",
+        F.when(s == 2, 1).when((s == -1) & hit.a.isNotNull(), 0).otherwise(s).alias("s"),
+    )
 
 
-def _shrink_live(live: DataFrame, removed: DataFrame, partitions: int) -> DataFrame:
-    """Drop every live edge touching a just-decided vertex.  Anti-join
-    on the (small, delta-sized) removed set twice — by a, then by b so
-    the result lands partitioned+sorted by b for the next round's
-    neighbor-max sort-merge join."""
-    ra = removed.select(F.col("id").alias("a"))
-    rb = removed.select(F.col("id").alias("b"))
-    return (
-        live.join(ra, "a", "left_anti")
-        .join(rb, "b", "left_anti")
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .localCheckpoint(eager=True)
+def _luby(
+    run: SuperstepRunner,
+    sym: DataFrame,
+    colors: int,
+    rounds: int,
+    priority: Callable[[int, int], Column],
+) -> DataFrame:
+    """``(id, color, s)`` after up to ``colors × rounds`` Luby rounds over
+    ``sym`` (the runner's gather table), one round per superstep, with
+    ``priority(c, t)`` for round t (from 1) of color c.  A color's first
+    round sets the colored rows to 1 and every other row undecided; a
+    strict winner gets ``s = 2`` and ``color = c``.  Once no row is
+    undecided the rest of that color's rounds would change nothing, so
+    the loop skips to the next color, and stops once no row is uncolored
+    (or the last color has no undecided row)."""
+    # s: -1 undecided, 2 won in the previous superstep, 1 decided (in
+    # the set, or colored), 0 excluded (a neighbor is in the set)
+    s = F.col("s")
+    pos = [0, 0]  # (color, round) of the last superstep planned
+
+    def step(st: DataFrame, sc: dict) -> DataFrame:
+        c, t = pos
+        if t == rounds or (t and sc["undecided"] == 0):
+            c, t = c + 1, 0
+        pos[:] = c, t + 1
+        st = _exclude(sym, st)
+        if t == 0:
+            st = st.withColumn("s", F.when(s == 1, 1).otherwise(-1))
+        h = priority(c, t + 1)
+        pr = st.where(s == -1).select("id", h.alias("h"))
+        nbr = sym.join(pr, sym.b == pr.id).groupBy("a").agg(F.max("h").alias("mh"))
+        win = (s == -1) & (nbr.mh.isNull() | (h > nbr.mh))
+        return st.join(nbr, st.id == nbr.a, "left").select(
+            "id",
+            F.when(win, c).otherwise(F.col("color")).alias("color"),
+            F.when(win, 2).otherwise(s).alias("s"),
+        )
+
+    aggs = {
+        "undecided": (F.count_if(s == -1), sum),
+        "uncolored": (F.count_if(s <= 0), sum),
+    }
+    return run.run(
+        lambda: run.layout(
+            sym.groupBy(F.col("a").alias("id")).agg(
+                F.lit(-1).alias("color"), F.lit(-1).alias("s")
+            )
+        ),
+        step,
+        iters=colors * rounds,
+        keep=["id", "color", "s"],
+        aggs=aggs,
+        start_aggs=aggs,
+        done=lambda sc, _: sc["uncolored"] == 0
+        or (pos[0] == colors - 1 and (sc["undecided"] == 0 or pos[1] == rounds)),
     )
 
 
@@ -66,58 +119,21 @@ def luby_mis(
     """(id, state) over the symmetrized simple graph: 1 = in the MIS,
     0 = excluded (a neighbor is in the MIS), -1 = still undecided when
     the round budget ran out (the oracle-parity fixed-depth mode)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        symmetrize(edges)
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
-    vertices = sym.select(F.col("a").alias("id")).distinct()
-
-    und = vertices.localCheckpoint(eager=True)
-    live = sym
-    mis_parts: list[DataFrame] = []
-
-    for t in range(1, fixed_iters + 1):
-        pr = und.select("id", _priority("id", t).alias("h"))
-        nbr_max = (
-            live.join(pr, live.b == pr.id)
-            .groupBy("a")
-            .agg(F.max("h").alias("mh"))
+    with SuperstepRunner(spark, "luby_mis", partitions) as run:
+        sym = gather_table(run, edges)
+        st = _luby(
+            run,
+            sym,
+            1,
+            fixed_iters,
+            lambda _c, t: md5_prefix_bigint(
+                F.concat(F.lit("mis:"), F.col("id").cast("string"), F.lit(f":{t}"))
+            ),
         )
-        winners = (
-            pr.join(nbr_max, pr.id == nbr_max.a, "left")
-            .where(F.col("mh").isNull() | (F.col("h") > F.col("mh")))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-        mis_parts.append(winners)
-        # No distinct: left_anti semantics ignore duplicate keys on the
-        # right, so deduplicating `removed` would only add a shuffle.
-        removed = winners.unionByName(
-            live.join(winners, live.a == winners.id).select(
-                F.col("b").alias("id")
-            )
-        ).localCheckpoint(eager=True)
-        und = und.join(removed, "id", "left_anti").localCheckpoint(eager=True)
-        if t < fixed_iters:
-            live = _shrink_live(live, removed, partitions)
-
-    mis = mis_parts[0]
-    for p in mis_parts[1:]:
-        mis = mis.unionByName(p)
-    out = (
-        vertices.join(mis.withColumn("s1", F.lit(1)), "id", "left")
-        .join(und.withColumn("s2", F.lit(-1)), "id", "left")
-        .select(
-            "id",
-            F.coalesce("s1", "s2", F.lit(0)).cast("int").alias("state"),
-        )
-    )
-    sym.unpersist()
-    return out
+        # the last round's winners still exclude their neighbors
+        st, _ = run.materialize(_exclude(sym, st), {})
+        sym.unpersist()
+        return run.export(st.select("id", F.col("s").cast("int").alias("state")))
 
 
 def greedy_coloring(
@@ -138,74 +154,18 @@ def greedy_coloring(
 
     The induced-subgraph restriction is implicit: priorities exist
     only for undecided vertices of the current color, so edges to
-    already-colored vertices drop out of the neighbor-max join on
-    their own.  Same per-round shape as :func:`luby_mis`."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        symmetrize(edges)
-        .repartition(partitions, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
-    vertices = sym.select(F.col("a").alias("id")).distinct()
-
-    remaining = vertices.localCheckpoint(eager=True)
-    live_rem = sym  # edges with both endpoints still uncolored
-    colored_parts: list[DataFrame] = []
-
-    for c in range(colors):
-        und = remaining
-        live = live_rem
-        win_parts: list[DataFrame] = []
-        for t in range(1, mis_iters + 1):
-            s = F.concat(
-                F.lit(f"clr:"),
-                F.col("id").cast("string"),
-                F.lit(f":{c}:{t}"),
-            )
-            pr = und.select(
-                "id",
-                md5_prefix_bigint(s).alias("h"),
-            )
-            nbr_max = (
-                live.join(pr, live.b == pr.id)
-                .groupBy("a")
-                .agg(F.max("h").alias("mh"))
-            )
-            winners = (
-                pr.join(nbr_max, pr.id == nbr_max.a, "left")
-                .where(F.col("mh").isNull() | (F.col("h") > F.col("mh")))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            win_parts.append(winners)
-            removed = winners.unionByName(
-                live.join(winners, live.a == winners.id).select(
-                    F.col("b").alias("id")
-                )
-            ).localCheckpoint(eager=True)
-            und = und.join(removed, "id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            if t < mis_iters:
-                live = _shrink_live(live, removed, partitions)
-        wc = win_parts[0]
-        for p in win_parts[1:]:
-            wc = wc.unionByName(p)
-        wc = wc.localCheckpoint(eager=True)
-        colored_parts.append(wc.withColumn("color", F.lit(c)))
-        remaining = remaining.join(wc, "id", "left_anti").localCheckpoint(
-            eager=True
+    already-colored vertices drop out of the neighbor-max gather on
+    their own."""
+    with SuperstepRunner(spark, "greedy_coloring", partitions) as run:
+        sym = gather_table(run, edges)
+        st = _luby(
+            run,
+            sym,
+            colors,
+            mis_iters,
+            lambda c, t: md5_prefix_bigint(
+                F.concat(F.lit("clr:"), F.col("id").cast("string"), F.lit(f":{c}:{t}"))
+            ),
         )
-        if c < colors - 1:
-            live_rem = _shrink_live(live_rem, wc, partitions)
-
-    colored = colored_parts[0]
-    for p in colored_parts[1:]:
-        colored = colored.unionByName(p)
-    out = vertices.join(colored, "id", "left").select(
-        "id", F.coalesce("color", F.lit(-1)).cast("int").alias("color")
-    )
-    sym.unpersist()
-    return out
+        sym.unpersist()
+        return run.export(st.select("id", F.col("color").cast("int").alias("color")))

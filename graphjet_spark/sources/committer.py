@@ -9,14 +9,17 @@ killed mid-write could leave a partial directory that a downstream
 reader would happily consume.  ``commit_staged`` lifts the checkpoint
 discipline to every sink:
 
-- all part files are written into ``<path>.__stage__``;
+- all part files are written into a stage directory of the attempt's
+  own, ``<path>.__stage__<token>``: cancelled tasks of a failed job can
+  still recreate their stage after the failure cleaned it up, so a
+  retry that reused it would collide with them;
 - only after the WHOLE job succeeds is the staging directory renamed
   onto ``<path>`` (atomic on POSIX; on overwrite the old output is
   removed immediately before the rename, the same minimal window
   ``plans/checkpoints.py`` accepts for superstep state);
 - a failed or killed job leaves ``<path>`` exactly as it was — either
-  absent or holding the previous complete output — and at most a stale
-  ``.__stage__`` directory, which the next attempt clears.
+  absent or holding the previous complete output — and at most stale
+  ``.__stage__*`` directories, which the next attempt clears.
 
 Reference analogue: safe publication of a sealed segment — readers
 never observe a half-built structure (reference graphjet-core/src/main/
@@ -26,8 +29,10 @@ java:72-99, single-writer memory-barrier publication).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+import uuid
 from typing import Callable
 
 STAGE_SUFFIX = ".__stage__"
@@ -61,9 +66,10 @@ def commit_staged(
         return
     if mode in ("error", "errorifexists") and os.path.exists(path):
         raise FileExistsError(f"output path {path!r} already exists")
-    stage = path + STAGE_SUFFIX
-    if os.path.exists(stage):  # stale staging from a killed attempt
-        shutil.rmtree(stage)
+    # stale staging from killed or failed attempts
+    for stale in glob.glob(glob.escape(path + STAGE_SUFFIX) + "*"):
+        shutil.rmtree(stale, ignore_errors=True)
+    stage = path + STAGE_SUFFIX + uuid.uuid4().hex
     try:
         write_fn(stage)
     except BaseException:

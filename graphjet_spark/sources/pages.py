@@ -32,7 +32,6 @@ import pandas as pd
 from graphjet_spark.functions.webtext import escape_text
 
 SEED = 42
-TIERS = {"tiny": 64, "small": 2_000, "bench": 200_000}
 
 _VOCAB = np.array(
     "the a of link graph page rank walk node edge web crawl index query "
@@ -180,13 +179,6 @@ def synthesize_pages(
         }
     )
     return pages, true_links
-
-
-def pages_df(spark, tier: str = "tiny", spec: CorpusSpec | None = None):
-    """Synthesize and load the corpus as a Spark DataFrame."""
-    spec = spec or CorpusSpec(TIERS[tier])
-    pdf, _ = synthesize_pages(spec)
-    return spark.createDataFrame(pdf)
 
 
 _CAPTURE_EPOCH = 1_767_225_600  # 2026-01-01T00:00:00Z, seconds

@@ -233,50 +233,78 @@ def test_reciprocity_mirror(spark):
     assert row["reciprocity"] == pytest.approx(4 / 5, abs=1e-6)
 
 
+def _md5i(s: str) -> int:
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def py_luby(pairs, colors, rounds, prio):
+    """Literal mirror of plans/mis.py: ``colors`` times, ``rounds`` Luby
+    rounds over the still-uncolored vertices with priority
+    ``prio(v, c, t)`` (nobody wins a tie).  Returns ``(color, und,
+    steps)``: each vertex's color (-1 = uncolored), the last color's
+    undecided set, and the supersteps the engine runs.  The engine
+    excludes a round's losers in the next superstep, so it stops a color
+    after the first round that leaves no vertex undecided or excluded
+    only there; the rounds it skips would change nothing."""
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    color = {v: -1 for v in adj}
+    und: set[int] = set()
+    steps = 0
+    for c in range(colors):
+        und = {v for v in adj if color[v] == -1}
+        if not und:
+            break
+        for t in range(1, rounds + 1):
+            steps += 1
+            wins = {
+                v for v in und if all(prio(v, c, t) > prio(u, c, t) for u in adj[v] & und)
+            }
+            for v in wins:
+                color[v] = c
+            left = und - wins
+            und = left - {u for w in wins for u in adj[w]}
+            if not left:
+                break
+    return color, und, steps
+
+
+def py_luby_mis(pairs, rounds):
+    """``({v: state}, steps)`` of plans/mis.py::luby_mis: 1 in the MIS,
+    0 excluded, -1 undecided."""
+    color, und, steps = py_luby(pairs, 1, rounds, lambda v, _c, t: _md5i(f"mis:{v}:{t}"))
+    return {v: 1 if c == 0 else -1 if v in und else 0 for v, c in color.items()}, steps
+
+
+def py_greedy_coloring(pairs, colors, rounds):
+    """``({v: color}, steps)`` of plans/mis.py::greedy_coloring."""
+    color, _, steps = py_luby(pairs, colors, rounds, lambda v, c, t: _md5i(f"clr:{v}:{c}:{t}"))
+    return color, steps
+
+
 def test_luby_mis_mirror(spark):
     """Luby MIS vs a literal Python mirror (same md5 priorities,
     nobody-wins ties), plus the MIS properties themselves:
     independence and maximality over the decided set."""
-    import hashlib
-
     from graphjet_spark.plans.mis import luby_mis
 
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 1), (3, 6), (7, 8), (9, 9)]
-    iters = 8
-
-    adj: dict[int, set[int]] = {}
-    for a, b in pairs:
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    nodes = set(adj)
-
-    def h(v: int, t: int) -> int:
-        return int(
-            hashlib.md5(f"mis:{v}:{t}".encode()).hexdigest()[:15], 16
-        )
-
-    und, mis = set(nodes), set()
-    for t in range(1, iters + 1):
-        winners = {
-            v
-            for v in und
-            if all(h(v, t) > h(u, t) for u in adj[v] if u in und)
-        }
-        mis |= winners
-        und -= winners | {u for w in winners for u in adj[w]}
-    want = {
-        v: (1 if v in mis else (-1 if v in und else 0)) for v in nodes
-    }
-
+    want, _ = py_luby_mis(pairs, 8)
     got = {
         r["id"]: r["state"]
-        for r in luby_mis(
-            spark, edges_df(spark, pairs), fixed_iters=iters
-        ).collect()
+        for r in luby_mis(spark, edges_df(spark, pairs), fixed_iters=8).collect()
     }
     assert got == want
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
     # independence: no two MIS members adjacent
     chosen = {v for v, s in got.items() if s == 1}
     assert not any(u in chosen for v in chosen for u in adj[v])
@@ -290,46 +318,14 @@ def test_luby_mis_mirror(spark):
 def test_greedy_coloring_mirror(spark):
     """Iterated-MIS coloring vs a literal mirror, plus the coloring
     property itself: no edge joins two vertices of the same color >= 0."""
-    import hashlib
-
     from graphjet_spark.plans.mis import greedy_coloring
 
     pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (7, 8)]
-    colors, iters = 3, 6
-
-    adj: dict[int, set[int]] = {}
-    for a, b in pairs:
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    nodes = set(adj)
-
-    def h(v: int, c: int, t: int) -> int:
-        return int(
-            hashlib.md5(f"clr:{v}:{c}:{t}".encode()).hexdigest()[:15], 16
-        )
-
-    remaining = set(nodes)
-    want = {v: -1 for v in nodes}
-    for c in range(colors):
-        und, wins = set(remaining), set()
-        for t in range(1, iters + 1):
-            w = {
-                v
-                for v in und
-                if all(h(v, c, t) > h(u, c, t) for u in adj[v] if u in und)
-            }
-            wins |= w
-            und -= w | {u for x in w for u in adj[x]}
-        for v in wins:
-            want[v] = c
-        remaining -= wins
-
+    want, _ = py_greedy_coloring(pairs, 3, 6)
     got = {
         r["id"]: r["color"]
         for r in greedy_coloring(
-            spark, edges_df(spark, pairs), colors=colors, mis_iters=iters
+            spark, edges_df(spark, pairs), colors=3, mis_iters=6
         ).collect()
     }
     assert got == want

@@ -9,6 +9,7 @@ is the sink analogue of the superstep checkpoint contract
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -52,6 +53,31 @@ def test_commit_staged_failure_leaves_target_untouched(tmp_path):
         commit_staged(out, "overwrite", boom)
     assert not os.path.exists(out)
     assert not os.path.exists(out + STAGE_SUFFIX)
+    assert not glob.glob(glob.escape(out + STAGE_SUFFIX) + "*")
+
+
+def test_commit_staged_retry_ignores_straggler_stage(tmp_path):
+    """A cancelled task of a failed attempt may recreate that attempt's
+    stage after the failure removed it; the next attempt still writes
+    and commits."""
+    out = str(tmp_path / "out")
+    first = []
+
+    def boom(stage):
+        first.append(stage)
+        os.makedirs(stage)
+        raise RuntimeError("killed mid-write")
+
+    with pytest.raises(RuntimeError):
+        commit_staged(out, "overwrite", boom)
+
+    def retry(stage):
+        os.makedirs(first[0])  # the straggler
+        os.makedirs(stage)
+        open(os.path.join(stage, "data"), "w").write("v2")
+
+    commit_staged(out, "overwrite", retry)
+    assert open(os.path.join(out, "data")).read() == "v2"
 
 
 def test_commit_staged_overwrite_preserves_previous_on_failure(tmp_path):

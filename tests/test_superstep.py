@@ -1,10 +1,10 @@
 """The co-partitioned superstep runner (plans/superstep.py): every
 superstep of PageRank (plain, teleport, weighted), CC, multi-source
-BFS, SSSP, LP, Katz, eigenvector, HITS, ANF, coreness and WL plans with
-a fixed number of shuffles (one; two for HITS and coreness) and no
-broadcast, runs as one Spark job, matches the numpy mirrors of
-tools/mirror_check.py (or a literal mirror here), and leaves the
-caller's session as it found it."""
+BFS, SSSP, LP, Katz, eigenvector, HITS, ANF, coreness, WL, Luby MIS and
+greedy coloring plans with a fixed number of shuffles (one; two for
+HITS and coreness, three for a Luby round) and no broadcast, runs as
+one Spark job, matches the numpy mirrors of tools/mirror_check.py (or
+a literal mirror), and leaves the caller's session as it found it."""
 
 from __future__ import annotations
 
@@ -21,13 +21,14 @@ from graphjet_spark.plans.hits import hits
 from graphjet_spark.plans.katz import eigenvector_centrality, katz
 from graphjet_spark.plans.kcore import coreness
 from graphjet_spark.plans.labelprop import label_propagation
+from graphjet_spark.plans.mis import greedy_coloring, luby_mis
 from graphjet_spark.plans.pagerank import pagerank
 from graphjet_spark.plans.sssp import sssp
 from graphjet_spark.plans.wl import wl_colors
 from pyspark.sql import functions as F
 
 from .conftest import edges_df
-from .test_micro_graphs import py_wl_colors
+from .test_micro_graphs import py_greedy_coloring, py_luby_mis, py_wl_colors
 
 # hub 0 links to and from 1..8 (and 1..7 back); 9 and 13 are dangling
 # (in-links only); 10..13 is a second component
@@ -115,6 +116,9 @@ def _min_plus_ref(sources, w):
 BFS_SOURCES = [0, 12]
 BFS_REF = _min_plus_ref(BFS_SOURCES, np.ones(len(SRCI), dtype=np.int64))
 SSSP_REF = _min_plus_ref([0], WEIGHTS.astype(np.int64))
+# Luby rounds stop once no vertex is undecided: (values, supersteps)
+MIS_REF = py_luby_mis(PAIRS, ITERS)
+COLORING_REF = py_greedy_coloring(PAIRS, 2, ITERS)
 
 
 def _exchanges(plan: str) -> list[str]:
@@ -264,10 +268,32 @@ CASES = {
         lambda: np.array([py_wl_colors(PAIRS, ITERS)[u] for u in UIDS]),
         1, 1, 0,
     ),
+    # a Luby round: the exclusion gather (planned twice: the priority
+    # filter and the final join both read it) and the priority gather;
+    # MIS materializes one last exclusion of the final round's winners
+    "luby_mis": (
+        lambda spark, **kw: luby_mis(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
+        "state",
+        lambda: np.array([MIS_REF[0][u] for u in UIDS]),
+        1, 3, 1,
+    ),
+    "greedy_coloring": (
+        lambda spark, **kw: greedy_coloring(
+            spark, edges_df(spark, PAIRS), colors=2, mis_iters=ITERS, **kw
+        ),
+        "color",
+        lambda: np.array([COLORING_REF[0][u] for u in UIDS]),
+        1, 3, 0,
+    ),
 }
 
 
-SUPERSTEPS = {"bfs_multi": BFS_REF[1], "sssp": SSSP_REF[1]}
+SUPERSTEPS = {
+    "bfs_multi": BFS_REF[1],
+    "sssp": SSSP_REF[1],
+    "luby_mis": MIS_REF[1],
+    "greedy_coloring": COLORING_REF[1],
+}
 
 
 def test_reference_is_the_mirror():
@@ -307,8 +333,10 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
     fill = np.int64(-1) if exact else np.nan
     arr, err = mc._scatter(UIDS, got["id"].to_numpy(), got[col].to_numpy(), fill)
     ref = want()
-    # a traversal has no row for an unreached vertex (-1 in its mirror)
-    assert err is None and len(got) == np.count_nonzero(ref != fill)
+    # a traversal has no row for an unreached vertex (-1 in its mirror);
+    # MIS and coloring have one for every vertex, -1 (undecided) included
+    rows = len(UIDS) if name in ("luby_mis", "greedy_coloring") else np.count_nonzero(ref != fill)
+    assert err is None and len(got) == rows
     if not exact:
         np.testing.assert_allclose(arr, ref, rtol=0, atol=1e-12)
     else:
@@ -365,3 +393,39 @@ def test_concurrent_callers_share_one_session(spark):
         np.testing.assert_allclose(arr, want(), rtol=0, atol=1e-12)
     assert {k: spark.conf.get(k) for k in CALLER_CONF} == conf
     assert {t.name for t in spark.catalog.listTables("global_temp")} == views
+
+
+# budgets far above the saturation depth of PAIRS
+SATURATED = {
+    "luby_mis": (
+        lambda spark: luby_mis(spark, edges_df(spark, PAIRS), fixed_iters=20),
+        "state",
+        py_luby_mis(PAIRS, 20),
+    ),
+    "greedy_coloring": (
+        lambda spark: greedy_coloring(spark, edges_df(spark, PAIRS), colors=8, mis_iters=20),
+        "color",
+        py_greedy_coloring(PAIRS, 8, 20),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SATURATED))
+def test_luby_stops_once_nothing_is_undecided(spark, checkpointed, name):
+    """Luby rounds past the first superstep that leaves no vertex
+    undecided (no vertex uncolored, for coloring) change nothing: such a
+    budget plans only the supersteps up to it, one Spark job each, and
+    returns the full-budget mirror's values."""
+    call, col, (want, steps) = SATURATED[name]
+    setup, tail = CASES[name][3], CASES[name][5]
+    assert steps < 20
+    sc = spark.sparkContext
+    group = f"superstep-saturated-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        result = call(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(checkpointed) == setup + steps + tail == jobs
+    assert {r["id"]: r[col] for r in result.collect()} == want
