@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DUCKDB_FORM = "(('0x' || substr(md5(s), 1, 15))::BIGINT)"
-
 
 def md5_prefix_bigint(col: Column) -> Column:
     """Cross-engine md5-prefix hash of a string column -> BIGINT."""

@@ -8,12 +8,14 @@ pairs; hashtag text -> long id at :154).  Our payload is an HTML page
 instead of a tweet, per BASELINE.json input_hint.
 
 Contract (input_hint): extraction is **byte-identical per url** to the
-pinned pure-Python oracle.  For links and anchors the kernels below ARE
-that oracle (pure pandas/numpy, runnable without Spark); the engine runs
-their JVM Column twins (``plans/build_edges.extract_link_rows``,
-``extract_anchor_rows``, ``canonical_url_expr``), with no Python worker,
-and the tests compare the two.  ``extract_text`` is both oracle and
-engine: ``extract_text_table`` wraps it in ``mapInPandas``.  No per-row
+pinned pure-Python oracle.  For links and anchors that oracle is
+``oracles.extract_links`` / ``extract_anchors`` (pure pandas over the
+grammar and ``canonicalize_url`` below, runnable without Spark); the
+engine runs their JVM Column twins (``plans/build_edges.
+extract_link_rows``, ``extract_anchor_rows``, ``canonical_url_expr``),
+with no Python worker, and the tests compare the two.  ``extract_text``
+is both oracle and engine: ``extract_text_table`` wraps it in
+``mapInPandas``.  No per-row
 Python in the text path: it is pandas C-level string ops over Arrow
 record batches.
 """
@@ -51,82 +53,6 @@ def canonicalize_url(urls: pd.Series) -> pd.Series:
     )
     u = u.str.replace(r"(?<=[^/])/$", "", regex=True)
     return u
-
-
-def resolve_url(hrefs: pd.Series, base_urls: pd.Series) -> pd.Series:
-    """Resolve hrefs against base urls: absolute urls pass through,
-    host-relative ``/path`` joins the base's scheme://host."""
-    is_abs = hrefs.str.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
-    origin = base_urls.str.extract(r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)", expand=False)
-    return hrefs.where(is_abs, origin.str.cat(hrefs))
-
-
-def _resolve_targets(hrefs: pd.Series, base: pd.Series, idx) -> pd.Series:
-    """Shared href post-processing of both extractors: resolve each
-    exploded href against its page's base url, then canonicalize —
-    keeping link rows and anchor rows byte-identical by construction."""
-    resolved = resolve_url(
-        hrefs.reset_index(drop=True), base.iloc[idx].reset_index(drop=True)
-    )
-    return canonicalize_url(resolved)
-
-
-def extract_links(html: pd.Series, base_urls: pd.Series) -> pd.DataFrame:
-    """Explode each page into its outgoing links.
-
-    Returns a DataFrame with columns ``(page_idx, dst_url)`` where
-    ``page_idx`` indexes into the input series (positional).  Duplicate
-    hrefs within a page are preserved (dedup is a later, explicit stage
-    — reference F11, algorithms/counting/TopSecondDegreeByCount.java:99-103).
-    Catches EVERY ``href=`` (nav/link/area included) — deliberately
-    broader than :func:`extract_anchors`' anchor-tag-only view.
-    """
-    text = decode_html(html).reset_index(drop=True)
-    base = base_urls.reset_index(drop=True)
-    found = text.str.findall(_HREF_RE)
-    exploded = found.explode().dropna()
-    if exploded.empty:
-        return pd.DataFrame({"page_idx": pd.Series(dtype="int64"),
-                             "dst_url": pd.Series(dtype="object")})
-    idx = exploded.index.to_numpy()
-    return pd.DataFrame(
-        {
-            "page_idx": idx,
-            "dst_url": _resolve_targets(exploded, base, idx).to_numpy(),
-        }
-    )
-
-
-def extract_anchors(html: pd.Series, base_urls: pd.Series) -> pd.DataFrame:
-    """Explode each page into (link target, anchor text) pairs.
-
-    Returns ``(page_idx, dst_url, anchor)`` — the href resolution and
-    canonicalization are byte-identical to :func:`extract_links`, with
-    the anchor's inner text carried alongside.  Anchor text is the
-    classic off-page relevance signal (what OTHER pages call a url);
-    duplicate hrefs are preserved, mirroring the link multiset."""
-    text = decode_html(html).reset_index(drop=True)
-    base = base_urls.reset_index(drop=True)
-    found = text.str.findall(_ANCHOR_RE)
-    exploded = found.explode().dropna()
-    if exploded.empty:
-        return pd.DataFrame(
-            {
-                "page_idx": pd.Series(dtype="int64"),
-                "dst_url": pd.Series(dtype="object"),
-                "anchor": pd.Series(dtype="object"),
-            }
-        )
-    idx = exploded.index.to_numpy()
-    hrefs = exploded.str[0]
-    anchors = exploded.str[1].reset_index(drop=True)
-    return pd.DataFrame(
-        {
-            "page_idx": idx,
-            "dst_url": _resolve_targets(hrefs, base, idx).to_numpy(),
-            "anchor": anchors.to_numpy(),
-        }
-    )
 
 
 def extract_text(html: pd.Series) -> pd.Series:

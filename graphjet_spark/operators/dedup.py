@@ -1692,32 +1692,28 @@ def containment_pairs(
     grams vs ~10% for Jaccard at t=0.9, so the exploded-intersection
     shape that works there generates OOM-grade aggregate input here).
     """
-    classes, reps, cgrams, rtoks, dfreq = _containment_structures(
-        docs, n=n, text_col=text_col
+    classes, _, cls_pairs = _containment_cls_pairs(
+        docs, n=n, threshold=threshold, text_col=text_col, round_to=round_to
     )
-    vocab = dfreq.count()
-    if 0 < vocab <= _CONTAIN_BLOCK_VOCAB_MAX:
-        cids = cgrams.select(
-            "cls", "sz",
-            F.expr("transform(grams, g -> xxhash64(g))").alias("gids"),
-        )
-        cls_pairs = _containment_cls_pairs_blocked(
-            cids, reps, threshold, round_to=round_to
-        )
-    else:
-        cls_pairs = _containment_cls_pairs_prefix(
-            cgrams, reps, rtoks, dfreq, threshold, round_to=round_to
-        )
     return _containment_expand_census(cls_pairs, classes)
 
 
-def _containment_structures(
-    docs: DataFrame, *, n: int, text_col: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Exact-dup class collapse for the containment family:
-    (classes, reps, cgrams, rtoks, dfreq).  Grams carried as the sorted
-    array: the class key hashes it AND the sparse-path verifier
-    intersects it row-locally."""
+def _containment_cls_pairs(
+    docs: DataFrame,
+    *,
+    n: int,
+    threshold: float,
+    text_col: str,
+    round_to: int,
+    k: int | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Exact-dup class collapse plus the qualifying ordered class pairs
+    of the containment family: ``(classes, reps, cls_pairs)``.  Grams
+    are carried as the sorted array: the class key hashes it AND the
+    sparse-path verifier intersects it row-locally.  A vocabulary of at
+    most ``_CONTAIN_BLOCK_VOCAB_MAX`` grams takes the dense blocked path
+    (with per-contained top-``k`` retention when ``k`` is given), a
+    larger one the prefix-filtered census path."""
     toks = token_sets(docs, text_col, n).localCheckpoint(eager=True)
     classes = (
         toks.groupBy("doc_id")
@@ -1740,7 +1736,20 @@ def _containment_structures(
     )
     rtoks = cgrams.select("cls", F.explode("grams").alias("tok"))
     dfreq = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return classes, reps, cgrams, rtoks, dfreq
+    vocab = dfreq.count()
+    if 0 < vocab <= _CONTAIN_BLOCK_VOCAB_MAX:
+        cids = cgrams.select(
+            "cls", "sz",
+            F.expr("transform(grams, g -> xxhash64(g))").alias("gids"),
+        )
+        cls_pairs = _containment_cls_pairs_blocked(
+            cids, reps, threshold, k=k, round_to=round_to
+        )
+    else:
+        cls_pairs = _containment_cls_pairs_prefix(
+            cgrams, reps, rtoks, dfreq, threshold, round_to=round_to
+        )
+    return classes, reps, cls_pairs
 
 
 def _containment_cls_pairs_prefix(
@@ -1902,22 +1911,9 @@ def containment_topk(
     row_number() — no engine trick leaks into the semantics."""
     from pyspark.sql import Window
 
-    classes, reps, cgrams, rtoks, dfreq = _containment_structures(
-        docs, n=n, text_col=text_col
+    classes, reps, cls_pairs = _containment_cls_pairs(
+        docs, n=n, threshold=threshold, text_col=text_col, round_to=round_to, k=k
     )
-    vocab = dfreq.count()
-    if 0 < vocab <= _CONTAIN_BLOCK_VOCAB_MAX:
-        cids = cgrams.select(
-            "cls", "sz",
-            F.expr("transform(grams, g -> xxhash64(g))").alias("gids"),
-        )
-        cls_pairs = _containment_cls_pairs_blocked(
-            cids, reps, threshold, k=k, round_to=round_to
-        )
-    else:
-        cls_pairs = _containment_cls_pairs_prefix(
-            cgrams, reps, rtoks, dfreq, threshold, round_to=round_to
-        )
     # stage 2: top-k container classes per contained class
     repb = reps.select(F.col("cls").alias("cb"), F.col("rep").alias("rep_b"))
     w1 = Window.partitionBy("ca").orderBy(

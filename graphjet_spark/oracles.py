@@ -15,6 +15,14 @@ All generators assume the canonical views/CTEs from
 
 from __future__ import annotations
 
+import pandas as pd
+
+from graphjet_spark.functions.webtext import (
+    _ANCHOR_RE,
+    _HREF_RE,
+    canonicalize_url,
+    decode_html,
+)
 from graphjet_spark.sources.testdata import oracle_cte
 
 # Shared simple-graph prelude over graph_edges.
@@ -4594,3 +4602,85 @@ SELECT d.doc_id,
        COALESCE(a.new_text, '') AS text
 FROM wd d LEFT JOIN agg a USING (doc_id)
 """
+
+
+# ------------------------------------------------------ pandas link oracles
+# Pure-pandas twins of ``plans/build_edges.extract_link_rows`` and
+# ``extract_anchor_rows`` over the same pinned grammar
+# (``functions/webtext``); the tests compare the two.
+
+
+def resolve_url(hrefs: pd.Series, base_urls: pd.Series) -> pd.Series:
+    """Resolve hrefs against base urls: absolute urls pass through,
+    host-relative ``/path`` joins the base's scheme://host."""
+    is_abs = hrefs.str.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
+    origin = base_urls.str.extract(r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)", expand=False)
+    return hrefs.where(is_abs, origin.str.cat(hrefs))
+
+
+def _resolve_targets(hrefs: pd.Series, base: pd.Series, idx) -> pd.Series:
+    """Shared href post-processing of both extractors: resolve each
+    exploded href against its page's base url, then canonicalize —
+    keeping link rows and anchor rows byte-identical by construction."""
+    resolved = resolve_url(
+        hrefs.reset_index(drop=True), base.iloc[idx].reset_index(drop=True)
+    )
+    return canonicalize_url(resolved)
+
+
+def extract_links(html: pd.Series, base_urls: pd.Series) -> pd.DataFrame:
+    """Explode each page into its outgoing links.
+
+    Returns a DataFrame with columns ``(page_idx, dst_url)`` where
+    ``page_idx`` indexes into the input series (positional).  Duplicate
+    hrefs within a page are preserved (dedup is a later, explicit stage
+    — reference F11, algorithms/counting/TopSecondDegreeByCount.java:99-103).
+    Catches EVERY ``href=`` (nav/link/area included) — deliberately
+    broader than :func:`extract_anchors`' anchor-tag-only view.
+    """
+    text = decode_html(html).reset_index(drop=True)
+    base = base_urls.reset_index(drop=True)
+    found = text.str.findall(_HREF_RE)
+    exploded = found.explode().dropna()
+    if exploded.empty:
+        return pd.DataFrame({"page_idx": pd.Series(dtype="int64"),
+                             "dst_url": pd.Series(dtype="object")})
+    idx = exploded.index.to_numpy()
+    return pd.DataFrame(
+        {
+            "page_idx": idx,
+            "dst_url": _resolve_targets(exploded, base, idx).to_numpy(),
+        }
+    )
+
+
+def extract_anchors(html: pd.Series, base_urls: pd.Series) -> pd.DataFrame:
+    """Explode each page into (link target, anchor text) pairs.
+
+    Returns ``(page_idx, dst_url, anchor)`` — the href resolution and
+    canonicalization are byte-identical to :func:`extract_links`, with
+    the anchor's inner text carried alongside.  Anchor text is the
+    classic off-page relevance signal (what OTHER pages call a url);
+    duplicate hrefs are preserved, mirroring the link multiset."""
+    text = decode_html(html).reset_index(drop=True)
+    base = base_urls.reset_index(drop=True)
+    found = text.str.findall(_ANCHOR_RE)
+    exploded = found.explode().dropna()
+    if exploded.empty:
+        return pd.DataFrame(
+            {
+                "page_idx": pd.Series(dtype="int64"),
+                "dst_url": pd.Series(dtype="object"),
+                "anchor": pd.Series(dtype="object"),
+            }
+        )
+    idx = exploded.index.to_numpy()
+    hrefs = exploded.str[0]
+    anchors = exploded.str[1].reset_index(drop=True)
+    return pd.DataFrame(
+        {
+            "page_idx": idx,
+            "dst_url": _resolve_targets(hrefs, base, idx).to_numpy(),
+            "anchor": anchors.to_numpy(),
+        }
+    )

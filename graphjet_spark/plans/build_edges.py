@@ -16,7 +16,8 @@ Scale notes (100 TB design):
   to link rows in place; output partition count = input partition
   count, so partition sizing is controlled upstream by
   ``spark.sql.files.maxPartitionBytes`` on the pages scan.  The
-  pure-pandas kernels in ``functions/webtext.py`` are its oracle.
+  pure-pandas ``oracles.extract_links`` / ``extract_anchors`` are its
+  oracle.
 - per-page work (canonical ``src_url``, the base origin, the href
   array) is projected BEFORE the explode, so it runs once per page,
   not once per link.

@@ -5,13 +5,16 @@ and convergence metrics ... so runs resume mid-iteration".
 
 Production target is an Iceberg table (snapshot commit per superstep);
 this sandbox has no Iceberg runtime jar, so the same contract is
-implemented over parquet directories with atomic rename commits:
+implemented over parquet directories published by
+:func:`graphjet_spark.sources.committer.commit_staged`:
 
-    <base>/<run_id>/state/iter=<N>/      parquet + _SUCCESS   (state)
-    <base>/<run_id>/metrics/iter=<N>.json                      (metrics)
+    <base>/<run_id>/state/iter=<N>/      parquet              (state)
+    <base>/<run_id>/metrics/iter=<N>.json                     (metrics)
 
-A superstep is committed iff its state directory rename completed (rename
-is atomic on a POSIX filesystem, mirroring an Iceberg snapshot swap).
+A superstep is committed iff its state directory exists under its final
+name: only the staged rename creates it (atomic on a POSIX filesystem,
+mirroring an Iceberg snapshot swap).  Every iteration is kept, because a
+resume with a smaller budget reads an older one.
 Resume = read max committed iteration and continue — the GraphJet
 analogue is safe publication of a sealed segment
 (reference: graphjet-core/src/main/java/com/twitter/graphjet/bipartite/
@@ -23,10 +26,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+from graphjet_spark.sources.committer import commit_staged, versions
 
 
 class CheckpointManager:
@@ -49,13 +53,7 @@ class CheckpointManager:
         Idempotent: re-committing an iteration (resume replay) overwrites.
         """
         final = self._iter_path(iteration)
-        tmp = final + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)  # atomic commit point
+        commit_staged(final, "overwrite", df.write.parquet)
         self._write_metrics(iteration, metrics)
         return final
 
@@ -67,14 +65,8 @@ class CheckpointManager:
         os.rename(tmp, os.path.join(self.metrics_dir, f"iter={iteration}.json"))
 
     def last_committed(self) -> int | None:
-        """Max iteration with a fully committed state directory."""
-        iters = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith("iter=") and not name.endswith(".tmp"):
-                path = os.path.join(self.state_dir, name)
-                if os.path.exists(os.path.join(path, "_SUCCESS")):
-                    iters.append(int(name.split("=", 1)[1]))
-        return max(iters) if iters else None
+        """Max iteration with a committed state directory."""
+        return max(versions(self.state_dir, "iter"), default=None)
 
     def read_state(self, spark: SparkSession, iteration: int) -> DataFrame:
         return spark.read.parquet(self._iter_path(iteration))

@@ -6,9 +6,10 @@ sharpening of the k-core (plans/kcore.py) and the standard dense-
 community primitive on web/social graphs.
 
 Each peel round enumerates triangles over the surviving edge set with
-the same degree-ordered adjacency-intersection as plans/triangles.py
-(out-degree bounded by O(sqrt m), so intersection work stays polynomial
-on power-law graphs and no wedge relation is materialized), credits
+the triangle kernel of plans/triangles.py (``closing_neighbors`` over
+the degree-ordered ``orient``: out-degree bounded by O(sqrt m), so
+intersection work stays polynomial on power-law graphs and no wedge
+relation is materialized), credits
 each triangle to its three edges, and drops edges below the support
 threshold.  ``fixed_iters`` rounds make the unrolled
 DuckDB oracle exact; the peeling is monotone, so extra rounds after the
@@ -20,6 +21,8 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.triangles import closing_neighbors, orient, undirected
 
 
 def k_truss(
@@ -34,86 +37,30 @@ def k_truss(
     ``fixed_iters`` peel rounds at support threshold k-2."""
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    surv = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .repartition(partitions, "a")
-        .localCheckpoint(eager=True)
-    )
+    surv = undirected(edges).repartition(partitions, "a").localCheckpoint(eager=True)
     thresh = k - 2
 
     for _ in range(fixed_iters):
-        deg = (
-            surv.select(F.col("a").alias("id"))
-            .union(surv.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        da = deg.select(F.col("id").alias("a"), F.col("d").alias("da"))
-        db = deg.select(F.col("id").alias("b"), F.col("d").alias("db"))
-        j = surv.join(da, "a").join(db, "b")
-        lower = F.struct(F.col("da"), F.col("a")) < F.struct(
-            F.col("db"), F.col("b")
-        )
-        o = (
-            j.select(
-                F.when(lower, F.col("a")).otherwise(F.col("b")).alias("lo"),
-                F.when(lower, F.col("b")).otherwise(F.col("a")).alias("hi"),
-            )
-            .repartition(partitions, "lo")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        o.count()
-        # Stage the collect_list adjacency eagerly: fusing the object
-        # aggregate with the downstream SMJ + support hashAgg in one
-        # task pipeline holds all three operators' buffers live per
-        # thread at once (measured 12g-heap OOM at sf1 on 32 threads);
-        # materializing between stages keeps each phase's working set
-        # alone in the heap and spillable.
-        adj = (
-            o.groupBy("lo")
-            .agg(F.collect_list("hi").alias("ns"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        adj.count()
-        a1 = adj.select(F.col("lo").alias("x"), F.col("ns").alias("n1"))
-        a2 = adj.select(F.col("lo").alias("y"), F.col("ns").alias("n2"))
         # Triangle triples (x, y, z) materialized ONCE — narrow rows,
         # consumed three times by the per-edge credit union below
         # (unioning straight off the join would recompute the whole
         # adjacency-intersection three times).
         tri = (
-            o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-            .join(a1, "x")
-            .join(a2, "y")
-            .select(
-                "x",
-                "y",
-                F.explode(F.array_intersect("n1", "n2")).alias("z"),
-            )
+            closing_neighbors(orient(surv))
+            .select("x", "y", F.explode("zs").alias("z"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         tri.count()
-        tri_edges = (
-            tri.select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-            .unionAll(
-                tri.select(
-                    F.least("y", "z").alias("a"), F.greatest("y", "z").alias("b")
-                )
-            )
-            .unionAll(
-                tri.select(
-                    F.least("x", "z").alias("a"), F.greatest("x", "z").alias("b")
-                )
-            )
-        )
-        support = tri_edges.groupBy("a", "b").agg(
-            F.count(F.lit(1)).alias("sup")
+        credits = [
+            tri.select(F.least(p, q).alias("a"), F.greatest(p, q).alias("b"))
+            for p, q in (("x", "y"), ("y", "z"), ("x", "z"))
+        ]
+        support = (
+            credits[0]
+            .unionAll(credits[1])
+            .unionAll(credits[2])
+            .groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("sup"))
         )
         surv = (
             surv.join(support, ["a", "b"])
@@ -121,8 +68,6 @@ def k_truss(
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        o.unpersist()
-        adj.unpersist()
         tri.unpersist()
 
     return surv

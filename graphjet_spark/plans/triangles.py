@@ -16,9 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def oriented_edges(edges: DataFrame) -> DataFrame:
-    """Distinct undirected edges oriented low (deg, id) → high (deg, id)."""
-    und = (
+def undirected(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges ``(a, b)``, a < b, self-loops dropped."""
+    return (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .select(
@@ -26,6 +26,11 @@ def oriented_edges(edges: DataFrame) -> DataFrame:
         )
         .distinct()
     )
+
+
+def orient(und: DataFrame) -> DataFrame:
+    """Undirected edges ``(a, b)`` oriented low (deg, id) → high (deg, id)
+    as ``(lo, hi)``."""
     deg = (
         und.select(F.col("a").alias("id"))
         .union(und.select(F.col("b").alias("id")))
@@ -42,7 +47,12 @@ def oriented_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _closing_neighbors(o: DataFrame) -> DataFrame:
+def oriented_edges(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges oriented low (deg, id) → high (deg, id)."""
+    return orient(undirected(edges))
+
+
+def closing_neighbors(o: DataFrame) -> DataFrame:
     """(x, y, zs) — for every oriented edge x→y, the array of common
     out-neighbors zs = N⁺(x) ∩ N⁺(y); each triangle {x,y,z} appears
     exactly once, on the edge joining its two lower-ordered vertices.
@@ -73,7 +83,7 @@ def _closing_neighbors(o: DataFrame) -> DataFrame:
 
 def triangle_count(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Global triangle count; returns a 1-row DataFrame ``(triangles)``."""
-    per_edge = _closing_neighbors(oriented_edges(edges))
+    per_edge = closing_neighbors(oriented_edges(edges))
     return per_edge.agg(
         F.coalesce(F.sum(F.size("zs")), F.lit(0))
         .cast("bigint")
@@ -117,7 +127,7 @@ def directed_triad_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
         )
     )
     tri = (
-        _closing_neighbors(oriented_edges(edges))
+        closing_neighbors(oriented_edges(edges))
         .select("x", "y", F.explode("zs").alias("z"))
         .select(F.array_sort(F.array("x", "y", "z")).alias("v"))
         .select(
@@ -159,7 +169,7 @@ def directed_triad_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
 
 def per_vertex_triangles(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts ``(id, triangles)``."""
-    closed = _closing_neighbors(oriented_edges(edges)).select(
+    closed = closing_neighbors(oriented_edges(edges)).select(
         "x", "y", F.explode("zs").alias("z")
     )
     verts = (

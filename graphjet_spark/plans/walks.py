@@ -35,6 +35,28 @@ def _step_hash(walk_col: str, step: int):
     return md5_prefix_bigint(s)
 
 
+def _sorted_adjacency(e: DataFrame, partitions: int) -> DataFrame:
+    """(src, nbrs) with ``nbrs`` the sorted out-neighbor array, persisted
+    (the caller unpersists)."""
+    return (
+        e.groupBy("src")
+        .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
+        .repartition(partitions, "src")
+        .persist()
+    )
+
+
+def _hash_step(frontier: DataFrame, adj: DataFrame, step: int) -> DataFrame:
+    """Advance every walk ``(walk_id, vertex)`` one hashed step; walks at
+    sinks stop."""
+    pick = (F.pmod(_step_hash("walk_id", step), F.size("nbrs")) + 1).cast("int")
+    return (
+        frontier.join(adj, frontier.vertex == adj.src)
+        .select("walk_id", F.element_at("nbrs", pick).alias("vertex"))
+        .localCheckpoint(eager=True)
+    )
+
+
 def hash_walk_corpus(
     spark: SparkSession,
     edges: DataFrame,
@@ -46,37 +68,15 @@ def hash_walk_corpus(
     with out-edges; step 0 is the start vertex, walks stop at sinks."""
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    e = edges.select("src", "dst").distinct()
-    adj = (
-        e.groupBy("src")
-        .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .repartition(partitions, "src")
-        .persist()
-    )
-    adj.count()
-
+    adj = _sorted_adjacency(edges.select("src", "dst").distinct(), partitions)
     frontier = adj.select(
         F.col("src").alias("walk_id"), F.col("src").alias("vertex")
     ).localCheckpoint(eager=True)
     out = [frontier.select("walk_id", F.lit(0).alias("step"), "vertex")]
 
     for i in range(1, length + 1):
-        nxt = (
-            frontier.join(adj, frontier.vertex == adj.src)
-            .select(
-                "walk_id",
-                F.element_at(
-                    "nbrs",
-                    (
-                        F.pmod(_step_hash("walk_id", i), F.size("nbrs"))
-                        + F.lit(1)
-                    ).cast("int"),
-                ).alias("vertex"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        out.append(nxt.select("walk_id", F.lit(i).alias("step"), "vertex"))
-        frontier = nxt
+        frontier = _hash_step(frontier, adj, i)
+        out.append(frontier.select("walk_id", F.lit(i).alias("step"), "vertex"))
 
     result = out[0]
     for df in out[1:]:
@@ -278,12 +278,7 @@ def walk_sample_subgraph(
     # eager checkpoint, not persist: e outlives this function inside the
     # returned lazy plan, so a persist here would leak cached blocks
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    adj = (
-        e.groupBy("src")
-        .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .repartition(partitions, "src")
-        .persist()
-    )
+    adj = _sorted_adjacency(e, partitions)
     seed_h = md5_prefix_bigint(
         F.concat(F.lit("smp:"), F.col("src").cast("string"))
     )
@@ -294,20 +289,7 @@ def walk_sample_subgraph(
     )
     visited = frontier.select("vertex").distinct().localCheckpoint(eager=True)
     for i in range(1, length + 1):
-        frontier = (
-            frontier.join(adj, frontier.vertex == adj.src)
-            .select(
-                "walk_id",
-                F.element_at(
-                    "nbrs",
-                    (
-                        F.pmod(_step_hash("walk_id", i), F.size("nbrs"))
-                        + F.lit(1)
-                    ).cast("int"),
-                ).alias("vertex"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        frontier = _hash_step(frontier, adj, i)
         visited = (
             visited.unionByName(frontier.select("vertex"))
             .distinct()

@@ -1,42 +1,47 @@
-"""Stage-and-rename commit discipline for connector sinks.
+"""One stage-and-rename commit protocol for every durable directory.
 
-The engine's superstep state has had this since round 2
-(:mod:`graphjet_spark.plans.checkpoints`: write to ``<dir>.tmp``, then
-one atomic POSIX ``rename`` as the commit point, mirroring an Iceberg
-snapshot swap).  The interchange sinks (WARC, SNAP edge lists, JSONL)
-previously wrote part files straight into the output path, so a job
-killed mid-write could leave a partial directory that a downstream
-reader would happily consume.  ``commit_staged`` lifts the checkpoint
-discipline to every sink:
+Superstep state (:mod:`graphjet_spark.plans.checkpoints`, ``iter=<N>``),
+the streaming folds' snapshots and corpus slices
+(:mod:`graphjet_spark.streaming.ingest`, ``v=<batch_id>`` and
+``b=<batch_id>``), edge-segment retention and the interchange sinks
+(WARC, SNAP edge lists, JSONL) all publish through this module:
 
-- all part files are written into a stage directory of the attempt's
-  own, ``<path>.__stage__<token>``: cancelled tasks of a failed job can
-  still recreate their stage after the failure cleaned it up, so a
-  retry that reused it would collide with them;
-- only after the WHOLE job succeeds is the staging directory renamed
-  onto ``<path>`` (atomic on POSIX; on overwrite the old output is
-  removed immediately before the rename, the same minimal window
-  ``plans/checkpoints.py`` accepts for superstep state);
-- a failed or killed job leaves ``<path>`` exactly as it was — either
-  absent or holding the previous complete output — and at most stale
+- ``commit_staged`` writes every part file into a stage directory of
+  the attempt's own, ``<path>.__stage__<token>``: cancelled tasks of a
+  failed job can still recreate their stage after the failure cleaned
+  it up, so a retry that reused it would collide with them;
+- only after the WHOLE write succeeds is the stage renamed onto
+  ``<path>`` (atomic on POSIX; on overwrite the old output is removed
+  immediately before the rename, the one minimal window accepted);
+- a failed or killed write leaves ``<path>`` exactly as it was, either
+  absent or holding the previous complete output, and at most stale
   ``.__stage__*`` directories, which the next attempt clears.
 
-Reference analogue: safe publication of a sealed segment — readers
-never observe a half-built structure (reference graphjet-core/src/main/
-java/com/twitter/graphjet/bipartite/edgepool/PowerLawDegreeEdgePool.
-java:72-99, single-writer memory-barrier publication).
+Versioned layouts name their children ``<prefix>=<n>``.  ``versions``
+lists the ``n`` whose directory exists under exactly that name; stage
+directories never match, and only ``commit_staged``'s rename creates
+the name, so a listed version is complete and no reader needs a
+``_SUCCESS`` marker.  ``expire`` keeps the newest ``k`` versions and
+deletes the rest wholesale.
+
+Reference analogue: a sealed segment is published only when complete
+and the oldest segments are dropped wholesale (reference graphjet-core/
+src/main/java/com/twitter/graphjet/bipartite/edgepool/
+PowerLawDegreeEdgePool.java:72-99, single-writer memory-barrier
+publication; bipartite/MultiSegmentReaderAccessibleInfoProvider.java:
+86-90, drop-oldest).
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import uuid
 from typing import Callable
 
 STAGE_SUFFIX = ".__stage__"
-
 
 def commit_staged(
     path: str, mode: str, write_fn: Callable[[str], None]
@@ -80,3 +85,26 @@ def commit_staged(
     elif os.path.exists(path):  # a plain file squatting on the target
         os.remove(path)
     os.rename(stage, path)  # atomic commit point
+
+
+def versions(root: str, prefix: str) -> list[int]:
+    """Ascending ``n`` of every committed ``<prefix>=<n>`` directory
+    under ``root`` (``[]`` when ``root`` does not exist)."""
+    if not os.path.isdir(root):
+        return []
+    pat = re.compile(re.escape(prefix) + r"=(-?\d+)")
+    return sorted(
+        int(m.group(1))
+        for m in map(pat.fullmatch, os.listdir(root))
+        if m and os.path.isdir(os.path.join(root, m.group(0)))
+    )
+
+
+def expire(root: str, prefix: str, keep: int) -> list[int]:
+    """Delete all but the newest ``keep`` versions under ``root``
+    (``keep=0`` deletes every version); returns the deleted ``n``."""
+    vs = versions(root, prefix)
+    drop = vs[:-keep] if keep else vs
+    for n in drop:
+        shutil.rmtree(os.path.join(root, f"{prefix}={n}"))
+    return drop

@@ -19,7 +19,12 @@ module provides the genuine streaming form for parity:
 - ``write_edge_segments``: append sink partitioned by ``segment``
   (ingest-time bucket) — one partition dir per GraphJet segment;
 - ``expire_segments``: drop-oldest retention (keep last k segment
-  partitions), the sliding-window semantics.
+  partitions), the sliding-window semantics;
+- four live-state folds (CC labels, count-min grid, near-dup keep-list,
+  change-rate statistics), each a merge function on one exactly-once
+  ``foreachBatch`` fold (:func:`_fold`) that publishes its snapshots
+  through :mod:`graphjet_spark.sources.committer` and keeps at most
+  ``SNAPSHOTS_KEPT`` of them.
 
 Scale notes: the streaming job is stateless (extraction only), so
 throughput scales with source parallelism; segment expiry is a
@@ -30,12 +35,16 @@ GraphJet freeing a segment wholesale.
 from __future__ import annotations
 
 import os
-import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.build_edges import extract_link_rows
+from graphjet_spark.sources.committer import commit_staged, expire, versions
+
+# The newest snapshot plus the base a replay of its batch reads.
+SNAPSHOTS_KEPT = 2
 
 PAGES_STREAM_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -95,15 +104,7 @@ def expire_segments(out_dir: str, *, max_segments: int) -> list[int]:
     partitions, delete the rest wholesale (metadata-only, no rewrite —
     the MultiSegmentReaderAccessibleInfoProvider.java:86-90 semantics).
     Returns the dropped segment ids."""
-    segs = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(out_dir)
-        if d.startswith("segment=")
-    )
-    drop = segs[:-max_segments] if max_segments else segs
-    for s in drop:
-        shutil.rmtree(os.path.join(out_dir, f"segment={s}"))
-    return drop
+    return expire(out_dir, "segment", max_segments)
 
 
 def running_degrees(edges: DataFrame) -> DataFrame:
@@ -161,61 +162,53 @@ def read_edges(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.option("basePath", out_dir).parquet(*seg_dirs)
 
 
-def windowed_event_counts(
+def _snapshot(spark: SparkSession, snap_dir: str, *, before: int | None = None):
+    """Newest committed ``v=<batch_id>`` snapshot under ``snap_dir``
+    (strictly older than ``before`` when given), or ``None``."""
+    vs = [v for v in versions(snap_dir, "v") if before is None or v < before]
+    if not vs:
+        return None
+    return spark.read.parquet(os.path.join(snap_dir, f"v={vs[-1]}"))
+
+
+def _fold(
+    spark: SparkSession,
     stream: DataFrame,
+    snap_dir: str,
+    merge: Callable[[DataFrame, int, DataFrame | None], DataFrame],
     *,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-time tumbling-window counts with a late-data watermark —
-    the streaming twin of the batch ``events_daily`` rollup.
-
-    With append output mode a window finalizes once the watermark
-    passes its end; rows arriving later than the watermark are dropped
-    (the bounded-state contract that lets this run forever at 100 TB/day
-    event volume — state size is windows-in-flight, not history)."""
-    from pyspark.sql import functions as F
-
-    w = F.window(F.col(ts_col), window_duration)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-        )
-    )
-
-
-def _latest_snapshot(
-    spark: SparkSession, snap_dir: str, *, before: int | None = None
+    checkpoint_dir: str,
+    available_now: bool = True,
 ):
-    """Latest ``_SUCCESS``-committed ``v=<batch_id>`` snapshot under
-    ``snap_dir`` (optionally strictly older than ``before``), or
-    ``None`` — the shared reader for every per-batch-id snapshot
-    layout (CC labels, sketch grids)."""
-    if not os.path.isdir(snap_dir):
-        return None
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(snap_dir)
-        if d.startswith("v=")
-        and os.path.exists(os.path.join(snap_dir, d, "_SUCCESS"))
+    """Exactly-once state fold on top of at-least-once ``foreachBatch``.
+
+    Batch ``b`` merges into the newest snapshot STRICTLY OLDER than
+    ``b`` (``None`` before the first), commits ``merge(batch, b, base)``
+    to ``snap_dir/v=<b>`` through :func:`commit_staged`, then expires
+    all but the newest ``SNAPSHOTS_KEPT`` snapshots.  A replayed batch
+    re-reads the same base, which the expiry kept, and overwrites its
+    own snapshot with the same state, so folds whose merge is not
+    idempotent (a count-min sum) stay exact."""
+
+    def _batch(batch: DataFrame, batch_id: int) -> None:
+        base = _snapshot(spark, snap_dir, before=batch_id)
+        state = merge(batch, batch_id, base)
+        path = os.path.join(snap_dir, f"v={batch_id}")
+        commit_staged(path, "overwrite", state.write.parquet)
+        expire(snap_dir, "v", SNAPSHOTS_KEPT)
+
+    writer = stream.writeStream.foreachBatch(_batch).option(
+        "checkpointLocation", checkpoint_dir
     )
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    return spark.read.parquet(os.path.join(snap_dir, f"v={versions[-1]}"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_component_labels(spark: SparkSession, labels_dir: str):
     """Latest committed ``(id, component)`` snapshot written by
     :func:`streaming_components`, or ``None`` before the first batch."""
-    return _latest_snapshot(spark, labels_dir)
+    return _snapshot(spark, labels_dir)
 
 
 def streaming_components(
@@ -233,93 +226,29 @@ def streaming_components(
     is the closest batch-engine analogue of GraphJet ingesting edges
     into a live segment while serving connectivity reads.
 
-    Snapshots are written idempotently per micro-batch id
-    (``labels_dir/v=<batch_id>``), so a replayed batch after a crash
-    overwrites its own output — exactly-once labels on top of the
-    at-least-once foreachBatch contract.  Readers pick the latest
-    ``_SUCCESS``-committed snapshot (:func:`read_component_labels`).
+    Runs on :func:`_fold` with a continuous trigger: snapshots land at
+    ``labels_dir/v=<batch_id>``, a replayed batch re-merges into the
+    snapshot before its own id, and readers take the newest committed
+    snapshot (:func:`read_component_labels`).
     """
     from graphjet_spark.plans.components import connected_components_delta
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        old = read_component_labels(spark, labels_dir)
+    def _merge(batch: DataFrame, batch_id: int, old: DataFrame | None):
         if old is None:
             old = spark.createDataFrame([], "id bigint, component bigint")
-        new = connected_components_delta(
-            spark, old, batch.select("src", "dst")
-        )
-        new.write.mode("overwrite").parquet(
-            os.path.join(labels_dir, f"v={batch_id}")
-        )
+        return connected_components_delta(spark, old, batch.select("src", "dst"))
 
-    return (
-        edges.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _fold(
+        spark, edges, labels_dir, _merge,
+        checkpoint_dir=checkpoint_dir, available_now=False,
     )
 
 
-def dedup_events_within_watermark(
-    stream: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("event_id",),
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Exactly-once event delivery over an at-least-once transport:
-    drop redelivered events whose dedup key was already seen, keeping
-    state only within the watermark horizon
-    (``dropDuplicatesWithinWatermark``, the bounded-state form — plain
-    dropDuplicates would accumulate every key ever seen, which is
-    unbounded at 100 TB/day; a redelivery later than the watermark is
-    the transport's SLA violation, not ours).
-
-    The streaming-ingest analogue of the reference's exactly-once
-    segment contract (SURVEY §2.10): the batch twin is a plain
-    ``dropDuplicates(key_cols)`` and the restart test proves the state
-    store carries the seen-set across a checkpoint-restore."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def streaming_session_stats(
-    stream: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Per-user session rollup over the live event stream via
-    ``session_window`` — the streaming twin of the batch gap-based
-    sessionization in operators/sessions.py (same gap semantics;
-    sessions close when the watermark passes their end, so state is
-    open-sessions-sized, never history-sized).
-
-    Returns (user_id, session_start, session_end, n_events)."""
-    w = F.session_window(F.col(ts_col), gap)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col), w.alias("s"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-        .select(
-            user_col,
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def read_sketch_grid(
-    spark: SparkSession, grid_dir: str, *, before: int | None = None
-):
+def read_sketch_grid(spark: SparkSession, grid_dir: str):
     """Latest committed ``(row, bucket, cnt)`` count-min grid snapshot
     written by :func:`streaming_cms`, or ``None`` before the first
-    batch.  ``before`` restricts to versions strictly older — the
-    exactly-once replay rule (see below)."""
-    return _latest_snapshot(spark, grid_dir, before=before)
+    batch."""
+    return _snapshot(spark, grid_dir)
 
 
 def streaming_cms(
@@ -336,40 +265,29 @@ def streaming_cms(
     grid merges CELL-WISE (sum) into the accumulated grid — the
     mergeability contract of the sketch doing the streaming work.
 
-    Exactly-once on top of at-least-once foreachBatch: CMS addition is
-    NOT idempotent (unlike the CC fold, which tolerates re-merging the
-    same edges), so a batch folds into the newest snapshot STRICTLY
-    OLDER than its own batch id and overwrites its own
-    ``grid_dir/v=<batch_id>`` — a replayed batch re-reads the same base
-    and produces the same snapshot.  Readers take the latest
-    ``_SUCCESS``-committed version (:func:`read_sketch_grid`)."""
+    CMS addition is NOT idempotent, so exactness across a replay rests
+    on :func:`_fold`'s strictly-before base: a replayed batch re-reads
+    the same base and produces the same ``grid_dir/v=<batch_id>``.
+    Readers take the newest committed version (:func:`read_sketch_grid`)."""
     from graphjet_spark.operators.sketches import cms_counters
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
+    def _merge(batch: DataFrame, batch_id: int, base: DataFrame | None):
         grid = cms_counters(batch, key_col, width=width, depth=depth)
-        base = read_sketch_grid(spark, grid_dir, before=batch_id)
-        if base is not None:
-            grid = (
-                grid.unionByName(base)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        grid.write.mode("overwrite").parquet(
-            os.path.join(grid_dir, f"v={batch_id}")
+        if base is None:
+            return grid
+        return (
+            grid.unionByName(base)
+            .groupBy("row", "bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold(spark, stream, grid_dir, _merge, checkpoint_dir=checkpoint_dir)
 
 
 def read_keep_list(spark: SparkSession, state_dir: str):
     """Latest committed ``(doc_id, keep_id)`` snapshot written by
     :func:`streaming_keep_list`, or ``None`` before the first batch."""
-    return _latest_snapshot(spark, os.path.join(state_dir, "keeps"))
+    return _snapshot(spark, os.path.join(state_dir, "keeps"))
 
 
 def streaming_keep_list(
@@ -392,45 +310,33 @@ def streaming_keep_list(
     the "live segment" is the newest corpus batch and the served state
     is the keep-list.
 
-    Exactly-once on top of at-least-once foreachBatch, like
-    :func:`streaming_components`: the batch's corpus slice lands
-    idempotently at ``corpus/b=<batch_id>`` and the keep-list snapshot
-    at ``keeps/v=<batch_id>``; a replayed batch reads the snapshot
-    STRICTLY BEFORE its own id, so replay recomputes byte-identical
-    output and overwrites itself.  Readers pick the latest committed
-    snapshot (:func:`read_keep_list`) — equal, by
-    ``dedup_keep_list_delta``'s row-identity contract, to the batch
-    :func:`~graphjet_spark.operators.dedup.dedup_keep_list` over
-    everything ingested so far.
+    Runs on :func:`_fold`: the batch's corpus slice is committed at
+    ``corpus/b=<batch_id>`` (never expired, since the delta reads every
+    slice) and the keep-list snapshot at ``keeps/v=<batch_id>``.
+    Readers take the newest committed snapshot (:func:`read_keep_list`)
+    — equal, by ``dedup_keep_list_delta``'s row-identity contract, to
+    the batch :func:`~graphjet_spark.operators.dedup.dedup_keep_list`
+    over everything ingested so far.
     """
     corpus_dir = os.path.join(state_dir, "corpus")
-    keeps_dir = os.path.join(state_dir, "keeps")
     from graphjet_spark.operators.dedup import dedup_keep_list_delta
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"b={batch_id}")
+    def _merge(batch: DataFrame, batch_id: int, old: DataFrame | None):
+        commit_staged(
+            os.path.join(corpus_dir, f"b={batch_id}"), "overwrite", batch.write.parquet
         )
-        corpus = spark.read.parquet(corpus_dir).drop("b")
-        old = _latest_snapshot(spark, keeps_dir, before=batch_id)
+        corpus = spark.read.parquet(
+            *(os.path.join(corpus_dir, f"b={b}") for b in versions(corpus_dir, "b"))
+        )
         if old is None:
             old = spark.createDataFrame([], "doc_id bigint, keep_id bigint")
-        keeps = dedup_keep_list_delta(
-            corpus,
-            batch.select("doc_id"),
-            old,
-            n=n,
-            threshold=threshold,
-        )
-        keeps.write.mode("overwrite").parquet(
-            os.path.join(keeps_dir, f"v={batch_id}")
+        return dedup_keep_list_delta(
+            corpus, batch.select("doc_id"), old, n=n, threshold=threshold
         )
 
-    return (
-        docs.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        spark, docs, os.path.join(state_dir, "keeps"), _merge,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -456,24 +362,15 @@ def streaming_change_rates(
     running-degree and CC folds assume.  Within a batch, rows may be
     unordered (the fold sorts by ``warc_epoch``).
 
-    Exactly-once on top of at-least-once foreachBatch, like
-    :func:`streaming_components`: the merged snapshot lands at
-    ``caprates/v=<batch_id>``; a replayed batch re-reads the snapshot
-    STRICTLY BEFORE its own id and overwrites itself byte-identically.
-    Readers (:func:`read_change_rates`) apply the closed-form
-    estimator to the latest snapshot — equal, by the merge identity,
-    to the batch operator over every capture ingested so far (pinned
-    by pytest).
+    Runs on :func:`_fold`: the merged snapshot lands at
+    ``caprates/v=<batch_id>``.  Readers (:func:`read_change_rates`)
+    apply the closed-form estimator to the newest snapshot — equal, by
+    the merge identity, to the batch operator over every capture
+    ingested so far (pinned by pytest).
     """
     from graphjet_spark.functions.hashing import md5_prefix_bigint
 
-    stats_dir = os.path.join(state_dir, "caprates")
-    empty_schema = (
-        "url string, n_captures bigint, n_changes bigint, "
-        "first_ts bigint, last_ts bigint, last_fp bigint"
-    )
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
+    def _merge(batch: DataFrame, batch_id: int, old: DataFrame | None):
         w = Window.partitionBy("url").orderBy("ts")
         marked = (
             batch.select(
@@ -499,15 +396,18 @@ def streaming_change_rates(
             F.expr("min_by(fp, ts)").alias("b_first_fp"),
             F.expr("max_by(fp, ts)").alias("b_last_fp"),
         )
-        old = _latest_snapshot(spark, stats_dir, before=batch_id)
         if old is None:
-            old = spark.createDataFrame([], empty_schema)
+            old = spark.createDataFrame(
+                [],
+                "url string, n_captures bigint, n_changes bigint, "
+                "first_ts bigint, last_ts bigint, last_fp bigint",
+            )
         boundary = (
             F.col("n_captures").isNotNull()
             & F.col("b_n").isNotNull()
             & (F.col("last_fp") != F.col("b_first_fp"))
         ).cast("bigint")
-        merged = (
+        return (
             old.join(b, "url", "full_outer")
             .select(
                 "url",
@@ -525,15 +425,10 @@ def streaming_change_rates(
                 F.coalesce("b_last_fp", "last_fp").alias("last_fp"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"v={batch_id}")
-        )
 
-    return (
-        captures.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        spark, captures, os.path.join(state_dir, "caprates"), _merge,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -544,7 +439,7 @@ def read_change_rates(spark: SparkSession, state_dir: str):
     captures folded so far, or ``None`` before the first commit."""
     from graphjet_spark.operators.crawl import change_rate_from_stats
 
-    snap = _latest_snapshot(spark, os.path.join(state_dir, "caprates"))
+    snap = _snapshot(spark, os.path.join(state_dir, "caprates"))
     if snap is None:
         return None
     return change_rate_from_stats(

@@ -104,6 +104,12 @@ def test_commit_is_idempotent_and_atomic(spark, tmp_path):
     os.makedirs(os.path.join(mgr.state_dir, "iter=99.tmp"))
     assert mgr.last_committed() == 3
 
+    # nor is a leftover stage directory, even one holding _SUCCESS
+    stage = os.path.join(mgr.state_dir, "iter=99.__stage__0")
+    os.makedirs(stage)
+    open(os.path.join(stage, "_SUCCESS"), "w").close()
+    assert mgr.last_committed() == 3
+
 
 def test_warm_start_delta_ingest(spark, tmp_path):
     """Delta-ingest: after edges change, warm-starting from the old

@@ -2,8 +2,9 @@
 
 The extraction invariant (BASELINE.json input_hint): engine-side
 extraction must be byte-identical per url to the pure-pandas oracle in
-``functions/webtext.py``.  Link and anchor extraction are one JVM
-Column plan (no Python worker); text extraction is an Arrow UDF.
+``oracles.py`` (over the grammar in ``functions/webtext.py``).  Link
+and anchor extraction are one JVM Column plan (no Python worker); text
+extraction is an Arrow UDF.
 Edge build is checked by exact set equality against the synthesizer's
 closed-form link set — the GraphJet-style golden-output discipline
 (reference: graphjet-core/src/test/java/com/twitter/graphjet/algorithms/
@@ -322,6 +323,7 @@ def _battery_pages(spark):
 def test_link_and_anchor_rows_match_oracle_on_edge_cases(spark):
     """The Column-plan extractors equal the webtext oracle as multisets;
     a scheme-less base gives a null dst_url for its relative hrefs."""
+    from graphjet_spark import oracles
     from graphjet_spark.functions import webtext
     from graphjet_spark.plans.build_edges import (
         extract_anchor_rows,
@@ -333,14 +335,14 @@ def test_link_and_anchor_rows_match_oracle_on_edge_cases(spark):
     def src(idx):
         return webtext.canonicalize_url(pdf["url"].iloc[idx].reset_index(drop=True))
 
-    links = webtext.extract_links(pdf["html"], pdf["url"])
+    links = oracles.extract_links(pdf["html"], pdf["url"])
     want = zip(src(links["page_idx"]), links["dst_url"])
     got = extract_link_rows(pages).select("src_url", "dst_url").collect()
     assert _multiset(got) == _multiset(want)
     assert ("noscheme/page", None) in _multiset(got)
     assert (None, None) in _multiset(got)
 
-    anchors = webtext.extract_anchors(pdf["html"], pdf["url"])
+    anchors = oracles.extract_anchors(pdf["html"], pdf["url"])
     want = zip(src(anchors["page_idx"]), anchors["dst_url"], anchors["anchor"])
     assert _multiset(extract_anchor_rows(pages).collect()) == _multiset(want)
 
@@ -348,12 +350,12 @@ def test_link_and_anchor_rows_match_oracle_on_edge_cases(spark):
 def test_invalid_utf8_page_raises(spark):
     """Malformed html bytes fail the extraction, as the oracle's decode
     does, rather than yielding replacement-character links."""
-    from graphjet_spark.functions import webtext
+    from graphjet_spark import oracles
     from graphjet_spark.plans.build_edges import extract_link_rows
 
     html = b'<a href="/x\xff">bad</a>'
     with pytest.raises(UnicodeDecodeError):
-        webtext.extract_links(pd.Series([html]), pd.Series(["http://a.com/"]))
+        oracles.extract_links(pd.Series([html]), pd.Series(["http://a.com/"]))
     pages = spark.createDataFrame(
         [("http://a.com/", bytearray(html), None)],
         "url string, html binary, warc_ts timestamp",

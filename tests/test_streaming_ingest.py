@@ -130,58 +130,6 @@ def test_running_degrees_stateful_resume(spark, tmp_path):
     assert got2 == {1: 4, 2: 1, 3: 1}
 
 
-def test_windowed_counts_watermark_drops_late_rows(spark, tmp_path):
-    """Event-time tumbling windows + watermark: windows finalize in
-    append mode once the watermark passes, and a row arriving later
-    than the watermark is dropped, never mutating a finalized window."""
-    import datetime as dt
-
-    ev_dir = str(tmp_path / "ev_in")
-    ck = str(tmp_path / "win_ck")
-    out_dir = str(tmp_path / "win_out")
-    t0 = dt.datetime(2024, 1, 1)
-
-    def _feed(offsets_h):
-        rows = [(t0 + dt.timedelta(hours=h), 1) for h in offsets_h]
-        spark.createDataFrame(rows, "ts timestamp, user_id bigint").coalesce(
-            1
-        ).write.mode("append").parquet(ev_dir)
-
-    def _run():
-        stream = spark.readStream.schema("ts timestamp, user_id bigint").parquet(
-            ev_dir
-        )
-        q = (
-            ingest.windowed_event_counts(
-                stream, window_duration="1 hour", watermark="2 hours"
-            )
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            r["window_start"].hour: r["n_events"]
-            for r in spark.read.parquet(out_dir).collect()
-        }
-
-    # batch 1: two on-time events + one far-ahead event that advances
-    # the watermark to 04:00, finalizing the 00:00 and 01:00 windows
-    _feed([0.5, 1.5, 6.0])
-    got1 = _run()
-    assert got1 == {0: 1, 1: 1}
-
-    # batch 2: a LATE row at 00:45 (behind the 04:00 watermark -> must
-    # be dropped) + an event at 10:00 advancing the watermark to 08:00,
-    # which finalizes the 06:00 window — still with count 1
-    _feed([0.75, 10.0])
-    got2 = _run()
-    assert got2 == {0: 1, 1: 1, 6: 1}
-
-
 def test_streaming_components_match_batch_cc(spark, tmp_path):
     """Live CC labels folded per micro-batch through the condensed-
     graph delta path must equal batch CC over all edges ingested so
@@ -236,109 +184,6 @@ def test_streaming_components_match_batch_cc(spark, tmp_path):
     assert got[4] == 1 and got[12] == 10
 
 
-def test_dedup_events_within_watermark_across_restart(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: redelivered event_ids are
-    suppressed inside the watermark horizon, and the seen-set state
-    survives a query restart on the same checkpoint (an id delivered
-    in batch 1 and redelivered after the restart still dedups)."""
-    ev_dir = str(tmp_path / "ev_in")
-    ck = str(tmp_path / "dd_ck")
-    out_dir = str(tmp_path / "dd_out")
-
-    def _feed(rows):
-        spark.createDataFrame(
-            rows, "event_id bigint, ts string, user_id bigint"
-        ).selectExpr(
-            "event_id", "CAST(ts AS timestamp) AS ts", "user_id"
-        ).coalesce(1).write.mode("append").parquet(ev_dir)
-
-    def _run():
-        stream = spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint"
-        ).parquet(ev_dir)
-        q = (
-            ingest.dedup_events_within_watermark(stream, watermark="1 hour")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sorted(
-            r["event_id"] for r in spark.read.parquet(out_dir).collect()
-        )
-
-    _feed(
-        [
-            (1, "2024-01-01 10:00:00", 7),
-            (2, "2024-01-01 10:05:00", 8),
-            (1, "2024-01-01 10:06:00", 7),  # in-batch redelivery
-        ]
-    )
-    assert _run() == [1, 2]
-
-    # restart on the same checkpoint: 1 redelivered again (within the
-    # watermark horizon of the state store) stays suppressed; 3 is new
-    _feed(
-        [
-            (1, "2024-01-01 10:20:00", 7),
-            (3, "2024-01-01 10:21:00", 9),
-        ]
-    )
-    assert _run() == [1, 2, 3]
-
-
-def test_streaming_session_stats_matches_gap_semantics(spark, tmp_path):
-    """session_window streaming rollup: events within the gap merge
-    into one session, a later event opens a new one, and sessions only
-    finalize (append mode) once the watermark passes their end."""
-    import datetime as dt
-
-    ev_dir = str(tmp_path / "sess_in")
-    ck = str(tmp_path / "sess_ck")
-    out_dir = str(tmp_path / "sess_out")
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-
-    def _feed(rows):
-        data = [(t0 + dt.timedelta(minutes=m), u) for m, u in rows]
-        spark.createDataFrame(data, "ts timestamp, user_id bigint").coalesce(
-            1
-        ).write.mode("append").parquet(ev_dir)
-
-    def _run():
-        stream = spark.readStream.schema(
-            "ts timestamp, user_id bigint"
-        ).parquet(ev_dir)
-        q = (
-            ingest.streaming_session_stats(
-                stream, gap="10 minutes", watermark="2 hours"
-            )
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sorted(
-            (r["user_id"], r["session_start"].minute + 60 * (r["session_start"].hour - 10), r["n_events"])
-            for r in spark.read.parquet(out_dir).collect()
-        )
-
-    # user 7: 10:00 + 10:05 merge (gap 10m); user 8: one event; the
-    # 20:00 event (user 99, +600m) pushes the watermark far past both
-    _feed([(0, 7), (5, 7), (30, 8), (600, 99)])
-    assert _run() == [(7, 0, 2), (8, 30, 1)]
-
-    # user 7 returns at +660m (new session), flush at +810m finalizes
-    # it and user 99's own +600m session; the +810m session stays open
-    _feed([(660, 7), (810, 99)])
-    assert _run() == [(7, 0, 2), (7, 660, 1), (8, 30, 1), (99, 600, 1)]
-
-
 def test_streaming_cms_folds_match_batch_grid(spark, tmp_path):
     """Live count-min grid folded per micro-batch must equal the batch
     grid over all keys ingested so far — after each feed AND across a
@@ -383,6 +228,54 @@ def test_streaming_cms_folds_match_batch_grid(spark, tmp_path):
     _run()
     _feed([2, 2, 9, 10])  # restart on the same checkpoint
     _run()
+
+
+def test_fold_replay_and_retention(spark, tmp_path):
+    """The exactly-once fold keeps only the newest snapshot and the base
+    a replay of it reads; replaying the last batch (its commit entry
+    deleted from the stream checkpoint) leaves the grid unchanged."""
+    from graphjet_spark.operators.sketches import cms_counters
+
+    ev_dir = str(tmp_path / "cms_in")
+    ck = str(tmp_path / "cms_ck")
+    grid_dir = str(tmp_path / "cms_grid")
+    batches = [[1, 2, 3], [1, 1, 4], [2, 9], [10, 3, 3]]
+    for keys in batches:
+        spark.createDataFrame([(k,) for k in keys], "user_id bigint").coalesce(
+            1
+        ).write.mode("append").parquet(ev_dir)
+
+    def _run():
+        stream = (
+            spark.readStream.schema("user_id bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(ev_dir)
+        )
+        ingest.streaming_cms(
+            spark, stream, grid_dir, checkpoint_dir=ck,
+            key_col="user_id", width=8, depth=2,
+        ).awaitTermination(120)
+        return {
+            (r["row"], r["bucket"]): r["cnt"]
+            for r in ingest.read_sketch_grid(spark, grid_dir).collect()
+        }
+
+    got = _run()
+    assert sorted(os.listdir(grid_dir)) == ["v=2", "v=3"]
+    every = spark.createDataFrame(
+        [(k,) for keys in batches for k in keys], "user_id bigint"
+    )
+    want = {
+        (r["row"], r["bucket"]): r["cnt"]
+        for r in cms_counters(every, "user_id", width=8, depth=2).collect()
+    }
+    assert got == want
+
+    # replay batch 3: both the commit entry and its checksum must go
+    os.remove(os.path.join(ck, "commits", "3"))
+    os.remove(os.path.join(ck, "commits", ".3.crc"))
+    assert _run() == want
+    assert sorted(os.listdir(grid_dir)) == ["v=2", "v=3"]
 
 
 def test_streaming_keep_list_matches_batch_dedup(spark, tmp_path):
