@@ -1465,9 +1465,7 @@ def _q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph -> canonical keeper per cluster.  Uses the convergent
     star-contraction CC (the scale path, ~4 rounds on clique-ish dedup
     clusters); the oracle's 12 unrolled hash-min rounds converge on
-    these pair graphs (verified at both gate scales), so values agree —
-    cc_fixed_iters remains available for parity on adversarial
-    long-chain graphs."""
+    these pair graphs (verified at both gate scales), so values agree."""
     return _keep_list(spark, sf_dir)
 
 

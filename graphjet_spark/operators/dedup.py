@@ -766,7 +766,6 @@ def dedup_keep_list(
     n: int = 1,
     threshold: float = 0.9,
     text_col: str = "text",
-    cc_fixed_iters: int | None = None,
 ) -> DataFrame:
     """End-to-end dedup pipeline: near-dup pairs -> connected components
     over the pair graph -> one canonical keeper per cluster (the
@@ -776,59 +775,40 @@ def dedup_keep_list(
     near-dup cluster (docs in no pair keep themselves).  A downstream
     pipeline keeps rows where doc_id == keep_id.
 
-    ``cc_fixed_iters``: None runs the log-round large-star/small-star
-    contraction to convergence (the scale path); an int runs exactly
-    that many hash-min flooding supersteps — the oracle-parity mode
-    (DuckDB unrolls the same fixed iteration count, so engine and
-    oracle agree even on a hypothetical cluster chain longer than the
-    budget).
-
-    The convergence path never materializes the quadratic all-pairs
-    dup graph: CC only needs connectivity, so it runs over the compact
+    The log-round large-star/small-star contraction runs to convergence
+    and never materializes the quadratic all-pairs dup graph: CC only
+    needs connectivity, so it runs over the compact
     connectivity-equivalent graph — a star from each exact-dup class
     member to its class-min plus ONE rep-rep edge per qualifying class
     pair.  Components (and hence keep_id = component min) are identical
     to CC over the expanded member-pair clique graph, but the edge
     count is O(docs + class pairs) instead of O(sum class_size^2) —
     the expanded graph at sf1 is 93.5M edges for 50k docs and OOMs the
-    no-op gate budget long before 100x.  The fixed-iters parity mode
-    keeps the expanded graph: hash-min flooding depth depends on the
-    graph SHAPE, and the oracle unrolls its rounds over the expanded
-    pair graph.
+    no-op gate budget long before 100x.
     """
-    spark = docs.sparkSession
-    from graphjet_spark.plans.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from graphjet_spark.plans.components import connected_components_star
 
-    if cc_fixed_iters is None:
-        classes, cls_pairs = _ngram_jaccard_class_pairs(
-            docs, n=n, threshold=threshold, text_col=text_col
+    classes, cls_pairs = _ngram_jaccard_class_pairs(
+        docs, n=n, threshold=threshold, text_col=text_col
+    )
+    roots = classes.groupBy("cls").agg(F.min("doc_id").alias("root"))
+    star = (
+        classes.join(roots, "cls")
+        .filter(F.col("doc_id") != F.col("root"))
+        .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
+    )
+    cross = (
+        cls_pairs.join(
+            roots.select(F.col("cls").alias("ca"), F.col("root").alias("src")),
+            "ca",
         )
-        roots = classes.groupBy("cls").agg(F.min("doc_id").alias("root"))
-        star = (
-            classes.join(roots, "cls")
-            .filter(F.col("doc_id") != F.col("root"))
-            .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
+        .join(
+            roots.select(F.col("cls").alias("cb"), F.col("root").alias("dst")),
+            "cb",
         )
-        cross = (
-            cls_pairs.join(
-                roots.select(F.col("cls").alias("ca"), F.col("root").alias("src")),
-                "ca",
-            )
-            .join(
-                roots.select(F.col("cls").alias("cb"), F.col("root").alias("dst")),
-                "cb",
-            )
-            .select("src", "dst")
-        )
-        comp = connected_components_star(spark, star.unionByName(cross))
-    else:
-        pairs = ngram_jaccard_pairs(
-            docs, n=n, threshold=threshold, text_col=text_col
-        ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        comp = connected_components(spark, pairs, fixed_iters=cc_fixed_iters)
+        .select("src", "dst")
+    )
+    comp = connected_components_star(docs.sparkSession, star.unionByName(cross))
     return (
         docs.select("doc_id")
         .join(comp, docs.doc_id == comp.id, "left")

@@ -61,7 +61,6 @@ def anf_sketch_histogram(
     *,
     r: int = 8,
     iters: int = 5,
-    partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Run ``iters`` ANF supersteps with ``r`` FM sketches per vertex;
@@ -84,7 +83,7 @@ def anf_sketch_histogram(
             + " as int)"
         )
     )
-    with SuperstepRunner(spark, "anf", partitions, checkpoint) as run:
+    with SuperstepRunner(spark, "anf", checkpoint=checkpoint) as run:
         # gather along out-edges: src collects dst sketches
         e = run.layout_edges(run.adopt(edges).select("src", "dst").distinct(), "dst")
 
@@ -119,7 +118,6 @@ def anf_sketch_histogram(
             )
 
         st = run.run(initial, step, iters=iters, keep=["id", *mcols, "hs"])
-        e.unpersist()
         return run.export(
             st.select(F.posexplode("hs").alias("t", "sketch_sum"))
             .groupBy("t", "sketch_sum")

@@ -38,13 +38,11 @@ def betweenness_sampled(
     *,
     max_depth: int = 6,
     round_to: int = 6,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns ``(id, bc)`` over all vertices reached from any source
     (sources themselves included, with their own delta mass from other
     sources); directed shortest paths, hop budget ``max_depth``."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
+    partitions = spark.sparkContext.defaultParallelism
     links = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))

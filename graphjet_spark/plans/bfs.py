@@ -29,7 +29,6 @@ def distances(
     *,
     algo: str,
     iters: int,
-    partitions: int | None,
 ) -> DataFrame:
     """``(source, id, dist)``: min total ``weight`` (an expression over
     ``src`` and ``dst``) of a path over the distinct directed edges from
@@ -37,7 +36,7 @@ def distances(
     sources = list(dict.fromkeys(int(s) for s in sources))
     if not sources:
         raise ValueError("no source vertex given")
-    with SuperstepRunner(spark, algo, partitions) as run:
+    with SuperstepRunner(spark, algo) as run:
         e = run.adopt(edges).select("src", "dst").distinct()
         state = run.min_plus(
             e.select("src", "dst", weight.alias("w")),
@@ -62,13 +61,11 @@ def bfs_distances(
     source: int,
     *,
     fixed_iters: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, dist) for vertices reachable from ``source`` within
     ``fixed_iters`` directed hops (dist = minimum hop count)."""
-    return bfs_distances_multi(
-        spark, edges, [source], fixed_iters=fixed_iters, partitions=partitions
-    ).select("id", "dist")
+    multi = bfs_distances_multi(spark, edges, [source], fixed_iters=fixed_iters)
+    return multi.select("id", "dist")
 
 
 def bfs_distances_multi(
@@ -77,7 +74,6 @@ def bfs_distances_multi(
     sources: list[int],
     *,
     fixed_iters: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source BFS: (source, id, dist) for each source in one
     superstep loop — one distance column per source, so k sources cost
@@ -85,7 +81,7 @@ def bfs_distances_multi(
     the second-degree operators applied to traversal depth)."""
     return distances(
         spark, edges, sources, F.lit(1), F.lit(0),
-        algo="bfs_distances", iters=fixed_iters, partitions=partitions,
+        algo="bfs_distances", iters=fixed_iters,
     )
 
 

@@ -77,12 +77,10 @@ def bowtie_decomposition(
     edges: DataFrame,
     *,
     fixed_iters: int = 12,
-    partitions: int | None = None,
 ) -> DataFrame:
     """``(id, bowtie_class)`` over the distinct directed edge set,
     classes in {CORE, IN, OUT, TUBE, TENDRIL, DISC}."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
+    partitions = spark.sparkContext.defaultParallelism
     e = (
         edges.select("src", "dst")
         .distinct()

@@ -45,24 +45,23 @@ def connected_components(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    max_iter: int = 50,
-    fixed_iters: int | None = None,
+    fixed_iters: int = 50,
     checkpoint: CheckpointManager | None = None,
-    partitions: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Returns ``(id, component)`` — component = min vertex id reachable.
-    ``stats`` (optional dict) receives the per-superstep metrics (rows,
-    changed count, per-partition rows, wall time) under ``"supersteps"``."""
+    """Returns ``(id, component)`` — component = min vertex id reachable
+    within at most ``fixed_iters`` supersteps, stopping once no label
+    changes.  ``stats`` (optional dict) receives the per-superstep
+    metrics (rows, changed count, per-partition rows, wall time) under
+    ``"supersteps"``."""
     with SuperstepRunner(
-        spark, "connected_components", partitions, checkpoint, stats
+        spark, "connected_components", checkpoint=checkpoint, stats=stats
     ) as run:
         sym = symmetrize(run.adopt(edges))
         labels = run.min_plus(
             sym.select(F.col("a").alias("src"), F.col("b").alias("dst"), F.lit(0).alias("w")),
             [F.col("id")],
-            iters=fixed_iters if fixed_iters is not None else max_iter,
-            settle=fixed_iters is None,
+            iters=fixed_iters,
         )
         return run.export(labels.select("id", F.col("d0").alias("component")))
 
@@ -134,7 +133,6 @@ def connected_components_star(
     *,
     max_rounds: int = 30,
     checkpoint: CheckpointManager | None = None,
-    partitions: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star — the
@@ -155,7 +153,7 @@ def connected_components_star(
 
     h = {"h": (F.coalesce(F.expr("bit_xor(xxhash64(id, v))"), F.lit(0)), _xor)}
     with SuperstepRunner(
-        spark, "connected_components_star", partitions, checkpoint, stats
+        spark, "connected_components_star", checkpoint=checkpoint, stats=stats
     ) as run:
         # the input may be an expensive un-materialized plan (e.g. a
         # near-dup pair pipeline): the runner's first action computes
@@ -195,9 +193,6 @@ def connected_components_delta(
     spark: SparkSession,
     old_labels: DataFrame,
     delta_edges: DataFrame,
-    *,
-    max_iter: int = 50,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Labels of ``G ∪ ΔE`` from converged labels of ``G`` — the
     delta-ingest path.  GraphJet appends edges to a live segment and
@@ -234,9 +229,9 @@ def connected_components_delta(
         )
         .where(F.col("src") != F.col("dst"))
     )
-    merge = connected_components(
-        spark, lifted, max_iter=max_iter, partitions=partitions
-    ).select(F.col("id").alias("component"), F.col("component").alias("root"))
+    merge = connected_components(spark, lifted).select(
+        F.col("id").alias("component"), F.col("component").alias("root")
+    )
 
     # brand-new vertices (absent from the old labeling) start as their
     # own label, then remap exactly like old labels; a new vertex whose

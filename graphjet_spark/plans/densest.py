@@ -36,7 +36,6 @@ def densest_subgraph(
     rounds: int = 12,
     num: int = 5,
     den: int = 2,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, peel_round, density) — vertices of the densest subgraph
     seen while peeling for ``rounds`` rounds at threshold factor
@@ -46,11 +45,9 @@ def densest_subgraph(
     ``peel_round``/``density`` are constant over the output: they ride
     along so the gate value-compares the full decision, not just the
     membership set."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     sym = (
         symmetrize(edges)
-        .repartition(partitions, "a")
+        .repartition(spark.sparkContext.defaultParallelism, "a")
         .sortWithinPartitions("a")
         .persist()
     )

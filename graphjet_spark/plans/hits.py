@@ -36,12 +36,11 @@ def hits(
     edges: DataFrame,
     *,
     fixed_iters: int = 10,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, hub, authority) after exactly ``fixed_iters``
     double-steps over the distinct edge set, each vector L1-normalized
     once at the end."""
-    with SuperstepRunner(spark, "hits", partitions) as run:
+    with SuperstepRunner(spark, "hits") as run:
         ded = run.adopt(edges).select("src", "dst").distinct()
         by_src, by_dst = run.layout_edges(ded, "src"), run.layout_edges(ded, "dst")
 
@@ -82,8 +81,6 @@ def hits(
             ),
             {"ht": (F.sum("h"), sum), "at": (F.sum("a"), sum)},
         )
-        by_src.unpersist()
-        by_dst.unpersist()
         # the totals are zero only on an empty graph: no rows to divide
         return run.export(
             out.select(

@@ -38,7 +38,6 @@ def _walk_sums(
     c: float,
     alpha: float,
     iters: int,
-    partitions: int | None,
 ) -> DataFrame:
     """``(id, name)``: ``iters`` supersteps of x = c + alpha * A^T x
     from x = 1 over the ``(src, dst)`` relation ``pairs(edges)`` and
@@ -46,7 +45,7 @@ def _walk_sums(
     counts grow geometrically on hub-heavy graphs; normalizing rescales
     the float64 sum-order noise with them, keeping the output
     cross-engine stable at any magnitude.  Ranking is unchanged."""
-    with SuperstepRunner(spark, name, partitions) as run:
+    with SuperstepRunner(spark, name) as run:
         e = run.layout_edges(pairs(run.adopt(edges)), "src")
         total = {"x_sum": (F.sum("x"), sum)}
 
@@ -72,7 +71,6 @@ def _walk_sums(
         # the last superstep's sum(x) (one more action if none ran); it
         # is zero only on an empty graph, which has no rows to divide
         sc = run.history[-1] if run.history else run.materialize(x, total)[1]
-        e.unpersist()
         return run.export(
             x.select("id", (F.col("x") / F.lit(float(sc["x_sum"]))).alias(name))
         )
@@ -84,7 +82,6 @@ def katz(
     *,
     alpha: float = 0.05,
     fixed_iters: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, katz) after exactly ``fixed_iters`` iterations of
     x = 1 + alpha * A^T x over the distinct edge set."""
@@ -96,7 +93,6 @@ def katz(
         c=1.0,
         alpha=alpha,
         iters=fixed_iters,
-        partitions=partitions,
     )
 
 
@@ -105,7 +101,6 @@ def eigenvector_centrality(
     edges: DataFrame,
     *,
     fixed_iters: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, eigen) — power iteration x = A^T x over the undirected
     symmetrized simple graph (Bonacich centrality), L1-normalized once
@@ -121,5 +116,4 @@ def eigenvector_centrality(
         c=0.0,
         alpha=1.0,
         iters=fixed_iters,
-        partitions=partitions,
     )

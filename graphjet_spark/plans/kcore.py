@@ -36,17 +36,13 @@ def k_core(
     edges: DataFrame,
     k: int,
     *,
-    max_iter: int = 100,
-    fixed_iters: int | None = None,
-    partitions: int | None = None,
+    fixed_iters: int = 100,
 ) -> DataFrame:
-    """Returns (id) — the vertices of the k-core (after ``fixed_iters``
-    peel rounds when given, else at the fixpoint)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
+    """Returns (id) — the vertices of the k-core: at most ``fixed_iters``
+    peel rounds, stopping at the fixpoint (a round that drops nothing)."""
     sym = (
         symmetrize(edges)
-        .repartition(partitions, "a")
+        .repartition(spark.sparkContext.defaultParallelism, "a")
         .sortWithinPartitions("a")
         .persist()
     )
@@ -55,8 +51,7 @@ def k_core(
     )
     n_prev = survivors.count()
 
-    total = fixed_iters if fixed_iters is not None else max_iter
-    for _ in range(total):
+    for _ in range(fixed_iters):
         # degrees within the surviving subgraph: both endpoints alive
         deg = (
             sym.join(survivors.withColumnRenamed("id", "a"), "a", "left_semi")
@@ -70,7 +65,7 @@ def k_core(
             .localCheckpoint(eager=True)
         )
         n = survivors.count()
-        if fixed_iters is None and n == n_prev:
+        if n == n_prev:
             break
         n_prev = n
 
@@ -83,7 +78,6 @@ def coreness(
     edges: DataFrame,
     *,
     fixed_iters: int = 12,
-    partitions: int | None = None,
 ) -> DataFrame:
     """``(id, coreness)`` — the full core decomposition via iterated
     h-index (Montresor, De Pellegrini & Miorandi, "Distributed k-core
@@ -102,7 +96,7 @@ def coreness(
     per-vertex DISTINCT-value rows (far fewer than degree), and one MAX
     — every stage two-phase, hub-safe."""
     w = Window.partitionBy("a").orderBy(F.desc("c"))
-    with SuperstepRunner(spark, "coreness", partitions) as run:
+    with SuperstepRunner(spark, "coreness") as run:
         sym = gather_table(run, edges)
 
         def step(st: DataFrame, _sc: dict) -> DataFrame:
@@ -128,5 +122,4 @@ def coreness(
             iters=fixed_iters,
             keep=["id", "c"],
         )
-        sym.unpersist()
         return run.export(cur.select("id", F.col("c").cast("bigint").alias("coreness")))

@@ -31,13 +31,14 @@ def k_truss(
     k: int,
     *,
     fixed_iters: int = 4,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns the surviving undirected edges (a, b), a < b, after
     ``fixed_iters`` peel rounds at support threshold k-2."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    surv = undirected(edges).repartition(partitions, "a").localCheckpoint(eager=True)
+    surv = (
+        undirected(edges)
+        .repartition(spark.sparkContext.defaultParallelism, "a")
+        .localCheckpoint(eager=True)
+    )
     thresh = k - 2
 
     for _ in range(fixed_iters):

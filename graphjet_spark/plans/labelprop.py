@@ -30,7 +30,6 @@ def label_propagation(
     *,
     iters: int = 5,
     checkpoint: CheckpointManager | None = None,
-    partitions: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Returns ``(id, label)`` after exactly ``iters`` synchronous steps.
@@ -39,7 +38,9 @@ def label_propagation(
     canonical graphs have no isolated vertices).  ``stats`` (optional
     dict) receives the per-superstep metrics under ``"supersteps"``.
     """
-    with SuperstepRunner(spark, "label_propagation", partitions, checkpoint, stats) as run:
+    with SuperstepRunner(
+        spark, "label_propagation", checkpoint=checkpoint, stats=stats
+    ) as run:
         sym = gather_table(run, edges)
 
         def step(labels: DataFrame, _sc: dict) -> DataFrame:
@@ -61,7 +62,6 @@ def label_propagation(
             iters=iters,
             keep=["id", "lbl"],
         )
-        sym.unpersist()
         return run.export(labels.select("id", F.col("lbl").alias("label")))
 
 

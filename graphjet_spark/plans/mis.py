@@ -20,10 +20,12 @@ Scale shape: both entry points run one Luby round per superstep of
 :class:`~graphjet_spark.plans.superstep.SuperstepRunner`.  The state
 ``(id, color, s)`` holds every non-isolated vertex and shares the hash
 blocks of :func:`~graphjet_spark.plans.components.gather_table`, so
-both gathers of a round (the previous winners' exclusion, then the
-neighbor-max of the priorities) are exchange-free merge joins with the
-symmetrized edges plus one ``groupBy``.  Every round gathers over all
-edges; rounds stop early (exactly) once no vertex is undecided.
+both gathers of a round (the neighbor-max of the priorities, then the
+winners' exclusion of their neighbors) are exchange-free merge joins
+with the symmetrized edges plus one ``groupBy``.  Every round gathers
+over all edges; rounds stop early (exactly) once no vertex is
+undecided, which the round that decides the last vertex already
+reports.
 """
 
 from __future__ import annotations
@@ -38,19 +40,6 @@ from graphjet_spark.plans.components import gather_table
 from graphjet_spark.plans.superstep import SuperstepRunner
 
 
-def _exclude(sym: DataFrame, st: DataFrame) -> DataFrame:
-    """Undecided neighbors of the rows with ``s = 2`` become 0, and
-    those winners become 1."""
-    s = F.col("s")
-    won = st.where(s == 2)
-    hit = sym.join(won, sym.b == won.id).groupBy("a").count()
-    return st.join(hit, st.id == hit.a, "left").select(
-        "id",
-        "color",
-        F.when(s == 2, 1).when((s == -1) & hit.a.isNotNull(), 0).otherwise(s).alias("s"),
-    )
-
-
 def _luby(
     run: SuperstepRunner,
     sym: DataFrame,
@@ -62,12 +51,13 @@ def _luby(
     ``sym`` (the runner's gather table), one round per superstep, with
     ``priority(c, t)`` for round t (from 1) of color c.  A color's first
     round sets the colored rows to 1 and every other row undecided; a
-    strict winner gets ``s = 2`` and ``color = c``.  Once no row is
-    undecided the rest of that color's rounds would change nothing, so
-    the loop skips to the next color, and stops once no row is uncolored
-    (or the last color has no undecided row)."""
-    # s: -1 undecided, 2 won in the previous superstep, 1 decided (in
-    # the set, or colored), 0 excluded (a neighbor is in the set)
+    strict winner gets ``s = 1`` and ``color = c``, and its undecided
+    neighbors ``s = 0``.  Once no row is undecided the rest of that
+    color's rounds would change nothing, so the loop skips to the next
+    color, and stops once no row is uncolored (or the last color has no
+    undecided row)."""
+    # s: -1 undecided, 1 decided (in the set, or colored), 0 excluded (a
+    # neighbor is in the set); 2 marks a winner inside a superstep
     s = F.col("s")
     pos = [0, 0]  # (color, round) of the last superstep planned
 
@@ -76,17 +66,23 @@ def _luby(
         if t == rounds or (t and sc["undecided"] == 0):
             c, t = c + 1, 0
         pos[:] = c, t + 1
-        st = _exclude(sym, st)
         if t == 0:
             st = st.withColumn("s", F.when(s == 1, 1).otherwise(-1))
         h = priority(c, t + 1)
         pr = st.where(s == -1).select("id", h.alias("h"))
         nbr = sym.join(pr, sym.b == pr.id).groupBy("a").agg(F.max("h").alias("mh"))
         win = (s == -1) & (nbr.mh.isNull() | (h > nbr.mh))
-        return st.join(nbr, st.id == nbr.a, "left").select(
+        st = st.join(nbr, st.id == nbr.a, "left").select(
             "id",
             F.when(win, c).otherwise(F.col("color")).alias("color"),
             F.when(win, 2).otherwise(s).alias("s"),
+        )
+        # the winners exclude their undecided neighbors in the same round
+        won = st.where(s == 2)
+        hit = sym.join(won, sym.b == won.id).groupBy(F.col("a").alias("hit")).count()
+        excluded = (s == -1) & F.col("hit").isNotNull()
+        return st.join(hit, st.id == hit.hit, "left").select(
+            "id", "color", F.when(s == 2, 1).when(excluded, 0).otherwise(s).alias("s")
         )
 
     aggs = {
@@ -114,25 +110,20 @@ def luby_mis(
     edges: DataFrame,
     *,
     fixed_iters: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, state) over the symmetrized simple graph: 1 = in the MIS,
     0 = excluded (a neighbor is in the MIS), -1 = still undecided when
     the round budget ran out (the oracle-parity fixed-depth mode)."""
-    with SuperstepRunner(spark, "luby_mis", partitions) as run:
-        sym = gather_table(run, edges)
+    with SuperstepRunner(spark, "luby_mis") as run:
         st = _luby(
             run,
-            sym,
+            gather_table(run, edges),
             1,
             fixed_iters,
             lambda _c, t: md5_prefix_bigint(
                 F.concat(F.lit("mis:"), F.col("id").cast("string"), F.lit(f":{t}"))
             ),
         )
-        # the last round's winners still exclude their neighbors
-        st, _ = run.materialize(_exclude(sym, st), {})
-        sym.unpersist()
         return run.export(st.select("id", F.col("s").cast("int").alias("state")))
 
 
@@ -142,7 +133,6 @@ def greedy_coloring(
     *,
     colors: int = 3,
     mis_iters: int = 6,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, color) — distributed greedy graph coloring by iterated
     Luby MIS (Jones & Plassmann '93 family): color c is a maximal
@@ -156,16 +146,14 @@ def greedy_coloring(
     only for undecided vertices of the current color, so edges to
     already-colored vertices drop out of the neighbor-max gather on
     their own."""
-    with SuperstepRunner(spark, "greedy_coloring", partitions) as run:
-        sym = gather_table(run, edges)
+    with SuperstepRunner(spark, "greedy_coloring") as run:
         st = _luby(
             run,
-            sym,
+            gather_table(run, edges),
             colors,
             mis_iters,
             lambda c, t: md5_prefix_bigint(
                 F.concat(F.lit("clr:"), F.col("id").cast("string"), F.lit(f":{c}:{t}"))
             ),
         )
-        sym.unpersist()
         return run.export(st.select("id", F.col("color").cast("int").alias("color")))

@@ -211,7 +211,6 @@ def pagerank(
             start_aggs=dm_agg,
             done=None if fixed_iters is not None else lambda s, _: s["delta_linf"] < tol,
         )
-        links.unpersist()
         return run.export(ranks.select("id", F.col("rank").alias("pagerank")))
 
 
@@ -223,7 +222,6 @@ def ppr_grouped(
     damping: float = 0.85,
     fixed_iters: int = 6,
     k: int = 20,
-    partitions: int | None = None,
     assume_simple: bool = False,
     checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
@@ -253,14 +251,13 @@ def ppr_grouped(
     in the loop).  Seeds absent from the vertex set are dropped.
     """
     d = damping
-    with SuperstepRunner(spark, "ppr_grouped", partitions, checkpoint) as run:
+    with SuperstepRunner(spark, "ppr_grouped", checkpoint=checkpoint) as run:
         links, vertices = _prepare(run, run.adopt(edges), assume_simple, None)
-        vertices = vertices.persist()
+        vertices = run._cache(vertices)
         dangling = vertices.where(F.col("dng")).select("id")
-        seed_df = (
+        seed_df = run._cache(
             run.child.createDataFrame([(int(s),) for s in seeds], "seed bigint")
             .join(vertices, F.col("seed") == vertices.id, "left_semi")
-            .persist()
         )
 
         def step(state: DataFrame, _sc: dict) -> DataFrame:
@@ -306,9 +303,6 @@ def ppr_grouped(
                 keep=["seed", "id", "rank"],
             )
         )
-        links.unpersist()
-        vertices.unpersist()
-        seed_df.unpersist()
 
     from pyspark.sql import Window
 

@@ -93,10 +93,9 @@ def salsa(
 
     out_deg = sub.groupBy("src").agg(F.sum("ew").alias("deg"))
     in_recip = sub.groupBy("dst").agg((1.0 / F.sum("ew")).alias("recip"))
-    links = (
-        sub.join(out_deg, "src").join(in_recip, "dst").persist()
-    )
-    links.count()
+    # eager checkpoint, not persist: the returned lazy plan reads links,
+    # so a persist here could never be released
+    links = sub.join(out_deg, "src").join(in_recip, "dst").localCheckpoint(eager=True)
 
     # --- seeding -------------------------------------------------------
     alive = {r["src"] for r in out_deg.select("src").collect()}

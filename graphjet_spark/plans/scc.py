@@ -49,7 +49,6 @@ def strongly_connected_components(
     edges: DataFrame,
     *,
     max_rounds: int = 30,
-    partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Returns ``(id, scc)`` with one row per vertex; ``scc`` = min
@@ -63,7 +62,7 @@ def strongly_connected_components(
     result is identical to an uninterrupted run — resume-equality
     tested)."""
     remaining_agg = {"remaining": (F.count_if(F.col("final") == 0), sum)}
-    with SuperstepRunner(spark, "scc", partitions, checkpoint) as run:
+    with SuperstepRunner(spark, "scc", checkpoint=checkpoint) as run:
         e = run.layout_edges(
             run.adopt(edges)
             .select("src", "dst")
@@ -106,7 +105,6 @@ def strongly_connected_components(
             start_aggs=remaining_agg,
             done=lambda s, _: s["remaining"] == 0,
         )
-        e.unpersist()
         return run.export(st.select("id", "scc"))
 
 

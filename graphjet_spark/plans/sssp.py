@@ -39,19 +39,17 @@ def sssp(
     edges: DataFrame,
     source: int,
     *,
-    fixed_iters: int | None = None,
-    max_iter: int = 30,
+    fixed_iters: int = 30,
     weight: Column | None = None,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, dist) for every vertex reached from ``source`` along
-    directed edges, dist = min total weight (``weight`` is an expression
-    over ``src`` and ``dst``, :func:`derived_weight` by default)."""
+    directed edges within at most ``fixed_iters`` supersteps, dist = min
+    total weight (``weight`` is an expression over ``src`` and ``dst``,
+    :func:`derived_weight` by default)."""
     return distances(
         spark, edges, [source],
         derived_weight() if weight is None else weight,
         F.lit(0).cast("bigint"),
         algo="sssp",
-        iters=fixed_iters if fixed_iters is not None else max_iter,
-        partitions=partitions,
+        iters=fixed_iters,
     ).select("id", "dist")

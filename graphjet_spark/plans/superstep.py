@@ -18,6 +18,11 @@ step).  Hash-min CC, BFS and SSSP share one frontier step,
   relation, so ``edges ⋈ state`` and ``state ⋈ aggregate`` are
   exchange-free merge joins; the one shuffle is the message aggregation
   with its map-side partial combine (hub fan-in collapses per task).
+  P is the caller's ``defaultParallelism`` (PageRank may set it).
+- **Owned cache.**  Every relation :meth:`SuperstepRunner.layout_edges`
+  persists is unpersisted on exit, after the views are dropped, also
+  when the loop raises.  The returned plan must therefore read only the
+  loop's checkpointed state, never a relation the runner cached.
 - **One action per superstep.**  The action that materializes the lazy
   ``localCheckpoint`` returns the superstep's per-partition aggregates:
   the scalars the next superstep reads as literals, and its metrics
@@ -44,8 +49,9 @@ Aggs = dict[str, tuple[Column, Callable]]
 
 class SuperstepRunner:
     """Owns one superstep loop: the planning session, the state layout,
-    the per-superstep action, commits and resume.  Use as a context
-    manager so the global temp views are dropped."""
+    the per-superstep action, commits, resume and the lifetime of the
+    relations it caches.  Use as a context manager so the global temp
+    views are dropped and the cached relations released."""
 
     def __init__(
         self,
@@ -69,6 +75,7 @@ class SuperstepRunner:
             stats["supersteps"] = self.history
         self._db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
         self._views: list[str] = []
+        self._cached: list[DataFrame] = []
 
     def __enter__(self) -> "SuperstepRunner":
         return self
@@ -76,6 +83,14 @@ class SuperstepRunner:
     def __exit__(self, *exc) -> None:
         for name in self._views:
             self.spark.catalog.dropGlobalTempView(name)
+        for df in self._cached:
+            df.unpersist()
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted until the loop exits."""
+        df = df.persist()
+        self._cached.append(df)
+        return df
 
     def _view(self, df: DataFrame) -> str:
         name = f"superstep_{uuid.uuid4().hex}"
@@ -99,7 +114,7 @@ class SuperstepRunner:
         """An edge relation laid out by its gather ``key`` (the CSR
         layout): the state's P hash blocks, sorted by ``key``, cached,
         so the per-superstep merge join never shuffles or re-sorts it."""
-        return df.repartition(self.p, key).sortWithinPartitions(key).persist()
+        return self._cache(df.repartition(self.p, key).sortWithinPartitions(key))
 
     def materialize(self, df: DataFrame, aggs: Aggs) -> tuple[DataFrame, dict]:
         """Lazy ``localCheckpoint`` of ``df`` plus the one action that
@@ -171,15 +186,14 @@ class SuperstepRunner:
         seeds: list[Column],
         *,
         iters: int,
-        settle: bool = True,
         ids: DataFrame | None = None,
     ) -> DataFrame:
         """Min-plus relaxation, the loop of hash-min CC (weight 0), BFS (1)
         and SSSP: a superstep sets ``d(v) = min(d(v), d(u) + w)`` over the
         edges ``(src=u, dst=v, w)``.  The state holds every ``dst`` and
         ``ids`` row, with one column ``d<i>`` per ``seeds`` expression over
-        ``id`` (null: unreached); returns ``(id, d0, ...)`` after ``iters``
-        supersteps, fewer with ``settle`` once none changes.  Only rows that
+        ``id`` (null: unreached); returns ``(id, d0, ...)`` after at most
+        ``iters`` supersteps, stopping once none changes.  Only rows that
         changed in the previous superstep (``fresh``) send, which is exact
         for a monotone min, and the filter keeps the state's layout, so the
         one shuffle is the ``min`` per ``dst``."""
@@ -210,13 +224,11 @@ class SuperstepRunner:
             )
 
         reached = functools.reduce(operator.or_, [F.col(d).isNotNull() for d in ds])
-        out = self.run(
+        return self.run(
             lambda: self.layout(state.withColumn("fresh", reached)),
             step,
             iters=iters,
             keep=["id", *ds, "fresh"],
             aggs={"changed": (F.count_if("fresh"), sum)},
-            done=(lambda s, _: s["changed"] == 0) if settle else None,
-        )
-        e.unpersist()
-        return out.select("id", *ds)
+            done=lambda s, _: s["changed"] == 0,
+        ).select("id", *ds)

@@ -35,13 +35,13 @@ def _step_hash(walk_col: str, step: int):
     return md5_prefix_bigint(s)
 
 
-def _sorted_adjacency(e: DataFrame, partitions: int) -> DataFrame:
+def _sorted_adjacency(e: DataFrame) -> DataFrame:
     """(src, nbrs) with ``nbrs`` the sorted out-neighbor array, persisted
     (the caller unpersists)."""
     return (
         e.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .repartition(partitions, "src")
+        .repartition(e.sparkSession.sparkContext.defaultParallelism, "src")
         .persist()
     )
 
@@ -62,13 +62,10 @@ def hash_walk_corpus(
     edges: DataFrame,
     *,
     length: int = 4,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(walk_id, step, vertex) — one ``length``-step walk per vertex
     with out-edges; step 0 is the start vertex, walks stop at sinks."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    adj = _sorted_adjacency(edges.select("src", "dst").distinct(), partitions)
+    adj = _sorted_adjacency(edges.select("src", "dst").distinct())
     frontier = adj.select(
         F.col("src").alias("walk_id"), F.col("src").alias("vertex")
     ).localCheckpoint(eager=True)
@@ -122,7 +119,6 @@ def node2vec_walk_corpus(
     w_return: int = 1,
     w_neighbor: int = 2,
     w_far: int = 4,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(walk_id, step, vertex) — second-order biased walks (node2vec,
     Grover & Leskovec KDD'16) in the same deterministic-hash form as
@@ -147,8 +143,7 @@ def node2vec_walk_corpus(
     all steps."""
     from pyspark.sql import Window
 
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
+    partitions = spark.sparkContext.defaultParallelism
     e = (
         edges.select("src", "dst")
         .distinct()
@@ -258,7 +253,6 @@ def walk_sample_subgraph(
     *,
     length: int = 4,
     seed_pct: int = 5,
-    partitions: int | None = None,
 ) -> DataFrame:
     """``(src, dst)`` — random-walk graph sampling (Leskovec &
     Faloutsos KDD'06: RW samples preserve degree/clustering shape far
@@ -273,12 +267,10 @@ def walk_sample_subgraph(
     Scale shape: the walk loop is frontier-sized supersteps over the
     once-built sorted adjacency; the induced-edge step is two
     semi-joins of the edge table against the (small) visited set."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     # eager checkpoint, not persist: e outlives this function inside the
     # returned lazy plan, so a persist here would leak cached blocks
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    adj = _sorted_adjacency(e, partitions)
+    adj = _sorted_adjacency(e)
     seed_h = md5_prefix_bigint(
         F.concat(F.lit("smp:"), F.col("src").cast("string"))
     )

@@ -55,7 +55,6 @@ def wl_colors(
     edges: DataFrame,
     *,
     rounds: int = 3,
-    partitions: int | None = None,
 ) -> DataFrame:
     """``(id, wl_color, class_size)`` after ``rounds`` WL refinements
     over the symmetrized simple graph (self-loops dropped, matching
@@ -67,7 +66,7 @@ def wl_colors(
             "hc", _h(F.concat(F.lit("wl:"), F.col("c").cast("string"))) % F.lit(_MOD)
         )
 
-    with SuperstepRunner(spark, "wl_colors", partitions) as run:
+    with SuperstepRunner(spark, "wl_colors") as run:
         sym = gather_table(run, edges)
 
         def initial() -> DataFrame:
@@ -118,5 +117,4 @@ def wl_colors(
         out = lab.join(classes, "c").select(
             "id", F.col("c").alias("wl_color"), "class_size"
         )
-        sym.unpersist()
         return run.export(out)

@@ -16,6 +16,11 @@ def spark():
     yield s
 
 
+def cached_relations(spark) -> int:
+    """Relations in Spark's cache manager (shared by every session)."""
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().length()
+
+
 def edges_df(spark, pairs, extra_cols=None):
     """Build an edge DataFrame from (src, dst) pairs."""
     rows = [(int(s), int(d)) for s, d in pairs]

@@ -100,7 +100,7 @@ def test_training_data_pipeline_end_to_end(spark):
 
     # 1. dedup: every doc maps to exactly one keeper; keepers keep
     # themselves
-    keep = dedup_keep_list(docs, threshold=0.9, cc_fixed_iters=8)
+    keep = dedup_keep_list(docs, threshold=0.9)
     assert keep.count() == n_docs
     keepers = keep.where(F.col("doc_id") == F.col("keep_id"))
     n_keep = keepers.count()

@@ -30,6 +30,8 @@ from graphjet_spark.operators.similarity import NORMS, intersection_similarity
 from graphjet_spark.operators.socialproof import social_proof
 from graphjet_spark.plans.salsa import salsa, salsa_montecarlo
 
+from .conftest import cached_relations
+
 CANON = (
     [(1, r) for r in (2, 3, 4, 5)]
     + [(2, r) for r in (5, 6, 10)]
@@ -425,6 +427,17 @@ def test_salsa_weighted_transitions(spark):
     }
     base_scores = {r["id"]: r["score"] for r in base}
     assert w_skew[5] > base_scores[5]
+
+
+def test_salsa_calls_leave_no_cached_relation(spark):
+    """The returned lazy plan reads the laid-out links, so they are an
+    eager checkpoint, not a persist no caller could ever release: repeated
+    calls leave Spark's cache manager as they found it."""
+    e = typed_edges_df(spark, CANON)
+    cached = cached_relations(spark)
+    for _ in range(3):
+        salsa(e, query_node=1, seeds_with_weight={2: 1.0}).collect()
+    assert cached_relations(spark) == cached
 
 
 def test_salsa_rejects_even_walk_length(spark):

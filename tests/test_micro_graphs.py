@@ -244,10 +244,9 @@ def py_luby(pairs, colors, rounds, prio):
     rounds over the still-uncolored vertices with priority
     ``prio(v, c, t)`` (nobody wins a tie).  Returns ``(color, und,
     steps)``: each vertex's color (-1 = uncolored), the last color's
-    undecided set, and the supersteps the engine runs.  The engine
-    excludes a round's losers in the next superstep, so it stops a color
-    after the first round that leaves no vertex undecided or excluded
-    only there; the rounds it skips would change nothing."""
+    undecided set, and the supersteps the engine runs: it stops a color
+    after the first round that leaves no vertex undecided; the rounds it
+    skips would change nothing."""
     adj: dict[int, set[int]] = {}
     for a, b in pairs:
         if a != b:
@@ -267,9 +266,8 @@ def py_luby(pairs, colors, rounds, prio):
             }
             for v in wins:
                 color[v] = c
-            left = und - wins
-            und = left - {u for w in wins for u in adj[w]}
-            if not left:
+            und = und - wins - {u for w in wins for u in adj[w]}
+            if not und:
                 break
     return color, und, steps
 

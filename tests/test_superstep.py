@@ -4,7 +4,8 @@ BFS, SSSP, LP, Katz, eigenvector, HITS, ANF, coreness, WL, Luby MIS and
 greedy coloring plans with a fixed number of shuffles (one; two for
 HITS and coreness, three for a Luby round) and no broadcast, runs as
 one Spark job, matches the numpy mirrors of tools/mirror_check.py (or
-a literal mirror), and leaves the caller's session as it found it."""
+a literal mirror), and leaves the caller's session and Spark's cache
+manager as it found them, also when the loop raises."""
 
 from __future__ import annotations
 
@@ -27,7 +28,7 @@ from graphjet_spark.plans.sssp import sssp
 from graphjet_spark.plans.wl import wl_colors
 from pyspark.sql import functions as F
 
-from .conftest import edges_df
+from .conftest import cached_relations, edges_df
 from .test_micro_graphs import py_greedy_coloring, py_luby_mis, py_wl_colors
 
 # hub 0 links to and from 1..8 (and 1..7 back); 9 and 13 are dangling
@@ -167,6 +168,24 @@ def _weighted(spark):
 SYM = sorted({(s, d) for s, d in zip(SRCI, DSTI)} | {(d, s) for s, d in zip(SRCI, DSTI)})
 SYM_SRC, SYM_DST = (np.array(x) for x in zip(*SYM))
 
+
+def _hash_min_ref():
+    """Synchronous hash-min over SYM: the labels over UIDS and the
+    supersteps until one changes nothing (the engine's stop rule)."""
+    lab = UIDS.copy()
+    steps = 0
+    while True:
+        steps += 1
+        new = lab.copy()
+        for s, d in SYM:
+            new[d] = min(new[d], lab[s])
+        if (new == lab).all():
+            return lab, steps
+        lab = new
+
+
+CC_REF = _hash_min_ref()
+
 CASES = {
     # name: (call, result column, expected values over UIDS or None,
     #        setup plans, exchanges per superstep, plans after the loop)
@@ -193,15 +212,14 @@ CASES = {
         lambda: _ppr_ref(np.full(len(UIDS), 1.0 / len(UIDS)), WEIGHTS),
         2, 1, 0,
     ),
+    # CC and the traversals stop once no label or distance changes:
+    # SUPERSTEPS below
     "components": (
-        lambda spark, **kw: connected_components(
-            spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw
-        ),
+        lambda spark, **kw: connected_components(spark, edges_df(spark, PAIRS), **kw),
         "component",
         lambda: mc.mirror_cc(UIDS, SRCI, DSTI),
         1, 1, 0,
     ),
-    # traversals stop once no distance changes: SUPERSTEPS below
     "bfs_multi": (
         lambda spark, **kw: bfs_distances_multi(
             spark, edges_df(spark, PAIRS), BFS_SOURCES, **kw
@@ -268,14 +286,13 @@ CASES = {
         lambda: np.array([py_wl_colors(PAIRS, ITERS)[u] for u in UIDS]),
         1, 1, 0,
     ),
-    # a Luby round: the exclusion gather (planned twice: the priority
-    # filter and the final join both read it) and the priority gather;
-    # MIS materializes one last exclusion of the final round's winners
+    # a Luby round: the priority gather (planned twice: the winners'
+    # filter and the final join both read it) and the exclusion gather
     "luby_mis": (
         lambda spark, **kw: luby_mis(spark, edges_df(spark, PAIRS), fixed_iters=ITERS, **kw),
         "state",
         lambda: np.array([MIS_REF[0][u] for u in UIDS]),
-        1, 3, 1,
+        1, 3, 0,
     ),
     "greedy_coloring": (
         lambda spark, **kw: greedy_coloring(
@@ -289,6 +306,7 @@ CASES = {
 
 
 SUPERSTEPS = {
+    "components": CC_REF[1],
     "bfs_multi": BFS_REF[1],
     "sssp": SSSP_REF[1],
     "luby_mis": MIS_REF[1],
@@ -301,6 +319,9 @@ def test_reference_is_the_mirror():
     np.testing.assert_allclose(
         _ppr_ref(uniform), mc.mirror_pagerank(UIDS, SRCI, DSTI, ITERS), atol=1e-15
     )
+    assert (CC_REF[0] == mc.mirror_cc(UIDS, SRCI, DSTI)).all()
+    # PAIRS settles before the budget, so the stop rule is exercised
+    assert CC_REF[1] < ITERS
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
@@ -309,13 +330,16 @@ def test_one_exchange_per_superstep_and_mirror_values(spark, checkpointed, name)
     steps = SUPERSTEPS.get(name, ITERS)
     conf = {k: spark.conf.get(k) for k in CALLER_CONF}
     views = {t.name for t in spark.catalog.listTables("global_temp")}
+    cached = cached_relations(spark)
 
     result = call(spark)
 
-    # isolation: the caller's session is untouched and owns the result
+    # isolation: the caller's session is untouched and owns the result;
+    # every relation the loop cached is released
     assert {k: spark.conf.get(k) for k in CALLER_CONF} == conf
     assert result.sparkSession is spark
     assert {t.name for t in spark.catalog.listTables("global_temp")} == views
+    assert cached_relations(spark) == cached
 
     # plan shape: setup plans, then one plan per superstep whose only
     # (non-broadcast) shuffles are its message aggregations
@@ -349,6 +373,7 @@ def test_stats_cost_no_job(spark, name):
     superstep runs anyway: the same job count as without it, and one
     job per superstep after a fixed setup."""
     call, _, _, setup, _, _ = CASES[name]
+    iters = SUPERSTEPS.get(name, ITERS)
     sc = spark.sparkContext
 
     def jobs(group, **kw):
@@ -362,9 +387,9 @@ def test_stats_cost_no_job(spark, name):
     stats: dict = {}
     with_stats = jobs(f"superstep-stats-{name}", stats=stats)
     assert with_stats == jobs(f"superstep-plain-{name}")
-    assert with_stats == setup + ITERS
+    assert with_stats == setup + iters
     steps = stats["supersteps"]
-    assert [s["iteration"] for s in steps] == list(range(1, ITERS + 1))
+    assert [s["iteration"] for s in steps] == list(range(1, iters + 1))
     for s in steps:
         assert s["rows"] == len(UIDS) == sum(p["rows"] for p in s["partitions"])
         assert s["elapsed_s"] > 0
@@ -372,6 +397,18 @@ def test_stats_cost_no_job(spark, name):
         assert all("delta_linf" in s and "dangling_mass" in s for s in steps)
     if name == "components":
         assert steps[-1]["changed"] <= steps[0]["changed"]
+
+
+def test_loop_that_raises_frees_its_cache(spark):
+    """A loop that raises after laying out its edges (personalized
+    PageRank whose only seed is no vertex) still releases them, and
+    drops its views."""
+    views = {t.name for t in spark.catalog.listTables("global_temp")}
+    cached = cached_relations(spark)
+    with pytest.raises(ValueError, match="no teleport seed"):
+        pagerank(spark, edges_df(spark, PAIRS), teleport={999: 1.0})
+    assert cached_relations(spark) == cached
+    assert {t.name for t in spark.catalog.listTables("global_temp")} == views
 
 
 def test_concurrent_callers_share_one_session(spark):

@@ -238,8 +238,7 @@ def test_ngram_jaccard_sparse_and_dense_paths_agree(spark):
 
 def test_dedup_keep_list_matches_union_find(spark):
     """Keep-list pipeline vs a pure-Python mirror: brute-force Jaccard
-    pairs >= t, union-find clustering, min id per group — both CC modes
-    (fixed-iteration flooding and convergent star contraction) agree."""
+    pairs >= t, union-find clustering, min id per group."""
     rng = np.random.default_rng(17)
     vocab = [f"w{i}" for i in range(20)]
     base = [
@@ -277,14 +276,11 @@ def test_dedup_keep_list_matches_union_find(spark):
         for i in members:
             want[i] = m
 
-    for mode in (None, 12):  # star contraction / fixed flooding
-        got = {
-            r["doc_id"]: r["keep_id"]
-            for r in dedup_keep_list(
-                docs, n=1, threshold=t, cc_fixed_iters=mode
-            ).collect()
-        }
-        assert got == want
+    got = {
+        r["doc_id"]: r["keep_id"]
+        for r in dedup_keep_list(docs, n=1, threshold=t).collect()
+    }
+    assert got == want
 
 
 def test_dedup_keep_list_delta_matches_full_recompute(spark):

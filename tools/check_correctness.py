@@ -11,6 +11,10 @@ in the driver's CORRECTNESS_rN.json schema (per query: rows_match /
 schema_match / hash_match / spark_rows / oracle_rows / err) so the full
 153-query surface ships as a machine-readable artifact each round
 (``CORRECTNESS_full_rN.json``) instead of a log the judge must re-run.
+
+A query whose call leaves relations in Spark's cache manager (counted
+before the call and after its result is collected) fails as ``LEAK``:
+no query may hold cached memory past its own run.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ ORACLE_TIMEOUT = float(os.environ.get("GATE_ORACLE_TIMEOUT", "0"))
 _soft, _hard = resource.getrlimit(resource.RLIMIT_NOFILE)
 resource.setrlimit(resource.RLIMIT_NOFILE, (min(65536, _hard), _hard))
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from graphjet_spark.session import get_spark  # noqa: E402
@@ -114,6 +118,9 @@ def main() -> int:
 
     import gc
 
+    def cached_relations() -> int:
+        return spark._jsparkSession.sharedState().cacheManager().cachedData().length()
+
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -124,6 +131,7 @@ def main() -> int:
         # GraphTables stay referenced and survive this).
         gc.collect()
         spark.sparkContext._jvm.System.gc()
+        cached = cached_relations()
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -144,6 +152,12 @@ def main() -> int:
                 failures += 1
             continue
         t1 = time.time()
+        leaked = cached_relations() - cached
+        if leaked:
+            print(f"{name}: LEAK {leaked} cached relation(s) left behind [{t1 - t0:.1f}s]")
+            record(name, spark_rows=len(sdf), err=f"leak: {leaked} cached relations")
+            failures += 1
+            continue
         if name not in osql:
             print(f"{name}: rows={len(sdf)} (no oracle, rows-only) [{t1 - t0:.1f}s]")
             record(name, spark_rows=len(sdf), err="no_oracle")
