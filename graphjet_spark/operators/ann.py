@@ -266,40 +266,6 @@ def _lsh_buckets(
     )
 
 
-def lsh_candidate_pairs(
-    embeddings: DataFrame,
-    *,
-    n_planes: int = 8,
-    n_tables: int = 32,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing >= 1 LSH bucket —
-    the equi-join candidate generator for near-dup detection
-    (embedding_near_dups_lsh).  Never an all-pairs product."""
-    buckets = _lsh_buckets(
-        embeddings,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).localCheckpoint(eager=False)
-    g1 = buckets.alias("g1")
-    g2 = buckets.alias("g2")
-    return (
-        g1.join(
-            g2,
-            (F.col("g1.tbl") == F.col("g2.tbl"))
-            & (F.col("g1.bucket") == F.col("g2.bucket"))
-            & (F.col("g1.id") < F.col("g2.id")),
-        )
-        .select(F.col("g1.id").alias("id_a"), F.col("g2.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def lsh_bucketed_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -588,8 +554,7 @@ def mutual_nn_pairs(
     The global top-1 is then a per-id window over ~n_blocks candidate
     rows per id, exact-rescored JVM-side.  Per-task memory is
     2*block_rows*dim floats and no |A|x|B|-row intermediate is ever
-    materialized (exact mutual-NN compute is inherently quadratic; the
-    sublinear route is :func:`mutual_nn_pairs_lsh`)."""
+    materialized (exact mutual-NN compute is inherently quadratic)."""
     v = _mnn_sides(embeddings, split_label, id_col, vec_col, label_col)
     na_cnt, nb_cnt = v.agg(
         F.sum(F.col("is_a").cast("long")),
@@ -642,44 +607,4 @@ def mutual_nn_pairs(
         .applyInPandas(_block_top, schema="id_a bigint, id_b bigint")
         .distinct()
     )
-    return _mutual_from_candidates(v, cand)
-
-
-def mutual_nn_pairs_lsh(
-    embeddings: DataFrame,
-    *,
-    split_label: int = 5,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Sublinear mutual-NN: random-hyperplane LSH candidate generation
-    (same tables as :func:`lsh_bucketed_topk`) replaces the blocked
-    all-pairs scoring; candidates are A-side x B-side rows sharing a
-    (table, bucket) key, then the identical exact rescore + mutual-top-1
-    windows as :func:`mutual_nn_pairs`.  Approximate (top-1 restricted
-    to LSH candidates); recall on planted twins is pytest-proven, the
-    exact plan stays the gate.  At 100 TB the bucket join is an
-    equi-join on (tbl, bucket) — hash-partitioned, never all-pairs."""
-    v = _mnn_sides(embeddings, split_label, id_col, vec_col, label_col)
-    buckets = _lsh_buckets(
-        embeddings,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).join(
-        v.select("id", "is_a"), "id"
-    ).localCheckpoint(eager=False)
-    ga = buckets.where("is_a").select(
-        F.col("id").alias("id_a"), "tbl", "bucket"
-    )
-    gb = buckets.where(~F.col("is_a")).select(
-        F.col("id").alias("id_b"), "tbl", "bucket"
-    )
-    cand = ga.join(gb, ["tbl", "bucket"]).select("id_a", "id_b").distinct()
     return _mutual_from_candidates(v, cand)

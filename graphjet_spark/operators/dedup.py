@@ -11,9 +11,7 @@ Five families, each scale-designed (the ``documents`` table at 100 TB):
 - SimHash:     60-bit fingerprints (bitwise vote sums as JVM aggregate
                expressions), near-dup = hamming distance <= k via
                band-exact pigeonhole prefilter;
-- embedding cosine: block-GEMM candidate join + exact JVM rescore; the
-               sublinear LSH path for true near-dup thresholds is
-               embedding_near_dups_lsh (machinery in operators/ann.py).
+- embedding cosine: block-GEMM candidate join + exact JVM rescore.
 
 GraphJet precedent for the dedup discipline: explicit seen-set
 dedup before aggregation (reference: graphjet-core/src/main/java/com/
@@ -919,8 +917,7 @@ def embedding_near_dups(
        the standard blocked formulation of an all-pairs similarity join,
        with no n^2-row intermediate ever materialized.  (Low-threshold
        similarity on unstructured vectors is inherently quadratic in
-       *compute*; for true near-dup thresholds the sublinear LSH path is
-       :func:`embedding_near_dups_lsh`.)
+       *compute*.)
     2. exact rescore: candidates are re-scored with the same sequential
        float64 JVM expressions (aggregate/zip_with) as before, so output
        values are byte-identical to a naive all-pairs evaluation and
@@ -983,67 +980,6 @@ def embedding_near_dups(
     )
     va = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), norm.alias("na"))
     vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), norm.alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def embedding_near_dups_lsh(
-    embeddings: DataFrame,
-    *,
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    n_tables: int = 32,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sublinear near-dup pairs for *true* near-dup thresholds (>= ~0.8):
-    random-hyperplane LSH bucket joins generate candidates, exact float64
-    rescore keeps only round(cos, 6) >= threshold.
-
-    Collision probability per table is (1 - theta/pi)^n_planes, so at
-    cos 0.9 a pair survives >= 1 of 32 tables with prob ~1 - 2e-5 —
-    recall is pinned by a planted-duplicate pytest
-    (tests/test_training_data_ops.py).  At low thresholds this
-    degenerates (most pairs collide); use :func:`embedding_near_dups`.
-    """
-    from graphjet_spark.operators.ann import lsh_candidate_pairs
-
-    cand = lsh_candidate_pairs(
-        embeddings,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(vec_col, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    v = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-        norm.alias("nrm"),
-    )
-    va = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     dot = F.aggregate(
         F.zip_with("va", "vb", lambda x, y: x * y),
         F.lit(0.0),

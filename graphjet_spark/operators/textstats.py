@@ -856,21 +856,6 @@ def pii_scrub(
     )
 
 
-def pii_summary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """One row ``(n_docs, docs_with_pii, n_email, n_ipv4, n_phone)`` —
-    the corpus-level audit of the scrub pass."""
-    s = pii_scrub(docs, text_col=text_col)
-    any_pii = sum(F.col(f"n_{n}") for n in PII_PATTERNS) > 0
-    return s.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(any_pii.cast("int")).cast("bigint").alias("docs_with_pii"),
-        *[
-            F.sum(f"n_{n}").cast("bigint").alias(f"n_{n}")
-            for n in PII_PATTERNS
-        ],
-    )
-
-
 def source_boilerplate(
     docs: DataFrame,
     *,

@@ -17,7 +17,10 @@ accumulating Brandes dependencies
 and bc(v) = sum over sources of delta(s, v) for v != s.
 
 Scale design: identical superstep hygiene to BFS/PageRank — the links
-table is partitioned + sorted on its join key once; only narrow
+table is laid out once by
+:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.layout_edges`
+(partitioned + sorted on its join key, released when the runner exits,
+also on error), while the loop plans in the caller's session; only narrow
 (s, v, sigma/delta) state shuffles per level; sums get map-side
 combine.  The output row set is the forward-reachable set (exact, no
 float boundary); only the bc value itself is a float, rounded at the
@@ -29,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def betweenness_sampled(
@@ -42,103 +47,98 @@ def betweenness_sampled(
     """Returns ``(id, bc)`` over all vertices reached from any source
     (sources themselves included, with their own delta mass from other
     sources); directed shortest paths, hop budget ``max_depth``."""
-    partitions = spark.sparkContext.defaultParallelism
-    links = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    vertices = (
-        links.select(F.col("src").alias("id"))
-        .union(links.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    src_df = (
-        spark.createDataFrame([(int(s),) for s in sources], "s bigint")
-        .join(vertices, F.col("s") == vertices.id, "left_semi")
-    )
+    with SuperstepRunner(spark, "betweenness_sampled") as run:
+        links = run.layout_edges(
+            edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
+            "src",
+        )
+        vertices = (
+            links.select(F.col("src").alias("id"))
+            .union(links.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+        src_df = (
+            spark.createDataFrame([(int(s),) for s in sources], "s bigint")
+            .join(vertices, F.col("s") == vertices.id, "left_semi")
+        )
 
-    # ---- forward: per-level sigma --------------------------------------
-    visited = src_df.select(
-        "s", F.col("s").alias("v"), F.lit(0).alias("d"),
-        F.lit(1.0).alias("sigma"),
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    depth_reached = 0
-    for level in range(1, max_depth + 1):
-        cand = (
-            frontier.join(links, frontier.v == links.src)
-            .groupBy("s", "dst")
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("s", F.col("dst").alias("v"), "sigma")
-        )
-        new = (
-            cand.join(visited.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(level).alias("d"), "sigma")
-            .repartition(partitions, "v")
-            .localCheckpoint(eager=True)
-        )
-        if new.limit(1).count() == 0:
-            break
-        depth_reached = level
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-
-    # ---- backward: dependency accumulation, deepest level first --------
-    deltas = None  # (s, v, delta) for levels below the current one
-    for level in range(depth_reached - 1, -1, -1):
-        nodes_l = visited.where(F.col("d") == level)
-        succ = visited.where(F.col("d") == level + 1).select(
-            "s", F.col("v").alias("w"), F.col("sigma").alias("sigma_w")
-        )
-        if deltas is not None:
-            succ = succ.join(
-                deltas.select("s", F.col("v").alias("w"),
-                              F.col("delta").alias("dw")),
-                ["s", "w"],
-                "left",
-            ).select(
-                "s", "w", "sigma_w",
-                F.coalesce("dw", F.lit(0.0)).alias("dw"),
-            )
-        else:
-            succ = succ.select("s", "w", "sigma_w", F.lit(0.0).alias("dw"))
-        contrib = (
-            nodes_l.join(links, nodes_l.v == links.src)
-            .join(succ.withColumnRenamed("w", "dst"), ["s", "dst"])
-            .groupBy("s", "v")
-            .agg(
-                F.sum(
-                    F.col("sigma") / F.col("sigma_w")
-                    * (F.lit(1.0) + F.col("dw"))
-                ).alias("delta")
-            )
-        )
-        deltas = (
-            contrib if deltas is None else deltas.unionByName(contrib)
+        # ---- forward: per-level sigma ----------------------------------
+        visited = src_df.select(
+            "s", F.col("s").alias("v"), F.lit(0).alias("d"),
+            F.lit(1.0).alias("sigma"),
         ).localCheckpoint(eager=True)
+        frontier = visited
+        depth_reached = 0
+        for level in range(1, max_depth + 1):
+            cand = (
+                frontier.join(links, frontier.v == links.src)
+                .groupBy("s", "dst")
+                .agg(F.sum("sigma").alias("sigma"))
+                .select("s", F.col("dst").alias("v"), "sigma")
+            )
+            new = (
+                cand.join(visited.select("s", "v"), ["s", "v"], "left_anti")
+                .select("s", "v", F.lit(level).alias("d"), "sigma")
+                .repartition(run.p, "v")
+                .localCheckpoint(eager=True)
+            )
+            if new.limit(1).count() == 0:
+                break
+            depth_reached = level
+            visited = visited.unionByName(new).localCheckpoint(eager=True)
+            frontier = new
 
-    links.unpersist()
-    if deltas is None:
-        return visited.select(
-            "v"
-        ).distinct().select(
-            F.col("v").alias("id"), F.lit(0.0).alias("bc")
+        # ---- backward: dependency accumulation, deepest level first ----
+        deltas = None  # (s, v, delta) for levels below the current one
+        for level in range(depth_reached - 1, -1, -1):
+            nodes_l = visited.where(F.col("d") == level)
+            succ = visited.where(F.col("d") == level + 1).select(
+                "s", F.col("v").alias("w"), F.col("sigma").alias("sigma_w")
+            )
+            if deltas is not None:
+                succ = succ.join(
+                    deltas.select("s", F.col("v").alias("w"),
+                                  F.col("delta").alias("dw")),
+                    ["s", "w"],
+                    "left",
+                ).select(
+                    "s", "w", "sigma_w",
+                    F.coalesce("dw", F.lit(0.0)).alias("dw"),
+                )
+            else:
+                succ = succ.select("s", "w", "sigma_w", F.lit(0.0).alias("dw"))
+            contrib = (
+                nodes_l.join(links, nodes_l.v == links.src)
+                .join(succ.withColumnRenamed("w", "dst"), ["s", "dst"])
+                .groupBy("s", "v")
+                .agg(
+                    F.sum(
+                        F.col("sigma") / F.col("sigma_w")
+                        * (F.lit(1.0) + F.col("dw"))
+                    ).alias("delta")
+                )
+            )
+            deltas = (
+                contrib if deltas is None else deltas.unionByName(contrib)
+            ).localCheckpoint(eager=True)
+
+        if deltas is None:
+            return visited.select(
+                "v"
+            ).distinct().select(
+                F.col("v").alias("id"), F.lit(0.0).alias("bc")
+            )
+        # bc(v) = sum over sources of delta(s, v), endpoints excluded
+        bc = (
+            deltas.where(F.col("v") != F.col("s"))
+            .groupBy("v")
+            .agg(F.sum("delta").alias("b"))
         )
-    # bc(v) = sum over sources of delta(s, v), endpoints excluded
-    bc = (
-        deltas.where(F.col("v") != F.col("s"))
-        .groupBy("v")
-        .agg(F.sum("delta").alias("b"))
-    )
-    return (
-        visited.select("v").distinct()
-        .join(bc, "v", "left")
-        .select(
-            F.col("v").alias("id"),
-            F.round(F.coalesce("b", F.lit(0.0)), round_to).alias("bc"),
+        return (
+            visited.select("v").distinct()
+            .join(bc, "v", "left")
+            .select(
+                F.col("v").alias("id"),
+                F.round(F.coalesce("b", F.lit(0.0)), round_to).alias("bc"),
+            )
         )
-    )

@@ -22,8 +22,10 @@ landed in the largest SCC on the gate graph).  Then
     both sweeps is a TUBE (an IN->OUT bypass), on one a TENDRIL, on
     neither DISC.
 
-Everything is four frontier-BFS superstep loops over the same two
-(persisted, pre-partitioned) edge relations: work per round is
+Everything is four frontier-BFS superstep loops over the same two edge
+relations, laid out once by
+:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.layout_edges` and
+released when the runner exits (also on error): work per round is
 frontier-sized, new-vertex discovery only, with an early exit when a
 sweep saturates.  ``fixed_iters`` bounds each sweep's depth — both
 engines compute identical sets at any budget (saturated or not), which
@@ -40,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def _reach(
@@ -80,74 +84,60 @@ def bowtie_decomposition(
 ) -> DataFrame:
     """``(id, bowtie_class)`` over the distinct directed edge set,
     classes in {CORE, IN, OUT, TUBE, TENDRIL, DISC}."""
-    partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    rev = (
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    # deterministic pivot: max total degree, ties to the smallest id
-    deg = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    top = deg.orderBy(F.desc("deg"), F.asc("id")).first()
-    if top is None:  # empty edge table: no vertices, empty map
-        e.unpersist()
-        rev.unpersist()
-        return spark.createDataFrame([], "id bigint, bowtie_class string")
-    seed = spark.createDataFrame([(int(top["id"]),)], "id bigint")
-
-    fw = _reach(e, seed, fixed_iters)
-    bw = _reach(rev, seed, fixed_iters)
-    core = fw.join(bw, "id", "semi").localCheckpoint(eager=True)
-    ins = bw.join(core, "id", "left_anti").localCheckpoint(eager=True)
-    outs = fw.join(core, "id", "left_anti").localCheckpoint(eager=True)
-
-    # core-blocked sweeps: forward from IN, backward from OUT
-    fw_in = _reach(e, ins, fixed_iters, blocked=core)
-    bw_out = _reach(rev, outs, fixed_iters, blocked=core)
-
-    out = (
-        vertices.join(core.withColumn("c", F.lit(1)), "id", "left")
-        .join(ins.withColumn("i", F.lit(1)), "id", "left")
-        .join(outs.withColumn("o", F.lit(1)), "id", "left")
-        .join(fw_in.withColumn("fi", F.lit(1)), "id", "left")
-        .join(bw_out.withColumn("bo", F.lit(1)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("c").isNotNull(), F.lit("CORE"))
-            .when(F.col("i").isNotNull(), F.lit("IN"))
-            .when(F.col("o").isNotNull(), F.lit("OUT"))
-            .when(
-                F.col("fi").isNotNull() & F.col("bo").isNotNull(),
-                F.lit("TUBE"),
-            )
-            .when(
-                F.col("fi").isNotNull() | F.col("bo").isNotNull(),
-                F.lit("TENDRIL"),
-            )
-            .otherwise(F.lit("DISC"))
-            .alias("bowtie_class"),
+    with SuperstepRunner(spark, "bowtie_decomposition") as run:
+        e = run.layout_edges(edges.select("src", "dst").distinct(), "src")
+        rev = run.layout_edges(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), "src"
         )
-    )
-    e.unpersist()
-    rev.unpersist()
-    return out
+        vertices = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+
+        # deterministic pivot: max total degree, ties to the smallest id
+        deg = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        top = deg.orderBy(F.desc("deg"), F.asc("id")).first()
+        if top is None:  # empty edge table: no vertices, empty map
+            return spark.createDataFrame([], "id bigint, bowtie_class string")
+        seed = spark.createDataFrame([(int(top["id"]),)], "id bigint")
+
+        fw = _reach(e, seed, fixed_iters)
+        bw = _reach(rev, seed, fixed_iters)
+        core = fw.join(bw, "id", "semi").localCheckpoint(eager=True)
+        ins = bw.join(core, "id", "left_anti").localCheckpoint(eager=True)
+        outs = fw.join(core, "id", "left_anti").localCheckpoint(eager=True)
+
+        # core-blocked sweeps: forward from IN, backward from OUT
+        fw_in = _reach(e, ins, fixed_iters, blocked=core)
+        bw_out = _reach(rev, outs, fixed_iters, blocked=core)
+
+        return (
+            vertices.join(core.withColumn("c", F.lit(1)), "id", "left")
+            .join(ins.withColumn("i", F.lit(1)), "id", "left")
+            .join(outs.withColumn("o", F.lit(1)), "id", "left")
+            .join(fw_in.withColumn("fi", F.lit(1)), "id", "left")
+            .join(bw_out.withColumn("bo", F.lit(1)), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("c").isNotNull(), F.lit("CORE"))
+                .when(F.col("i").isNotNull(), F.lit("IN"))
+                .when(F.col("o").isNotNull(), F.lit("OUT"))
+                .when(
+                    F.col("fi").isNotNull() & F.col("bo").isNotNull(),
+                    F.lit("TUBE"),
+                )
+                .when(
+                    F.col("fi").isNotNull() | F.col("bo").isNotNull(),
+                    F.lit("TENDRIL"),
+                )
+                .otherwise(F.lit("DISC"))
+                .alias("bowtie_class"),
+            )
+        )

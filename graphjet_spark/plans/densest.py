@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.plans.components import symmetrize
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def densest_subgraph(
@@ -45,55 +46,49 @@ def densest_subgraph(
     ``peel_round``/``density`` are constant over the output: they ride
     along so the gate value-compares the full decision, not just the
     membership set."""
-    sym = (
-        symmetrize(edges)
-        .repartition(spark.sparkContext.defaultParallelism, "a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
-
-    cur = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    best = None  # (e, v, round, vertices_df)
-    for r in range(rounds):
-        se = (
-            sym.join(cur.withColumnRenamed("id", "a"), "a", "left_semi")
-            .join(cur.withColumnRenamed("id", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        # the round-r subgraph is the NON-ISOLATED induced vertex set:
-        # a survivor of round r-1 whose last neighbors were peeled
-        # contributes neither edges nor vertices to the density
-        deg = (
-            se.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
-        )
-        ev = deg.agg(
-            (F.sum("deg") / 2).cast("bigint").alias("e"),
-            F.count(F.lit(1)).alias("v"),
-        ).collect()[0]
-        e, v = int(ev["e"] or 0), int(ev["v"])
-        if v == 0:
-            break
-        # exact rational argmax: e/v > e_b/v_b  <=>  e*v_b > e_b*v
-        if best is None or e * best[1] > best[0] * v:
-            best = (e, v, r, deg.select(F.col("a").alias("id")))
-        # survive iff den * deg * v > num * e  (deg <= (num/den)(e/v)
-        # peels) — all BIGINT, no floats anywhere in the decision
+    with SuperstepRunner(spark, "densest_subgraph") as run:
+        sym = run.layout_edges(symmetrize(edges), "a")
         cur = (
-            deg.where(F.col("deg") * F.lit(den * v) > F.lit(num * e))
-            .select(F.col("a").alias("id"))
+            sym.select(F.col("a").alias("id"))
+            .distinct()
             .localCheckpoint(eager=True)
         )
+        best = None  # (e, v, round, vertices_df)
+        for r in range(rounds):
+            se = (
+                sym.join(cur.withColumnRenamed("id", "a"), "a", "left_semi")
+                .join(cur.withColumnRenamed("id", "b"), "b", "left_semi")
+                .localCheckpoint(eager=True)
+            )
+            # the round-r subgraph is the NON-ISOLATED induced vertex set:
+            # a survivor of round r-1 whose last neighbors were peeled
+            # contributes neither edges nor vertices to the density
+            deg = (
+                se.groupBy("a")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .localCheckpoint(eager=True)
+            )
+            ev = deg.agg(
+                (F.sum("deg") / 2).cast("bigint").alias("e"),
+                F.count(F.lit(1)).alias("v"),
+            ).collect()[0]
+            e, v = int(ev["e"] or 0), int(ev["v"])
+            if v == 0:
+                break
+            # exact rational argmax: e/v > e_b/v_b  <=>  e*v_b > e_b*v
+            if best is None or e * best[1] > best[0] * v:
+                best = (e, v, r, deg.select(F.col("a").alias("id")))
+            # survive iff den * deg * v > num * e  (deg <= (num/den)(e/v)
+            # peels) — all BIGINT, no floats anywhere in the decision
+            cur = (
+                deg.where(F.col("deg") * F.lit(den * v) > F.lit(num * e))
+                .select(F.col("a").alias("id"))
+                .localCheckpoint(eager=True)
+            )
 
-    e, v, r, verts = best
-    sym.unpersist()
-    return verts.select(
-        "id",
-        F.lit(r).cast("int").alias("peel_round"),
-        F.expr(f"ROUND(CAST({e} AS DOUBLE) / {v}, 6)").alias("density"),
-    )
+        e, v, r, verts = best
+        return verts.select(
+            "id",
+            F.lit(r).cast("int").alias("peel_round"),
+            F.expr(f"ROUND(CAST({e} AS DOUBLE) / {v}, 6)").alias("density"),
+        )

@@ -8,12 +8,14 @@ per-query predicate to a closed fixpoint).
 
 Each peel round recomputes degrees over the surviving subgraph and
 drops vertices below k; the fixpoint is the k-core.  ``k_core`` keeps
-its own loop: the symmetrized edge table is partitioned by ``a`` and
-persisted once, and the narrow survivor set is checkpointed per round,
-where adaptive execution can broadcast it into both semi-joins (on the
-superstep runner, which never broadcasts the state, ``k_core_3`` ran
-4.66 → 5.62 s warm at sf0.01).  ``coreness``
-runs on :class:`~graphjet_spark.plans.superstep.SuperstepRunner` over
+its own loop: it takes the symmetrized edge table from
+:meth:`~graphjet_spark.plans.superstep.SuperstepRunner.layout_edges`
+(partitioned and sorted by ``a``, released when the runner exits, also
+on error) but plans in the caller's session, where the narrow survivor
+set, checkpointed per round, can be broadcast into both semi-joins by
+adaptive execution (in the runner's planning session, which never
+broadcasts the state, ``k_core_3`` ran 4.66 → 5.62 s warm at sf0.01).
+``coreness`` runs on :class:`~graphjet_spark.plans.superstep.SuperstepRunner` over
 :func:`~graphjet_spark.plans.components.gather_table`: its ``(id, c)``
 state shares the hash blocks of the symmetrized edges, sorted by their
 gather key, so a round is two exchanges (the (vertex, value) histogram
@@ -40,37 +42,31 @@ def k_core(
 ) -> DataFrame:
     """Returns (id) — the vertices of the k-core: at most ``fixed_iters``
     peel rounds, stopping at the fixpoint (a round that drops nothing)."""
-    sym = (
-        symmetrize(edges)
-        .repartition(spark.sparkContext.defaultParallelism, "a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
-    survivors = sym.select(F.col("a").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
-    n_prev = survivors.count()
-
-    for _ in range(fixed_iters):
-        # degrees within the surviving subgraph: both endpoints alive
-        deg = (
-            sym.join(survivors.withColumnRenamed("id", "a"), "a", "left_semi")
-            .join(survivors.withColumnRenamed("id", "b"), "b", "left_semi")
-            .groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
+    with SuperstepRunner(spark, "k_core") as run:
+        sym = run.layout_edges(symmetrize(edges), "a")
+        survivors = sym.select(F.col("a").alias("id")).distinct().localCheckpoint(
+            eager=True
         )
-        survivors = (
-            deg.filter(F.col("deg") >= k)
-            .select(F.col("a").alias("id"))
-            .localCheckpoint(eager=True)
-        )
-        n = survivors.count()
-        if n == n_prev:
-            break
-        n_prev = n
+        n_prev = survivors.count()
 
-    sym.unpersist()
-    return survivors
+        for _ in range(fixed_iters):
+            # degrees within the surviving subgraph: both endpoints alive
+            deg = (
+                sym.join(survivors.withColumnRenamed("id", "a"), "a", "left_semi")
+                .join(survivors.withColumnRenamed("id", "b"), "b", "left_semi")
+                .groupBy("a")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            survivors = (
+                deg.filter(F.col("deg") >= k)
+                .select(F.col("a").alias("id"))
+                .localCheckpoint(eager=True)
+            )
+            n = survivors.count()
+            if n == n_prev:
+                break
+            n_prev = n
+        return survivors
 
 
 def coreness(

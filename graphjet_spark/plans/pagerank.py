@@ -253,9 +253,9 @@ def ppr_grouped(
     d = damping
     with SuperstepRunner(spark, "ppr_grouped", checkpoint=checkpoint) as run:
         links, vertices = _prepare(run, run.adopt(edges), assume_simple, None)
-        vertices = run._cache(vertices)
+        vertices = run.cache(vertices)
         dangling = vertices.where(F.col("dng")).select("id")
-        seed_df = run._cache(
+        seed_df = run.cache(
             run.child.createDataFrame([(int(s),) for s in seeds], "seed bigint")
             .join(vertices, F.col("seed") == vertices.id, "left_semi")
         )

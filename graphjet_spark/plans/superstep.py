@@ -19,10 +19,16 @@ step).  Hash-min CC, BFS and SSSP share one frontier step,
   exchange-free merge joins; the one shuffle is the message aggregation
   with its map-side partial combine (hub fan-in collapses per task).
   P is the caller's ``defaultParallelism`` (PageRank may set it).
-- **Owned cache.**  Every relation :meth:`SuperstepRunner.layout_edges`
-  persists is unpersisted on exit, after the views are dropped, also
-  when the loop raises.  The returned plan must therefore read only the
-  loop's checkpointed state, never a relation the runner cached.
+- **Owned cache.**  The runner is the only code in the engine that
+  persists a relation: every one :meth:`SuperstepRunner.layout_edges`
+  or :meth:`SuperstepRunner.cache` persists is unpersisted on exit,
+  after the views are dropped, also when the loop raises.  The returned
+  plan must therefore read only checkpointed relations, never one the
+  runner cached.  Plans that keep their own loop (k-core, densest
+  subgraph, bow-tie sweeps, betweenness, the PPR sweep cut, k-truss,
+  the walk builders) open a runner only for its layouts, its cache and
+  P: they plan in the caller's session, never ``adopt`` their edges,
+  and never call :meth:`SuperstepRunner.run`.
 - **One action per superstep.**  The action that materializes the lazy
   ``localCheckpoint`` returns the superstep's per-partition aggregates:
   the scalars the next superstep reads as literals, and its metrics
@@ -51,7 +57,9 @@ class SuperstepRunner:
     """Owns one superstep loop: the planning session, the state layout,
     the per-superstep action, commits, resume and the lifetime of the
     relations it caches.  Use as a context manager so the global temp
-    views are dropped and the cached relations released."""
+    views are dropped and the cached relations released.  A plan that
+    keeps its own loop uses only :meth:`layout_edges`, :meth:`cache`
+    and ``p``, in the caller's session."""
 
     def __init__(
         self,
@@ -86,7 +94,7 @@ class SuperstepRunner:
         for df in self._cached:
             df.unpersist()
 
-    def _cache(self, df: DataFrame) -> DataFrame:
+    def cache(self, df: DataFrame) -> DataFrame:
         """``df`` persisted until the loop exits."""
         df = df.persist()
         self._cached.append(df)
@@ -114,7 +122,7 @@ class SuperstepRunner:
         """An edge relation laid out by its gather ``key`` (the CSR
         layout): the state's P hash blocks, sorted by ``key``, cached,
         so the per-superstep merge join never shuffles or re-sorts it."""
-        return self._cache(df.repartition(self.p, key).sortWithinPartitions(key))
+        return self.cache(df.repartition(self.p, key).sortWithinPartitions(key))
 
     def materialize(self, df: DataFrame, aggs: Aggs) -> tuple[DataFrame, dict]:
         """Lazy ``localCheckpoint`` of ``df`` plus the one action that

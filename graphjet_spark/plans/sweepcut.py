@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from graphjet_spark.plans.components import symmetrize
 from graphjet_spark.plans.pagerank import pagerank
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def ppr_sweep_cut(
@@ -48,49 +49,50 @@ def ppr_sweep_cut(
     prefixes: row ``rank`` reports phi(S_rank) of the prefix ending at
     ``id``.  The community is the argmin-conductance prefix."""
     ppr = pagerank(spark, edges, fixed_iters=fixed_iters, teleport=seeds)
-    sym = symmetrize(edges).persist()
-    sdeg = sym.groupBy("a").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
-    # raw ppr > 0 is a discrete reachability fact (identical on both
-    # engines): the sweep only ranks the seed's reached neighborhood
-    scored = ppr.where(F.col("pagerank") > 0).join(
-        sdeg, ppr.id == sdeg.a
-    ).select(
-        "id",
-        F.round(F.col("pagerank") / F.col("deg"), round_to).alias("score"),
-        "deg",
-    )
-    topk = (
-        scored.orderBy(F.desc("score"), F.asc("id"))
-        .limit(k)
-        .coalesce(1)
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("score"), F.asc("id"))
-            ),
+    with SuperstepRunner(spark, "ppr_sweep_cut") as run:
+        sym = run.cache(symmetrize(edges))
+        sdeg = sym.groupBy("a").agg(
+            F.count(F.lit(1)).cast("bigint").alias("deg")
         )
-        .localCheckpoint(eager=True)  # k rows
-    )
+        # raw ppr > 0 is a discrete reachability fact (identical on both
+        # engines): the sweep only ranks the seed's reached neighborhood
+        scored = ppr.where(F.col("pagerank") > 0).join(
+            sdeg, ppr.id == sdeg.a
+        ).select(
+            "id",
+            F.round(F.col("pagerank") / F.col("deg"), round_to).alias("score"),
+            "deg",
+        )
+        topk = (
+            scored.orderBy(F.desc("score"), F.asc("id"))
+            .limit(k)
+            .coalesce(1)
+            .withColumn(
+                "rank",
+                F.row_number().over(
+                    Window.orderBy(F.desc("score"), F.asc("id"))
+                ),
+            )
+            .localCheckpoint(eager=True)  # k rows
+        )
 
-    # undirected edges with BOTH endpoints in the top-k: broadcast the
-    # k-row rank map twice; each edge becomes internal at prefix
-    # max(rank_a, rank_b)
-    ra = topk.select(F.col("id").alias("a"), F.col("rank").alias("ra"))
-    rb = topk.select(F.col("id").alias("b"), F.col("rank").alias("rb"))
-    inside = (
-        sym.where(F.col("a") < F.col("b"))
-        .join(F.broadcast(ra), "a")
-        .join(F.broadcast(rb), "b")
-        .select(F.greatest("ra", "rb").alias("mr"))
-        .groupBy("mr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_int"))
-        # materialize (<= k rows) BEFORE sym.unpersist() below — lazily
-        # it would recompute the symmetrize shuffle uncached at collect
-        .localCheckpoint(eager=True)
-    )
-    total_vol = sym.count()  # = sum of undirected degrees
+        # undirected edges with BOTH endpoints in the top-k: broadcast the
+        # k-row rank map twice; each edge becomes internal at prefix
+        # max(rank_a, rank_b)
+        ra = topk.select(F.col("id").alias("a"), F.col("rank").alias("ra"))
+        rb = topk.select(F.col("id").alias("b"), F.col("rank").alias("rb"))
+        inside = (
+            sym.where(F.col("a") < F.col("b"))
+            .join(F.broadcast(ra), "a")
+            .join(F.broadcast(rb), "b")
+            .select(F.greatest("ra", "rb").alias("mr"))
+            .groupBy("mr")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_int"))
+            # materialize (<= k rows) before the runner releases sym — lazily
+            # it would recompute the symmetrize shuffle uncached at collect
+            .localCheckpoint(eager=True)
+        )
+        total_vol = sym.count()  # = sum of undirected degrees
 
     w = Window.orderBy("rank")
     prof = (
@@ -107,7 +109,7 @@ def ppr_sweep_cut(
     )
     cut = F.col("vol") - 2 * F.col("internal")
     small = F.least(F.col("vol"), F.lit(total_vol) - F.col("vol"))
-    out = prof.select(
+    return prof.select(
         "rank",
         "id",
         "score",
@@ -115,5 +117,3 @@ def ppr_sweep_cut(
             small > 0, F.round(cut.cast("double") / small, round_to)
         ).alias("conductance"),
     )
-    sym.unpersist()
-    return out

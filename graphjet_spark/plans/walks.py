@@ -17,6 +17,11 @@ batch-corpus cousin).
 Scale: the adjacency-list table (src, nbrs) is built once (the same
 collect_list shape as adjacency_blocks) and each step is one equi-join
 of the narrow walk frontier against it; walks at sinks simply stop.
+The walk builders keep their own loops but take their cached tables
+and partition count from a
+:class:`~graphjet_spark.plans.superstep.SuperstepRunner`, which
+releases the tables when the loop ends, also on error; the corpus they
+return reads only the per-step checkpoints.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphjet_spark.functions.hashing import md5_prefix_bigint
+from graphjet_spark.plans.superstep import SuperstepRunner
 
 
 def _step_hash(walk_col: str, step: int):
@@ -35,14 +41,13 @@ def _step_hash(walk_col: str, step: int):
     return md5_prefix_bigint(s)
 
 
-def _sorted_adjacency(e: DataFrame) -> DataFrame:
-    """(src, nbrs) with ``nbrs`` the sorted out-neighbor array, persisted
-    (the caller unpersists)."""
-    return (
+def _sorted_adjacency(run: SuperstepRunner, e: DataFrame) -> DataFrame:
+    """(src, nbrs) with ``nbrs`` the sorted out-neighbor array, cached by
+    ``run`` until it exits."""
+    return run.cache(
         e.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .repartition(e.sparkSession.sparkContext.defaultParallelism, "src")
-        .persist()
+        .repartition(run.p, "src")
     )
 
 
@@ -65,20 +70,20 @@ def hash_walk_corpus(
 ) -> DataFrame:
     """(walk_id, step, vertex) — one ``length``-step walk per vertex
     with out-edges; step 0 is the start vertex, walks stop at sinks."""
-    adj = _sorted_adjacency(edges.select("src", "dst").distinct())
-    frontier = adj.select(
-        F.col("src").alias("walk_id"), F.col("src").alias("vertex")
-    ).localCheckpoint(eager=True)
-    out = [frontier.select("walk_id", F.lit(0).alias("step"), "vertex")]
+    with SuperstepRunner(spark, "hash_walk_corpus") as run:
+        adj = _sorted_adjacency(run, edges.select("src", "dst").distinct())
+        frontier = adj.select(
+            F.col("src").alias("walk_id"), F.col("src").alias("vertex")
+        ).localCheckpoint(eager=True)
+        out = [frontier.select("walk_id", F.lit(0).alias("step"), "vertex")]
 
-    for i in range(1, length + 1):
-        frontier = _hash_step(frontier, adj, i)
-        out.append(frontier.select("walk_id", F.lit(i).alias("step"), "vertex"))
+        for i in range(1, length + 1):
+            frontier = _hash_step(frontier, adj, i)
+            out.append(frontier.select("walk_id", F.lit(i).alias("step"), "vertex"))
 
     result = out[0]
     for df in out[1:]:
         result = result.unionByName(df)
-    adj.unpersist()
     return result
 
 
@@ -139,111 +144,99 @@ def node2vec_walk_corpus(
     the positioned adjacency (fan-out = out-degree), one equi-join
     against the edge set for the distance-1 mark, and two window
     functions partitioned per walk (tiny per-walk groups).  The
-    positioned adjacency and edge tables build once and persist across
-    all steps."""
+    positioned adjacency and edge tables build once and stay cached
+    across all steps."""
     from pyspark.sql import Window
 
-    partitions = spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    adjpos = (
-        e.select(
-            "src",
-            F.col("dst").alias("x"),
-            F.row_number()
-            .over(Window.partitionBy("src").orderBy("dst"))
-            .alias("pos"),
+    with SuperstepRunner(spark, "node2vec_walk_corpus") as run:
+        e = run.layout_edges(edges.select("src", "dst").distinct(), "src")
+        adjpos = run.cache(
+            e.select(
+                "src",
+                F.col("dst").alias("x"),
+                F.row_number()
+                .over(Window.partitionBy("src").orderBy("dst"))
+                .alias("pos"),
+            ).repartition(run.p, "src")
         )
-        .repartition(partitions, "src")
-        .persist()
-    )
-    deg = adjpos.groupBy("src").agg(F.max("pos").alias("d"))
-    e.count(), adjpos.count()
+        deg = adjpos.groupBy("src").agg(F.max("pos").alias("d"))
+        e.count(), adjpos.count()
 
-    starts = adjpos.select("src").distinct()
-    # step 1: first-order uniform hash over the sorted adjacency
-    f1 = (
-        starts.join(deg, "src")
-        .select(
-            F.col("src").alias("walk_id"),
-            F.col("src").alias("prev"),
-            (F.pmod(_step_hash("src", 1), F.col("d")) + 1).alias("pick"),
-        )
-        .join(
-            adjpos,
-            (F.col("prev") == adjpos.src) & (F.col("pick") == adjpos.pos),
-        )
-        .select("walk_id", "prev", F.col("x").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-    out = [
-        starts.select(
-            F.col("src").alias("walk_id"),
-            F.lit(0).alias("step"),
-            F.col("src").alias("vertex"),
-        ),
-        f1.select("walk_id", F.lit(1).alias("step"), "vertex"),
-    ]
-
-    frontier = f1  # (walk_id, prev, vertex)
-    prev_edge = e.select(
-        F.col("src").alias("p2"), F.col("dst").alias("x2")
-    )
-    ww = Window.partitionBy("walk_id")
-    wcum = Window.partitionBy("walk_id").orderBy("pos")
-    for i in range(2, length + 1):
-        cand = (
-            frontier.join(adjpos, frontier.vertex == adjpos.src)
+        starts = adjpos.select("src").distinct()
+        # step 1: first-order uniform hash over the sorted adjacency
+        f1 = (
+            starts.join(deg, "src")
+            .select(
+                F.col("src").alias("walk_id"),
+                F.col("src").alias("prev"),
+                (F.pmod(_step_hash("src", 1), F.col("d")) + 1).alias("pick"),
+            )
             .join(
-                prev_edge,
-                (F.col("prev") == F.col("p2")) & (F.col("x") == F.col("x2")),
-                "left",
+                adjpos,
+                (F.col("prev") == adjpos.src) & (F.col("pick") == adjpos.pos),
             )
-            .select(
-                "walk_id",
-                "prev",
-                F.col("vertex").alias("cur"),
-                "pos",
-                "x",
-                F.when(F.col("x") == F.col("prev"), F.lit(w_return))
-                .when(F.col("p2").isNotNull(), F.lit(w_neighbor))
-                .otherwise(F.lit(w_far))
-                .cast("bigint")
-                .alias("w"),
-            )
-        )
-        picked = (
-            cand.withColumn("tot", F.sum("w").over(ww))
-            .withColumn("cum", F.sum("w").over(wcum))
-            .where(
-                (F.col("cum") - F.col("w"))
-                <= F.pmod(_step_hash("walk_id", i), F.col("tot"))
-            )
-            .where(
-                F.pmod(_step_hash("walk_id", i), F.col("tot")) < F.col("cum")
-            )
-            .select(
-                "walk_id",
-                F.col("cur").alias("prev"),
-                F.col("x").alias("vertex"),
-            )
+            .select("walk_id", "prev", F.col("x").alias("vertex"))
             .localCheckpoint(eager=True)
         )
-        out.append(
-            picked.select("walk_id", F.lit(i).alias("step"), "vertex")
+        # every start has an out-edge, so it makes exactly one step-1 row;
+        # step 0 comes from f1, so the result reads no cached relation
+        out = [
+            f1.select("walk_id", F.lit(0).alias("step"), F.col("walk_id").alias("vertex")),
+            f1.select("walk_id", F.lit(1).alias("step"), "vertex"),
+        ]
+
+        frontier = f1  # (walk_id, prev, vertex)
+        prev_edge = e.select(
+            F.col("src").alias("p2"), F.col("dst").alias("x2")
         )
-        frontier = picked
+        ww = Window.partitionBy("walk_id")
+        wcum = Window.partitionBy("walk_id").orderBy("pos")
+        for i in range(2, length + 1):
+            cand = (
+                frontier.join(adjpos, frontier.vertex == adjpos.src)
+                .join(
+                    prev_edge,
+                    (F.col("prev") == F.col("p2")) & (F.col("x") == F.col("x2")),
+                    "left",
+                )
+                .select(
+                    "walk_id",
+                    "prev",
+                    F.col("vertex").alias("cur"),
+                    "pos",
+                    "x",
+                    F.when(F.col("x") == F.col("prev"), F.lit(w_return))
+                    .when(F.col("p2").isNotNull(), F.lit(w_neighbor))
+                    .otherwise(F.lit(w_far))
+                    .cast("bigint")
+                    .alias("w"),
+                )
+            )
+            picked = (
+                cand.withColumn("tot", F.sum("w").over(ww))
+                .withColumn("cum", F.sum("w").over(wcum))
+                .where(
+                    (F.col("cum") - F.col("w"))
+                    <= F.pmod(_step_hash("walk_id", i), F.col("tot"))
+                )
+                .where(
+                    F.pmod(_step_hash("walk_id", i), F.col("tot")) < F.col("cum")
+                )
+                .select(
+                    "walk_id",
+                    F.col("cur").alias("prev"),
+                    F.col("x").alias("vertex"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            out.append(
+                picked.select("walk_id", F.lit(i).alias("step"), "vertex")
+            )
+            frontier = picked
 
     result = out[0]
     for df in out[1:]:
         result = result.unionByName(df)
-    e.unpersist()
-    adjpos.unpersist()
     return result
 
 
@@ -267,28 +260,27 @@ def walk_sample_subgraph(
     Scale shape: the walk loop is frontier-sized supersteps over the
     once-built sorted adjacency; the induced-edge step is two
     semi-joins of the edge table against the (small) visited set."""
-    # eager checkpoint, not persist: e outlives this function inside the
-    # returned lazy plan, so a persist here would leak cached blocks
+    # eager checkpoint, not run.cache: e outlives the runner inside the
+    # returned lazy plan, which must read no relation the runner releases
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    adj = _sorted_adjacency(e)
-    seed_h = md5_prefix_bigint(
-        F.concat(F.lit("smp:"), F.col("src").cast("string"))
-    )
-    frontier = (
-        adj.where(F.pmod(seed_h, F.lit(100)) < F.lit(seed_pct))
-        .select(F.col("src").alias("walk_id"), F.col("src").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-    visited = frontier.select("vertex").distinct().localCheckpoint(eager=True)
-    for i in range(1, length + 1):
-        frontier = _hash_step(frontier, adj, i)
-        visited = (
-            visited.unionByName(frontier.select("vertex"))
-            .distinct()
+    with SuperstepRunner(spark, "walk_sample_subgraph") as run:
+        adj = _sorted_adjacency(run, e)
+        seed_h = md5_prefix_bigint(
+            F.concat(F.lit("smp:"), F.col("src").cast("string"))
+        )
+        frontier = (
+            adj.where(F.pmod(seed_h, F.lit(100)) < F.lit(seed_pct))
+            .select(F.col("src").alias("walk_id"), F.col("src").alias("vertex"))
             .localCheckpoint(eager=True)
         )
+        visited = frontier.select("vertex").distinct().localCheckpoint(eager=True)
+        for i in range(1, length + 1):
+            frontier = _hash_step(frontier, adj, i)
+            visited = (
+                visited.unionByName(frontier.select("vertex"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
     va = visited.withColumnRenamed("vertex", "src")
     vb = visited.withColumnRenamed("vertex", "dst")
-    out = e.join(va, "src", "semi").join(vb, "dst", "semi").select("src", "dst")
-    adj.unpersist()
-    return out
+    return e.join(va, "src", "semi").join(vb, "dst", "semi").select("src", "dst")

@@ -5,7 +5,8 @@ greedy coloring plans with a fixed number of shuffles (one; two for
 HITS and coreness, three for a Luby round) and no broadcast, runs as
 one Spark job, matches the numpy mirrors of tools/mirror_check.py (or
 a literal mirror), and leaves the caller's session and Spark's cache
-manager as it found them, also when the loop raises."""
+manager as it found them, also when the loop raises — as do the plans
+that keep their own loop and take their layouts from the runner."""
 
 from __future__ import annotations
 
@@ -16,15 +17,21 @@ import re
 import numpy as np
 import pytest
 from graphjet_spark.plans.anf import anf_sketch_histogram
+from graphjet_spark.plans.betweenness import betweenness_sampled
 from graphjet_spark.plans.bfs import bfs_distances_multi
+from graphjet_spark.plans.bowtie import bowtie_decomposition
 from graphjet_spark.plans.components import connected_components
+from graphjet_spark.plans.densest import densest_subgraph
 from graphjet_spark.plans.hits import hits
 from graphjet_spark.plans.katz import eigenvector_centrality, katz
-from graphjet_spark.plans.kcore import coreness
+from graphjet_spark.plans.kcore import coreness, k_core
+from graphjet_spark.plans.ktruss import k_truss
 from graphjet_spark.plans.labelprop import label_propagation
 from graphjet_spark.plans.mis import greedy_coloring, luby_mis
 from graphjet_spark.plans.pagerank import pagerank
 from graphjet_spark.plans.sssp import sssp
+from graphjet_spark.plans.sweepcut import ppr_sweep_cut
+from graphjet_spark.plans.walks import hash_walk_corpus, node2vec_walk_corpus, walk_sample_subgraph
 from graphjet_spark.plans.wl import wl_colors
 from pyspark.sql import functions as F
 
@@ -399,14 +406,37 @@ def test_stats_cost_no_job(spark, name):
         assert steps[-1]["changed"] <= steps[0]["changed"]
 
 
-def test_loop_that_raises_frees_its_cache(spark):
-    """A loop that raises after laying out its edges (personalized
-    PageRank whose only seed is no vertex) still releases them, and
-    drops its views."""
+def _raising_edges(spark):
+    """``PAIRS`` whose ``src`` raises for the one row with ``src`` 12."""
+    e = edges_df(spark, PAIRS)
+    bad = F.when(e.src == 12, F.raise_error(F.lit("planted edge error")))
+    return e.withColumn("src", bad.otherwise(e.src))
+
+
+# every plan that caches a relation, each on an input that makes it raise
+# (PageRank: personalized, whose only seed is no vertex)
+RAISING = {
+    "pagerank": lambda spark: pagerank(spark, edges_df(spark, PAIRS), teleport={999: 1.0}),
+    "k_core": lambda spark: k_core(spark, _raising_edges(spark), 2),
+    "densest_subgraph": lambda spark: densest_subgraph(spark, _raising_edges(spark)),
+    "bowtie_decomposition": lambda spark: bowtie_decomposition(spark, _raising_edges(spark)),
+    "betweenness_sampled": lambda spark: betweenness_sampled(spark, _raising_edges(spark), [0]),
+    "ppr_sweep_cut": lambda spark: ppr_sweep_cut(spark, _raising_edges(spark), {0: 1.0}),
+    "k_truss": lambda spark: k_truss(spark, _raising_edges(spark), 3),
+    "hash_walk_corpus": lambda spark: hash_walk_corpus(spark, _raising_edges(spark)),
+    "node2vec_walk_corpus": lambda spark: node2vec_walk_corpus(spark, _raising_edges(spark)),
+    "walk_sample_subgraph": lambda spark: walk_sample_subgraph(spark, _raising_edges(spark)),
+}
+
+
+@pytest.mark.parametrize("name", list(RAISING))
+def test_loop_that_raises_frees_its_cache(spark, name):
+    """A plan that raises still releases every relation it cached through
+    the runner, and drops its views."""
     views = {t.name for t in spark.catalog.listTables("global_temp")}
     cached = cached_relations(spark)
-    with pytest.raises(ValueError, match="no teleport seed"):
-        pagerank(spark, edges_df(spark, PAIRS), teleport={999: 1.0})
+    with pytest.raises(Exception, match="no teleport seed|planted edge error"):
+        RAISING[name](spark).collect()
     assert cached_relations(spark) == cached
     assert {t.name for t in spark.catalog.listTables("global_temp")} == views
 

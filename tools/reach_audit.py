@@ -53,15 +53,6 @@ ALLOW = {
     "graphjet_spark/plans/build_edges.py::extract_anchor_rows":
         "beyond reference: anchor-text channel of the link extractor "
         "(COVERAGE row); no query runs it yet",
-    "graphjet_spark/operators/textstats.py::pii_summary":
-        "beyond reference: summary twin of the reached pii_scrub "
-        "(COVERAGE 'PII scrubbing' row); no query runs it yet",
-    "graphjet_spark/operators/dedup.py::embedding_near_dups_lsh":
-        "beyond reference: sublinear twin of embedding_near_dups "
-        "(COVERAGE 'embedding near-dup' row); no query runs it yet",
-    "graphjet_spark/operators/ann.py::mutual_nn_pairs_lsh":
-        "beyond reference: sublinear twin of mutual_nn_pairs "
-        "(COVERAGE 'mutual-NN pair mining' row); no query runs it yet",
     "graphjet_spark/streaming/ingest.py::expire_segments":
         "SURVEY §2.1 S4 / §2.10 drop-oldest segment retention",
     "graphjet_spark/streaming/ingest.py::running_degrees":
